@@ -1,4 +1,5 @@
 package graft
+import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -28,14 +29,21 @@ object Bench {
     // the timed loop below measures steady-state query cost, not JVM warmup.
     val warmupDir = "/root/testdata/sf0.001"
     if (new java.io.File(warmupDir).isDirectory && warmupDir != sfDir) {
-      SparkEntry.queries.foreach { case (_, fn) =>
-        try fn(spark, warmupDir).count() catch { case _: Throwable => }
+      SparkEntry.queries.foreach { case (name, fn) =>
+        try fn(spark, warmupDir).count()
+        catch { case NonFatal(e) => System.err.println(s"[bench] warm-up $name failed: $e") }
       }
     }
     // Per-process fixtures for the measured dir (written log table, shared
     // ingest cache) are one-time construction, not per-query cost — build
     // them outside the timed loop so runs are comparable and repeatable.
-    try Queries.warmFixtures(spark, sfDir) catch { case _: Throwable => }
+    // A fixture that fails here is reported by name; the first query that
+    // needs it builds it again inside the timed loop, so a broken fixture
+    // surfaces as that query's failure or time, never as a fast query.
+    Queries.fixtureWarmers.foreach { case (name, warm) =>
+      try warm(spark, sfDir)
+      catch { case NonFatal(e) => System.err.println(s"[bench] fixture $name failed: $e") }
+    }
     // Per-query MIN over `reps` INTERLEAVED full passes: the host shows
     // intermittent multi-second stall windows (identical binaries differing
     // 10-40× on single runs). Back-to-back repeats of one query can both
@@ -61,7 +69,7 @@ object Bench {
         // NonFatal only: swallowing an OutOfMemoryError would keep timing
         // queries on a corrupted JVM and emit a plausible-looking result
         val ok = try { fn(spark, sfDir).count(); true }
-          catch { case scala.util.control.NonFatal(_) => false }
+          catch { case NonFatal(_) => false }
         val t = (System.nanoTime() - t0) / 1e9
         if (ok) {
           best(name) = math.min(best.getOrElse(name, Double.MaxValue), t)
@@ -99,7 +107,7 @@ object Bench {
     try java.nio.file.Files.write(
       java.nio.file.Paths.get("bench_result.json"),
       (jsonLine + "\n").getBytes("UTF-8"))
-    catch { case scala.util.control.NonFatal(_) => }
+    catch { case NonFatal(_) => }
     if (failed.nonEmpty)
       System.err.println(s"[bench] FAILED queries (sentinel -1): ${failed.mkString(", ")}")
     if (passFailed.exists(_ > 0) && failed.isEmpty)

@@ -16,13 +16,15 @@ import org.apache.spark.sql.types._
   *    shuffle, pruned scans, whole-stage codegen;
   *  - packGreedy is one hash-partition shuffle on the group key plus an
   *    in-partition sorted streaming pass (O(1) state per partition);
-  *  - connectedComponents is the standard iterative min-label propagation:
-  *    one shuffle join per round, rounds bounded by cluster diameter —
-  *    near-dup clusters are shallow (a dup of a dup of X is near X), so
-  *    convergence is a handful of rounds in practice, with `maxIter` as
-  *    the hard stop. connectedComponentsAuto guards the diameter
-  *    assumption: past a round budget it restarts on the alternating
-  *    large-star/small-star formulation (O(log n) rounds, SoCC'14).
+  *  - connectedComponentsAuto is the dedup clustering entry point. It
+  *    builds the canonical edge set once and counts it; at or below a
+  *    size gate (2^20 edges) it finishes in ONE union-find task, so the
+  *    number of driver-synced jobs does not depend on the graph. Above
+  *    the gate it runs min-label propagation (connectedComponents: one
+  *    shuffle join per round, rounds bounded by cluster diameter) for a
+  *    round budget, then the alternating large-star/small-star rounds
+  *    (O(log n) rounds, SoCC'14), finishing small as soon as the edge
+  *    set fits under the gate.
   */
 object TrainPipeline {
 
@@ -343,12 +345,13 @@ object TrainPipeline {
     *
     * Each round propagates labels across edges (one shuffle join + one
     * map-side-combined min aggregate) and stops when no label changed.
-    * Rounds are bounded by component diameter; near-dup components are
-    * shallow in practice. For adversarially long chains at extreme scale,
-    * the alternating large-star/small-star formulation (Kiveris et al.,
-    * "Connected Components in MapReduce and Beyond", SoCC'14) converges in
-    * O(log n) rounds with the same per-round plan shape — this
-    * implementation keeps the simpler variant and caps work at `maxIter`.
+    * Rounds are bounded by component diameter, and each driver sync
+    * (checkpoint + convergence probe) costs a fixed number of jobs however
+    * small the graph. This is the pinned label-propagation formulation:
+    * [[connectedComponentsAuto]] runs it as its first phase above the
+    * size gate. Dedup clustering goes through the auto variant, which
+    * finishes small graphs in one union-find task and falls back to
+    * [[connectedComponentsAlternating]] (O(log n) rounds) on deep ones.
     *
     * Hitting `maxIter` before the fixpoint means labels are only partially
     * propagated — a component with diameter > maxIter comes back as split
@@ -600,19 +603,39 @@ object TrainPipeline {
       edges: DataFrame, srcCol: String, dstCol: String,
       maxIter: Int = 30, requireConvergence: Boolean = false): DataFrame = {
     // LAZY setup checkpoints (see the simple variant): nodeSet and e
-    // materialize inside eCount's job below instead of paying two extra
+    // materialize inside the count's job below instead of paying two extra
     // driver-synced setup jobs (r15, §5).
-    val nodeSet = nodes.select(col(nodeCol).as("node")).distinct()
-      .localCheckpoint(false)
-    // same universe rule as the simple variant: foreign endpoints dropped;
-    // canonical big→small orientation, self-loops removed
-    var e = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
+    val nodeSet = nodeUniverse(nodes, nodeCol)
+    val e = canonicalEdges(nodeSet, edges, srcCol, dstCol)
+    alternatingRounds(nodeSet, e, e.count(), maxIter, requireConvergence,
+      smallGate = -1L)
+  }
+
+  /** The distinct node ids as column `node`, lazily checkpointed. */
+  private def nodeUniverse(nodes: DataFrame, nodeCol: String): DataFrame =
+    nodes.select(col(nodeCol).as("node")).distinct().localCheckpoint(false)
+
+  /** The universe rule every formulation shares, as a canonical edge set
+    * (u, v): edges with an endpoint outside `nodeSet` dropped, oriented
+    * big→small (u > v), self-loops and duplicates removed. Lazily
+    * checkpointed: the caller's count materializes it.
+    */
+  private def canonicalEdges(nodeSet: DataFrame, edges: DataFrame,
+      srcCol: String, dstCol: String): DataFrame =
+    edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
       .join(nodeSet.withColumnRenamed("node", "a"), Seq("a"), "left_semi")
       .join(nodeSet.withColumnRenamed("node", "b"), Seq("b"), "left_semi")
       .select(greatest(col("a"), col("b")).as("u"), least(col("a"), col("b")).as("v"))
       .where(col("u") =!= col("v")).distinct()
       .localCheckpoint(false)
 
+  /** Large-star/small-star rounds from the canonical edge set `e0` holding
+    * `count0` edges. A round whose edge count is at most `smallGate` hands
+    * its edge set to [[finishSmall]] instead of probing convergence (pass
+    * −1 to never finish small).
+    */
+  private def alternatingRounds(nodeSet: DataFrame, e0: DataFrame, count0: Long,
+      maxIter: Int, requireConvergence: Boolean, smallGate: Long): DataFrame = {
     def largeStar(cur: DataFrame): DataFrame = {
       val nbrs = cur.select(col("u").as("x"), col("v").as("y"))
         .union(cur.select(col("v").as("x"), col("u").as("y")))
@@ -640,62 +663,168 @@ object TrainPipeline {
         .distinct()
     }
 
+    var e = e0
+    var eCount = count0
+    var small = false
     var converged = false
     var iter = 0
-    var eCount = e.count()
-    while (!converged && iter < maxIter) {
+    while (!small && !converged && iter < maxIter) {
       // lazy checkpoint: the count below materializes it (see the simple
       // variant's loop for rationale)
       val next = smallStar(largeStar(e)).localCheckpoint(false)
-      // distinct sets: equal counts + empty one-sided difference = equality;
-      // the previous round's count is carried, not recomputed
       val nextCount = next.count()
-      converged = nextCount == eCount && next.exceptAll(e).isEmpty
+      // a round that fits under the gate skips the convergence probe: the
+      // union-find resolves whatever contraction is left exactly.
+      // Otherwise, distinct sets: equal counts + empty one-sided
+      // difference = equality; the previous round's count is carried, not
+      // recomputed
+      small = nextCount <= smallGate
+      converged = !small && nextCount == eCount && next.exceptAll(e).isEmpty
       e = next
       eCount = nextCount
       iter += 1
     }
-    if (!converged) {
-      val msg = s"connectedComponentsAlternating exited at maxIter=$maxIter " +
-        "before the edge-set fixpoint; components may be split."
-      if (requireConvergence) throw new ConvergenceException(msg)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(msg)
+    if (small) finishSmall(nodeSet, e)
+    else {
+      if (!converged) {
+        val msg = s"connectedComponentsAlternating exited at maxIter=$maxIter " +
+          "before the edge-set fixpoint; components may be split."
+        if (requireConvergence) throw new ConvergenceException(msg)
+        org.slf4j.LoggerFactory.getLogger(getClass).warn(msg)
+      }
+      val centers = e.groupBy("u").agg(min("v").as("cluster"))
+      nodeSet.join(centers, col("node") === col("u"), "left")
+        .select(col("node"), coalesce(col("cluster"), col("node")).as("cluster"))
     }
-    val centers = e.groupBy("u").agg(min("v").as("cluster"))
-    nodeSet.join(centers, col("node") === col("u"), "left")
-      .select(col("node"), coalesce(col("cluster"), col("node")).as("cluster"))
   }
 
-  /** Connected components with an automatic diameter guard: run min-label
-    * propagation for up to `diameterBudget` rounds — near-dup graphs are
-    * shallow in practice and the simple round is the cheaper plan (one
-    * join + one map-side-combined min vs the star rounds' multiple
-    * shuffles) — and if the fixpoint has not arrived by then, RESTART on
-    * the alternating large-star/small-star formulation, whose round count
-    * scales O(log n) with component SIZE rather than diameter (Kiveris et
-    * al., SoCC'14). The guard trades at most `diameterBudget` wasted
-    * rounds on adversarial chains for the cheaper plan on the common
-    * case, and never correctness: the alternating pass starts from the
-    * original edges, and both paths share the (node, cluster = min
-    * reachable id) contract, so the result is identical whichever path
-    * converges. This is the production entry point for dedup clustering;
-    * the two underlying variants stay public for callers that want to pin
-    * a formulation (both are oracle-checked via dedup_cluster /
+  /** Canonical-edge count at or below which [[connectedComponentsAuto]]
+    * resolves components in one union-find task. The task holds the
+    * endpoints of every edge (2 × 8 B), the sorted distinct ids (at most
+    * 2 ids per edge × 8 B) and an int parent per id (4 B): about 40 B per
+    * edge, so 2^20 edges keep one task's arrays near 40 MB, well inside
+    * an executor's heap. The gate is on rows, never on the input's scale:
+    * a graph that does not shrink under it keeps the distributed rounds.
+    */
+  private val SmallEdgeGate: Long = 1L << 20
+
+  /** Connected components with a size gate and a diameter guard. The
+    * canonical edge set (foreign endpoints dropped, big→small, no
+    * self-loops or duplicates) is built and counted once.
+    *
+    *  - At most [[SmallEdgeGate]] edges (2^20, about 40 MB of primitive
+    *    arrays in one task): the edges go to ONE reduce partition and a
+    *    union-find resolves every component there; the result stays on the
+    *    executors and is left-joined back to the node set. The number of
+    *    driver-synced jobs is then the same for every graph — no rounds,
+    *    no convergence probes (the finish-small hybrid of Kiveris et al.,
+    *    "Connected Components in MapReduce and Beyond", SoCC'14).
+    *  - Above the gate: min-label propagation for up to `diameterBudget`
+    *    rounds — near-dup graphs are shallow in practice and the simple
+    *    round is the cheaper plan — then, if the fixpoint has not arrived,
+    *    a restart on the alternating large-star/small-star rounds, whose
+    *    count scales O(log n) with component SIZE rather than diameter.
+    *    Each alternating round re-checks the gate at the edge count it
+    *    already takes, and finishes small once the edge set fits.
+    *
+    * Every path returns the same (node, cluster = minimum reachable id)
+    * rows: the union-find roots each component at its minimum id, so the
+    * result does not depend on edge order or task retries. The small path
+    * covers integral id types (the ones every caller passes); other id
+    * types always take the distributed rounds. `maxIter` and
+    * `requireConvergence` apply to the alternating rounds; the small path
+    * is exact and always converges. This is the production entry point for
+    * dedup clustering; the two distributed variants stay public for
+    * callers that pin a formulation (oracle rows dedup_cluster and
     * dedup_cluster_altcc).
     */
   def connectedComponentsAuto(nodes: DataFrame, nodeCol: String,
       edges: DataFrame, srcCol: String, dstCol: String,
       diameterBudget: Int = 8, maxIter: Int = 30,
       requireConvergence: Boolean = false): DataFrame =
-    try connectedComponents(nodes, nodeCol, edges, srcCol, dstCol,
+    connectedComponentsGated(nodes, nodeCol, edges, srcCol, dstCol,
+      diameterBudget, maxIter, requireConvergence, SmallEdgeGate)
+
+  /** [[connectedComponentsAuto]] with the size gate as an argument, so
+    * specs can force the distributed rounds (0) or a gate that only a
+    * contracted round fits under.
+    */
+  private[graft] def connectedComponentsGated(nodes: DataFrame, nodeCol: String,
+      edges: DataFrame, srcCol: String, dstCol: String,
+      diameterBudget: Int, maxIter: Int, requireConvergence: Boolean,
+      smallGate: Long): DataFrame = {
+    val nodeSet = nodeUniverse(nodes, nodeCol)
+    val e = canonicalEdges(nodeSet, edges, srcCol, dstCol)
+    val gate = nodeSet.schema("node").dataType match {
+      case ByteType | ShortType | IntegerType | LongType => smallGate
+      case _ => -1L
+    }
+    val eCount = e.count()
+    if (eCount <= gate) finishSmall(nodeSet, e)
+    else try connectedComponents(nodeSet, "node", e, "u", "v",
       maxIter = diameterBudget, requireConvergence = true)
     catch {
-      case e: ConvergenceException =>
+      case ex: ConvergenceException =>
         org.slf4j.LoggerFactory.getLogger(getClass).warn(
           s"diameter guard tripped after $diameterBudget label-propagation " +
             s"rounds; switching to the alternating O(log n) formulation: " +
-            e.getMessage)
-        connectedComponentsAlternating(nodes, nodeCol, edges, srcCol, dstCol,
-          maxIter, requireConvergence)
+            ex.getMessage)
+        alternatingRounds(nodeSet, e, eCount, maxIter, requireConvergence, gate)
     }
+  }
+
+  /** Components of the canonical edge set `e` (integral u, v) resolved by
+    * one union-find in a single reduce partition, left-joined back to
+    * `nodeSet` so nodes without edges keep their own id. The roots never
+    * reach the driver.
+    */
+  private def finishSmall(nodeSet: DataFrame, e: DataFrame): DataFrame = {
+    val idType = nodeSet.schema("node").dataType
+    val pair = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
+    val roots = e.select(col("u").cast(LongType), col("v").cast(LongType)).as(pair)
+      .repartition(1)
+      .mapPartitions(unionFindMinRoots)(pair)
+      .toDF("node", "root")
+      .select(col("node").cast(idType).as("node"), col("root").cast(idType).as("root"))
+    nodeSet.join(roots, Seq("node"), "left")
+      .select(col("node"), coalesce(col("root"), col("node")).as("cluster"))
+  }
+
+  /** Union-find over one partition's edges on primitive arrays: ids are
+    * sorted and deduplicated, so an id's index orders like the id, and
+    * linking the larger root under the smaller makes every root its
+    * component's minimum id whatever the edge order. Emits (id, root) for
+    * every id that appears in an edge.
+    */
+  private def unionFindMinRoots(edges: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    val us = new scala.collection.mutable.ArrayBuilder.ofLong
+    val vs = new scala.collection.mutable.ArrayBuilder.ofLong
+    edges.foreach { case (u, v) => us += u; vs += v }
+    val a = us.result()
+    val b = vs.result()
+    val all = new Array[Long](a.length + b.length)
+    System.arraycopy(a, 0, all, 0, a.length)
+    System.arraycopy(b, 0, all, a.length, b.length)
+    java.util.Arrays.sort(all)
+    var n = 0
+    var i = 0
+    while (i < all.length) {
+      if (n == 0 || all(i) != all(n - 1)) { all(n) = all(i); n += 1 }
+      i += 1
+    }
+    val parent = Array.tabulate(n)(identity)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    i = 0
+    while (i < a.length) {
+      val ra = find(java.util.Arrays.binarySearch(all, 0, n, a(i)))
+      val rb = find(java.util.Arrays.binarySearch(all, 0, n, b(i)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      i += 1
+    }
+    Iterator.range(0, n).map(k => (all(k), all(find(k))))
+  }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.TrainPipeline
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class TrainPipelineSpec extends SparkTestBase {
@@ -307,13 +308,17 @@ class TrainPipelineSpec extends SparkTestBase {
 
   test("connectedComponentsAuto: shallow graph stays on label propagation; deep chain trips the guard and still converges") {
     import spark.implicits._
+    // gate 0 forces the distributed rounds, which these graphs would
+    // otherwise skip: the union-find finishes anything under 2^20 edges
+    def auto(nodes: DataFrame, edges: DataFrame, diameterBudget: Int = 8,
+        maxIter: Int = 30): Seq[(Long, Long)] =
+      TrainPipeline.connectedComponentsGated(nodes, "n", edges, "s", "d",
+          diameterBudget, maxIter, requireConvergence = true, smallGate = 0L)
+        .orderBy("node").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     // shallow: diameter 3, budget 8 — the simple path converges in-budget
     val nodesS = (1L to 8L).toDF("n")
     val edgesS = Seq((1L, 2L), (2L, 3L), (3L, 4L), (6L, 7L)).toDF("s", "d")
-    val shallow = TrainPipeline.connectedComponentsAuto(nodesS, "n",
-        edgesS, "s", "d", requireConvergence = true)
-      .orderBy("node").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(shallow == Seq(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
+    assert(auto(nodesS, edgesS) == Seq(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       5L -> 5L, 6L -> 6L, 7L -> 6L, 8L -> 8L))
 
     // deep: permuted diameter-100 chain with budget 4 — label propagation
@@ -323,19 +328,127 @@ class TrainPipelineSpec extends SparkTestBase {
     def p(i: Long): Long = (i * 37L) % 101L
     val nodesD = ((0L to 100L).map(p) ++ Seq(300L)).toDF("n")
     val edgesD = (0L until 100L).map(i => (p(i), p(i + 1))).toDF("s", "d")
-    val deep = TrainPipeline.connectedComponentsAuto(nodesD, "n", edgesD, "s", "d",
-        diameterBudget = 4, maxIter = 15, requireConvergence = true)
-      .orderBy("node").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val deep = auto(nodesD, edgesD, diameterBudget = 4, maxIter = 15)
     assert(deep.filter(_._1 <= 100L).forall(_._2 == 0L), "chain labels its min (0)")
     assert(deep.toMap.apply(300L) == 300L)
 
     // strict mode still surfaces a genuine non-convergence: budget 1 AND
     // alternating maxIter 1 on the deep chain leaves no converging path
     val ex = intercept[IllegalStateException] {
-      TrainPipeline.connectedComponentsAuto(nodesD, "n", edgesD, "s", "d",
-        diameterBudget = 1, maxIter = 1, requireConvergence = true)
+      auto(nodesD, edgesD, diameterBudget = 1, maxIter = 1)
     }
     assert(ex.getMessage.contains("maxIter=1"))
+  }
+
+  test("connectedComponentsAuto: the alternating fallback finishes small once a round fits under the gate") {
+    import spark.implicits._
+    // a permuted diameter-100 chain (100 edges) next to a 15-clique (105
+    // edges): 205 canonical edges start above a gate of 150, label
+    // propagation cannot cover the chain in 2 rounds, and the first
+    // alternating round contracts the clique to a 14-edge star (114 edges)
+    def p(i: Long): Long = (i * 37L) % 101L
+    val nodes = ((0L to 100L).map(p) ++ (200L until 215L)).toDF("n")
+    val edges = ((0L until 100L).map(i => (p(i), p(i + 1))) ++
+      (for (a <- 200L until 215L; b <- a + 1 until 215L) yield (a, b))).toDF("s", "d")
+    def gated(gate: Long): DataFrame =
+      TrainPipeline.connectedComponentsGated(nodes, "n", edges, "s", "d",
+        diameterBudget = 2, maxIter = 1, requireConvergence = true, smallGate = gate)
+    // one alternating round cannot contract a diameter-100 chain, so
+    // without the gate the strict run fails...
+    intercept[IllegalStateException](gated(0L).collect())
+    // ...and with it the union-find finishes the round's edge set exactly
+    val got = gated(150L).collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    assert(got.size == 116)
+    assert(got.forall { case (n, c) => c == (if (n >= 200L) 200L else 0L) }, got)
+  }
+
+  /** Node → minimum reachable id, by a plain union-find on the driver;
+    * edges with an endpoint outside `nodes` are ignored.
+    */
+  private def closure(nodes: Seq[Long], edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map(nodes.map(n => n -> n): _*)
+    def find(x: Long): Long =
+      if (parent(x) == x) x else { val r = find(parent(x)); parent(x) = r; r }
+    edges.foreach { case (a, b) =>
+      if (parent.contains(a) && parent.contains(b)) {
+        val (ra, rb) = (find(a), find(b))
+        parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+    }
+    nodes.map(n => n -> find(n)).toMap
+  }
+
+  test("connectedComponentsAuto: the union-find path equals both distributed formulations and a driver-side closure") {
+    import spark.implicits._
+    def p(i: Long): Long = (i * 37L) % 101L
+    val chain = (0L until 100L).map(i => (p(i), p(i + 1)))
+    // duplicate, reversed and self-loop edges; 300/301 isolated (300 only
+    // through a self-loop); foreign endpoints 996-999
+    val messy = Seq((200L, 201L), (201L, 200L), (200L, 201L), (201L, 202L),
+      (202L, 202L), (300L, 300L))
+    val foreign = Seq((5L, 999L), (998L, 997L), (200L, 996L))
+    val ids = (0L to 100L) ++ Seq(200L, 201L, 202L, 300L, 301L)
+    val pairs = chain ++ messy ++ foreign
+    val want = closure(ids, pairs)
+    val nodes = ids.toDF("n")
+    val edges = pairs.toDF("s", "d")
+    def longs(df: DataFrame): Map[Long, Long] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    // budget 1 and maxIter 1 cannot converge on the chain by rounds: only
+    // the union-find can answer this strict call
+    val small = longs(TrainPipeline.connectedComponentsAuto(nodes, "n", edges, "s", "d",
+      diameterBudget = 1, maxIter = 1, requireConvergence = true))
+    assert(small == want)
+    assert(longs(TrainPipeline.connectedComponents(nodes, "n", edges, "s", "d",
+      maxIter = 150, requireConvergence = true)) == want)
+    assert(longs(TrainPipeline.connectedComponentsAlternating(nodes, "n", edges, "s", "d",
+      requireConvergence = true)) == want)
+
+    // Int ids take the same path and keep their type
+    val ints = TrainPipeline.connectedComponentsAuto(ids.map(_.toInt).toDF("n"), "n",
+      pairs.map { case (a, b) => (a.toInt, b.toInt) }.toDF("s", "d"), "s", "d",
+      diameterBudget = 1, maxIter = 1, requireConvergence = true)
+    assert(ints.schema.map(_.dataType) ==
+      Seq(org.apache.spark.sql.types.IntegerType, org.apache.spark.sql.types.IntegerType))
+    assert(ints.collect().map(r => (r.getInt(0).toLong, r.getInt(1).toLong)).toMap == want)
+  }
+
+  test("connectedComponentsAuto: the union-find path runs the same number of jobs for a diameter-10 and a diameter-1000 chain") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val tag = "graft.spec.ccJobs"
+    val jobs = scala.collection.mutable.Map.empty[String, Int]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(ps => Option(ps.getProperty(tag))).foreach { t =>
+          jobs.synchronized { jobs(t) = jobs.getOrElse(t, 0) + 1 }
+        }
+    }
+    def run(diameter: Int): Unit = {
+      // ids permuted along the chain (gcd(37, diameter + 1) = 1)
+      def p(i: Long): Long = (i * 37L) % (diameter + 1L)
+      val nodes = (0L to diameter.toLong).map(p).toDF("n")
+      val edges = (0L until diameter.toLong).map(i => (p(i), p(i + 1))).toDF("s", "d")
+      sc.setLocalProperty(tag, s"d$diameter")
+      val got = TrainPipeline.connectedComponentsAuto(nodes, "n", edges, "s", "d",
+        requireConvergence = true).collect()
+      assert(got.length == diameter + 1 && got.forall(_.getLong(1) == 0L))
+    }
+    sc.addSparkListener(listener)
+    try {
+      run(10)
+      run(1000)
+      // one listener sees events in order: once the flush job arrives,
+      // every job of both runs has been counted
+      sc.setLocalProperty(tag, "flush")
+      spark.range(1).count()
+      eventually()(jobs.synchronized(jobs.contains("flush")))
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
+    }
+    val (short, long) = jobs.synchronized((jobs("d10"), jobs("d1000")))
+    assert(short == long, s"jobs: diameter 10 → $short, diameter 1000 → $long")
   }
 
   test("sampleUniformN: exact size, partitioning-invariant, TakeOrdered plan (no sort shuffle)") {
