@@ -1,28 +1,9 @@
 package graft
 import scala.util.control.NonFatal
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // The whole-stage-codegen compiled-class cache defaults to 100
-      // entries; this registry generates ~1,400 distinct codegen units, so
-      // at the default every "warm" pass Janino-recompiles ~1,280 of them
-      // (measured r14: 52-62 s/pass thrashing vs 33 s/pass with 0
-      // recompiles once sized to hold the working set). Scale-neutral: the
-      // same per-JVM cache backs every executor, and a workload with this
-      // many distinct operators thrashes it on any cluster. Env-tunable to
-      // keep the knob visible; memory cost is tens of MB of classes.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
     // stderr only — stdout is reserved for the single JSON result line
     System.err.println(BuildInfo.describe)
     // Warmup pass on the smallest SF: pays JIT/codegen/classloading once so
@@ -37,13 +18,10 @@ object Bench {
     // Per-process fixtures for the measured dir (written log table, shared
     // ingest cache) are one-time construction, not per-query cost — build
     // them outside the timed loop so runs are comparable and repeatable.
-    // A fixture that fails here is reported by name; the first query that
-    // needs it builds it again inside the timed loop, so a broken fixture
-    // surfaces as that query's failure or time, never as a fast query.
-    Queries.fixtureWarmers.foreach { case (name, warm) =>
-      try warm(spark, sfDir)
-      catch { case NonFatal(e) => System.err.println(s"[bench] fixture $name failed: $e") }
-    }
+    // The first query that needs a fixture that failed here builds it again
+    // inside the timed loop, so a broken fixture surfaces as that query's
+    // failure or time, never as a fast query.
+    Queries.warmFixtures(spark, sfDir)
     // Per-query MIN over `reps` INTERLEAVED full passes: the host shows
     // intermittent multi-second stall windows (identical binaries differing
     // 10-40× on single runs). Back-to-back repeats of one query can both

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** One-off generator for the stored binary-media corpus
   * ([[graft.sources.MediaTable]]) into an EXISTING testdata dir:
   * `MediaGen <documentsParquet> <mediaOut>` — what [[ScaleGen]] now does
@@ -12,14 +10,7 @@ object MediaGen {
   def main(args: Array[String]): Unit = {
     val docs = args(0)
     val out = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
     graft.sources.MediaTable.write(spark.read.parquet(docs), out)
     val n = spark.read.parquet(out).count()
     System.err.println(s"[mediagen] $out: $n rows")

@@ -9,6 +9,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.util.control.NonFatal
 
 /** The operator registry: one entry per SURVEY.md §2 operator key, each a
   * Spark query builder plus (where SQL-expressible) the DuckDB oracle SQL
@@ -800,9 +801,15 @@ object Queries {
     ("zorderedIndexedEvents", (s, dir) => Fixtures.zorderedIndexedEventsDir(s, dir)),
     ("mediaTable", (s, dir) => Fixtures.mediaTableDir(s, dir)))
 
-  /** Build every fixture in [[fixtureWarmers]] for `dir`. */
+  /** Build every fixture in [[fixtureWarmers]] for `dir`. A fixture that
+    * fails is named on stderr and skipped; fixtures build lazily, so the
+    * first query that needs it builds it again and fails on its own.
+    */
   def warmFixtures(s: SparkSession, dir: String): Unit =
-    fixtureWarmers.foreach { case (_, warm) => warm(s, dir) }
+    fixtureWarmers.foreach { case (name, warm) =>
+      try warm(s, dir)
+      catch { case NonFatal(e) => System.err.println(s"[fixtures] $name failed: $e") }
+    }
 
   // ------------------------------------------------------------------
   // §2.1 scans / sources
@@ -2497,7 +2504,7 @@ object Queries {
     * neighbor ≈ 0.45–0.49 — no planted near-dup clusters), where IVF
     * recall ≈ 4–5× the scanned fraction and cannot beat the scan
     * fraction asymptotically. Measured on the full 128-query batch
-    * (graft.ProbeAnnRecall): 0.66 / 0.60 / 0.53 at sf0.001/0.01/0.1 —
+    * (graft.ProbeAnnRecall@4f2207e): 0.66 / 0.60 / 0.53 at sf0.001/0.01/0.1 —
     * the earlier "recall rises with scale" reading was 10-query sample
     * noise; what actually holds is recall ≈ 4–5× the ~12.5% scan
     * fraction at every rung, and 0.3 clears each with ≥ 1.7× margin.

@@ -43,12 +43,6 @@ object TextFunctions {
       greatest(size(toks).cast(DoubleType), lit(1.0))
   }
 
-  def meanTokenLength(text: Column): Column = {
-    val toks = tokens(text)
-    aggregate(toks, lit(0L), (acc, t) => acc + length(t)).cast(DoubleType) /
-      greatest(size(toks).cast(DoubleType), lit(1.0))
-  }
-
   /** Composite document quality score in [0,1]: rewards mid-length docs,
     * moderate punctuation, and a natural-language stopword rate. The exact
     * formula is arbitrary but deterministic and SQL-mirrorable (oracle).
@@ -79,16 +73,6 @@ object TextFunctions {
       .otherwise(array_min(transform(
         sequence(lit(1), length(text) - (window - 1)),
         i => md5(text.substr(i, lit(window))))))
-
-  /** Polynomial rolling hash of the whole document (base-31 mod 2^61-1
-    * style but in long arithmetic with natural overflow) — the classic
-    * Rabin-Karp document hash, as a pure expression.
-    */
-  def rollingHash(text: Column): Column =
-    aggregate(
-      transform(split(text, ""), ch => ascii(ch).cast(LongType)),
-      lit(0L),
-      (acc, c) => acc * lit(31L) + c)
 
   /** Stopword profiles for the language-ID heuristic. Function words are
     * the highest-frequency, most language-distinctive tokens, so a tiny

@@ -33,7 +33,7 @@ import org.apache.spark.sql.functions._
   * bloom-negative rows is a no-op on the result. `left_outer`/`left_anti`
   * must EMIT unmatched probe rows and are rejected.
   *
-  * Boundary vs the optimizer's own injection (measured, ProbeRuntimeFilter
+  * Boundary vs the optimizer's own injection (measured, ProbeRuntimeFilter@4f2207e
   * on the lineitem⋈σ(part) shape): InjectRuntimeFilter fires only when the
   * probe scan exceeds `runtime.bloomFilter.applicationSideScanSizeThreshold`
   * (10 GB default — so it DOES cover plain shuffle joins at warehouse

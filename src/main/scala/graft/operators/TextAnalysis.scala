@@ -36,16 +36,6 @@ object TextAnalysis {
           .as("tfidf"))
   }
 
-  /** Per-term corpus statistics: df, total tf, mean tf per doc. */
-  def termStats(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.expressions.GraftFunctions.registerAll(docs.sparkSession)
-    val toks = docs.select(col(idCol).as("doc"),
-      explode(TF.tokens(col(textCol))).as("term"))
-    toks.groupBy("term").agg(
-      countDistinct(col("doc")).as("df"),
-      count(lit(1)).as("total_tf"))
-  }
-
   /** Repetition quality signals per document (the Gopher-rules family):
     * `word_rep` = 1 − distinct/total words (how much of the doc is
     * repeated vocabulary) and `top2` = the most frequent word 2-gram's

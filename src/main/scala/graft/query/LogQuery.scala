@@ -654,17 +654,6 @@ object LogQuery {
     }
   }
 
-  /** The production aggregation-tab call: rollup when routable. */
-  def aggregateRouted(
-      raw: DataFrame,
-      rollup: DataFrame,
-      query: String,
-      groupField: String,
-      op: String,
-      metricField: Option[String] = None): DataFrame =
-    aggregateFromRollup(rollup, query, groupField, op, metricField)
-      .getOrElse(aggregate(raw, query, groupField, op, metricField))
-
   /** [[series]] (count metric) from the rollup: answerable under the same
     * conditions as [[volumeFromRollup]] plus the split field itself being
     * a rollup dimension — "volume by namespace", the most-rendered chart

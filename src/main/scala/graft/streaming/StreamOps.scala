@@ -38,17 +38,6 @@ object StreamOps {
       .groupBy(window(col("timestamp"), window_) +: groupCols.map(col): _*)
       .agg(count(lit(1)).as("cnt"))
 
-  /** Sliding-window counts. */
-  def slidingCounts(
-      logStream: DataFrame,
-      window_ : String = "10 minutes",
-      slide: String = "5 minutes",
-      watermark: String = "10 minutes"): DataFrame =
-    logStream
-      .withWatermark("timestamp", watermark)
-      .groupBy(window(col("timestamp"), window_, slide))
-      .agg(count(lit(1)).as("cnt"))
-
   /** Session windows per metadata key (30 min gap default). */
   def sessionCounts(
       logStream: DataFrame,

@@ -1,5 +1,6 @@
 package graft
 
+import graft.Tools.countExchanges
 import graft.operators.TrainPipeline
 import org.apache.spark.sql.functions._
 
@@ -12,12 +13,6 @@ class PlanAuditSpec extends SparkTestBase {
 
   private def executed(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
-
-  // count SHUFFLE exchanges only — BroadcastExchange/ReusedExchange nodes
-  // are not data-movement regressions and must not trip the exact counts
-  private def countExchanges(plan: String): Int =
-    ("Exchange (hash|range)partitioning|Exchange SinglePartition|" +
-      "Exchange RoundRobinPartitioning").r.findAllIn(plan).size
 
   test("text_chunk: pruned two-column scan, no shuffle before the presentation sort") {
     val df = TrainPipeline.chunk(
@@ -132,12 +127,13 @@ class PlanAuditSpec extends SparkTestBase {
     // The seven shape tests above pin hand-picked invariants; this pins the
     // WHOLE registry, so any refactor that adds an exchange anywhere fails
     // CI rather than only surfacing as a bench regression. The snapshot is
-    // generated by graft.ProbePlanShape (see its scaladoc) — regenerate and
-    // review the diff when a plan change is intentional.
+    // generated by `tools/run.sh graft.Tools plan-shape /root/testdata/sf0.01`
+    // (see Tools.planShape) — regenerate and review the diff when a plan
+    // change is intentional.
     val dir = sf("sf0.01")
     val in = getClass.getResourceAsStream("/exchange_counts.tsv")
     assert(in != null, "missing src/test/resources/exchange_counts.tsv — " +
-      "generate with tools/run.sh graft.ProbePlanShape")
+      "generate with tools/run.sh graft.Tools plan-shape /root/testdata/sf0.01")
     val recorded = {
       val src = scala.io.Source.fromInputStream(in, "UTF-8")
       try src.getLines().filter(_.nonEmpty).map { l =>
@@ -154,7 +150,7 @@ class PlanAuditSpec extends SparkTestBase {
     assert(diff.isEmpty,
       s"exchange-count drift in ${diff.size} queries:\n" + diff.mkString("\n") +
         "\nIf intentional, regenerate the snapshot:\n" +
-        "  tools/run.sh graft.ProbePlanShape /root/testdata/sf0.01 " +
+        "  tools/run.sh graft.Tools plan-shape /root/testdata/sf0.01 " +
         "> src/test/resources/exchange_counts.tsv")
   }
 

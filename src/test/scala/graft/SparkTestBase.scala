@@ -1,10 +1,9 @@
 package graft
 
-import graft.expressions.GraftFunctions
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session for suites: one JVM-wide SparkSession (local[4], UTC). */
+/** Shared session for suites: one JVM-wide factory session on 4 cores. */
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.session
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
@@ -49,15 +48,6 @@ object SparkTestBase {
     // repo root under sbt — unless told otherwise
     System.setProperty("derby.stream.error.file",
       sys.props.getOrElse("java.io.tmpdir", "/tmp") + "/graft-derby.log")
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    GraftFunctions.registerAll(s)
-    s
+    GraftSession.create(cores = 4)
   }
 }

@@ -3,7 +3,7 @@
 JSON against the prior clean recording; for every shared key that drifted
 >1.2x (and by more than an absolute floor, so sub-100ms noise never
 queues a probe), check git provenance since the prior recording's commit
-and run graft.ProbeHostBand min-of-20 on the drifted keys. Emit a
+and run `graft.Tools host-band` min-of-20 on the drifted keys. Emit a
 markdown verdict table (stdout) ready to append to BASELINE.md — the
 r12/r13 host-vs-code adjudication, mechanical instead of argumentative.
 
@@ -47,9 +47,9 @@ def main():
           f"{prior_ref[:9]}: "
           + ("diff-identical (src/main/scala unchanged)" if not changed
              else f"{len(changed)} file(s) changed: {', '.join(changed)}")
-          + f". Running ProbeHostBand min-of-{reps}.\n")
+          + f". Running host-band min-of-{reps}.\n")
     probe = subprocess.run(
-        ["tools/run.sh", "graft.ProbeHostBand", sfdir, reps, *keys],
+        ["tools/run.sh", "graft.Tools", "host-band", sfdir, reps, *keys],
         capture_output=True, text=True).stdout
     mins = {}
     for line in probe.splitlines():

@@ -2,7 +2,7 @@
 # Round-close bench with automatic drift adjudication (VERDICT r13 #6):
 # run graft.Bench at a scale dir, then band_adjudicate.py compares the
 # result against the prior clean recording — any shared key >1.2x slower
-# gets git provenance + a ProbeHostBand min-of-20 — and the verdict table
+# gets git provenance + a `graft.Tools host-band` min-of-20 — and the verdict table
 # is APPENDED to BASELINE.md, so the close carries the host-vs-code
 # adjudication without prose argument.
 #
