@@ -40,10 +40,24 @@ object Tools {
 
   /** SHUFFLE exchanges in a physical plan string. Broadcast and reused
     * exchanges are not data-movement regressions, so they do not count.
+    * An adaptive plan that has run (a materialized cached frame inside the
+    * plan) prints its initial plan under its final one; that subtree is
+    * skipped, so each exchange counts once whether or not the cache has
+    * been materialized.
     */
-  def countExchanges(plan: String): Int =
+  def countExchanges(plan: String): Int = {
+    var initialPlan: Option[String] = None // tree prefix of the skipped subtree
+    val counted = plan.linesIterator.filter { line =>
+      if (initialPlan.exists(line.startsWith)) false
+      else {
+        val i = line.indexOf("+- == Initial Plan ==")
+        initialPlan = if (i >= 0) Some(line.take(i) + "   ") else None
+        i < 0
+      }
+    }
     ("Exchange (hash|range)partitioning|Exchange SinglePartition|" +
-      "Exchange RoundRobinPartitioning").r.findAllIn(plan).size
+      "Exchange RoundRobinPartitioning").r.findAllIn(counted.mkString("\n")).size
+  }
 
   /** The shuffle-exchange count of every registry query's physical plan as
     * TSV: the generator for `src/test/resources/exchange_counts.tsv`, which
@@ -63,7 +77,7 @@ object Tools {
     */
   def dumpPlans(spark: SparkSession, sfDir: String, outDir: String,
       suffix: String, names: Seq[String]): Unit = {
-    Queries.warmFixtures(spark, sfDir)
+    Fixtures.warm(spark, sfDir)
     new java.io.File(outDir).mkdirs()
     names.foreach { n =>
       val plan = Queries.registry(n).build(spark, sfDir)
@@ -123,7 +137,7 @@ object Tools {
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
         if (t.taskInfo != null) taskMs += t.taskInfo.duration
     })
-    Queries.warmFixtures(spark, sfDir)
+    Fixtures.warm(spark, sfDir)
     val queries = if (names.nonEmpty) names else Queries.registry.keys.toSeq.sorted
     queries.foreach { n =>
       val fn = Queries.registry(n).build
@@ -160,7 +174,9 @@ object Tools {
     * driver transfer stays flat as N grows 10×. `--decide N...` times the
     * decide step alone (driver Seq path vs distributed Df path) on a
     * synthetic sidecar of N files, where writing N parquet files would
-    * measure the filesystem, not the operator.
+    * measure the filesystem, not the operator. Every table is written
+    * under the session's temp root ([[Fixtures.tempDir]]), which is
+    * deleted when the run's session stops.
     */
   def sidecarCold(spark: SparkSession, args: Seq[String]): Unit = {
     import graft.model.{SidecarIndex, ZoneMapIndex}
@@ -173,7 +189,7 @@ object Tools {
       else Seq(1000, 10000)
 
     for (n <- sizes) {
-      val dir = java.nio.file.Files.createTempDirectory(s"sidecar-cold-$n").toString
+      val dir = Fixtures.tempDir(spark, s"sidecar-cold-$n")
       // n files, file i spanning x in [100i, 100(i+1)) — tight spans, the
       // layout zone maps exist for; ~20 rows per file keeps the build fast
       spark.range(n.toLong * 20)
@@ -220,7 +236,7 @@ object Tools {
     // candidate-bounded collect, liveDf held persisted the way a streaming
     // sink holds its hot listing).
     for (n <- decideSizes) {
-      val dir = java.nio.file.Files.createTempDirectory(s"sidecar-decide-$n").toString
+      val dir = Fixtures.tempDir(spark, s"sidecar-decide-$n")
       def fileName = concat(lit(s"$dir/part-"), format_string("%08d", col("id")),
         lit(".parquet")).as("file")
       spark.range(n.toLong).select(

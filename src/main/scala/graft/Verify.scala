@@ -28,10 +28,7 @@ object Verify {
         // a reused outDir must NOT keep the previous run's dump for a now-
         // failing query — the compare would read stale data and report the
         // regression as green
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(new java.io.File(s"$outDir/$name"))
+        Fixtures.deleteRecursively(new java.io.File(s"$outDir/$name"))
       }
     }
     // deletion alone would let the failure vanish from a dump-enumerating

@@ -27,30 +27,17 @@ object Tables {
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings")
 
-  // Session-scoped reader cache: `spark.read.parquet` costs a file listing
-  // plus footer schema inference PER CALL (~tens of ms warm), and the
-  // query registry re-reads the same immutable tables on every build —
-  // hundreds of times across a bench run. A DataFrame is an immutable
-  // logical plan, safe to share across queries of one session. Entries of
-  // stopped sessions are evicted on access (same rationale as
-  // Queries.Fixtures.sessionScoped: value→key back-references rule out a
-  // WeakHashMap). Staleness contract: a cached table pins the file listing
-  // it was resolved with — correct for immutable datasets (the loader's
-  // purpose); call [[invalidate]] after appending files to a cached dir.
-  private val readers =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), (SparkSession, DataFrame)]
-
-  private def cached(spark: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    readers.filterInPlace { case (_, (owner, _)) => !owner.sparkContext.isStopped }
-    val k = (System.identityHashCode(spark), key)
-    readers.get(k) match {
-      case Some((owner, df)) if owner eq spark => df
-      case _ =>
-        val df = build
-        readers.put(k, (spark, df))
-        df
-    }
-  }
+  // Session-scoped reader cache, keyed by table path: `spark.read.parquet`
+  // costs a file listing plus footer schema inference PER CALL (~tens of ms
+  // warm), and the query registry re-reads the same immutable tables on
+  // every build — hundreds of times across a bench run. A DataFrame is an
+  // immutable logical plan, safe to share across queries of one session;
+  // a session's entries go when its SparkContext ends (graft.SessionCache,
+  // the same cache graft.Fixtures builds on). Staleness contract: a cached
+  // table pins the file listing it was resolved with — correct for
+  // immutable datasets (the loader's purpose); call [[invalidate]] after
+  // appending files to a cached dir.
+  private val readers = new graft.SessionCache[String, DataFrame]
 
   /** Drop cached readers for `dir` (all sessions) — required after
     * appending or rewriting files under a cached path. Accepts the dir
@@ -59,8 +46,7 @@ object Tables {
     */
   def invalidate(dir: String): Unit = {
     val norm = dir.reverse.dropWhile(_ == '/').reverse
-    readers.filterInPlace { case ((_, key), _) =>
-      !(key == norm || key.startsWith(s"$norm/")) }
+    readers.invalidate(key => key == norm || key.startsWith(s"$norm/"))
   }
 
   def read(spark: SparkSession, dir: String, name: String): DataFrame = {
@@ -70,7 +56,7 @@ object Tables {
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     name match {
       case "events" => events(spark, dir)
-      case n => cached(spark, s"$dir/$n.parquet") {
+      case n => readers(spark, s"$dir/$n.parquet") {
         spark.read.parquet(s"$dir/$n.parquet")
       }
     }
@@ -87,7 +73,7 @@ object Tables {
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    cached(spark, s"$dir/events.parquet") {
+    readers(spark, s"$dir/events.parquet") {
       val raw = spark.read.parquet(s"$dir/events.parquet")
       raw.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>

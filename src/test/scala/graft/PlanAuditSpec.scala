@@ -155,7 +155,7 @@ class PlanAuditSpec extends SparkTestBase {
   }
 
   test("promoted-column path: the map-number predicate reaches the parquet scan as a pushed filter") {
-    val dir = graft.Queries.Fixtures.logTableDir(spark, sf("sf0.01"))
+    val dir = graft.Fixtures.logTableDir(spark, sf("sf0.01"))
     val df = graft.model.LogSchema.readLogs(spark, dir)
       .where(try_element_at(col("fields_number"), lit("event.value")) >= 150.0)
       .select(col("id"))

@@ -159,7 +159,7 @@ class PlansSpec extends SparkTestBase {
   }
 
   test("a projection that prunes the promoted column leaves the subscript untouched (no unbindable rewrite)") {
-    val dir = graft.Queries.Fixtures.logTableDir(spark, sf("sf0.01"))
+    val dir = graft.Fixtures.logTableDir(spark, sf("sf0.01"))
     val back = LogSchema.readLogs(spark, dir)
     // the nondeterministic projection blocks filter pushdown AND prunes the
     // promoted column, so the filter's direct child cannot provide it; the
@@ -198,7 +198,7 @@ class PlansSpec extends SparkTestBase {
         """SELECT inline(array(graft_ingest('{"a":1}', array(), false)))""")
         .select("fields_number").head().getMap[String, Double](0)("a") == 1.0)
       // optimizer rule injected: the promoted rewrite fires on this session
-      val dir = graft.Queries.Fixtures.logTableDir(shared, sf("sf0.01"))
+      val dir = graft.Fixtures.logTableDir(shared, sf("sf0.01"))
       val q = graft.model.LogSchema.readLogs(s2, dir)
         .where(try_element_at(col("fields_number"), lit("event.value")) >= 150.0)
         .select(col("id"))

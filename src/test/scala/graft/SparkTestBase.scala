@@ -36,12 +36,7 @@ trait SparkTestBase extends AnyFunSuite {
 
 object SparkTestBase {
   private[graft] def deleteOnExit(f: java.io.File): Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(x: java.io.File): Unit = {
-        Option(x.listFiles()).foreach(_.foreach(rm)); x.delete(); ()
-      }
-      rm(f)
-    }))
+    Runtime.getRuntime.addShutdownHook(new Thread(() => Fixtures.deleteRecursively(f)))
 
   lazy val session: SparkSession = {
     // embedded Derby (JdbcSinkSpec) writes derby.log into the CWD — the

@@ -2,8 +2,7 @@
 # Run a graft main class without sbt (uses compiled classes + Spark jars).
 # Usage: tools/run.sh graft.Verify /root/testdata/sf0.01 /tmp/verify01
 MAIN=$1; shift
-SCALA_JARS=$(ls ~/.cache/coursier/v1/https/*/org/scala-lang/scala-library/2.13*/scala-library-2.13*.jar 2>/dev/null | head -1)
-if [ -z "$SCALA_JARS" ]; then SCALA_JARS=$(find / -name "scala-library-2.13*.jar" 2>/dev/null | head -1); fi
+# Spark's jars include the scala-library build.sbt compiles against.
 exec java \
   --add-opens=java.base/java.lang=ALL-UNNAMED \
   --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
@@ -22,5 +21,5 @@ exec java \
   -Dspark.sql.session.timeZone=UTC \
   ${GRAFT_JVM_LOG:+-Xlog:all=warning:stderr} \
   -Xmx${SPARK_DRIVER_MEM:-8g} \
-  -cp "/root/repo/target/scala-2.13/classes:$SCALA_JARS:/opt/spark/jars/*" \
+  -cp "$(cd "$(dirname "$0")/.." && pwd)/target/scala-2.13/classes:/opt/spark/jars/*" \
   "$MAIN" "$@"
