@@ -286,9 +286,10 @@ private[graft] object Fixtures {
     materialized(Ingest.ingestJson(ev, col("j"), col("ts")))
   }
 
-  /** One IVF index per (session, sf dir) — the index build (sampled
-    * KMeans + full assignment pass) is the amortizable step a production
-    * deployment persists; queries probe the cached bucketed corpus.
+  /** One IVF index per (session, sf dir) — the index build (one-task
+    * k-means fit on a bounded sample + a narrow full assignment pass) is
+    * the amortizable step a production deployment persists; queries probe
+    * the cached bucketed corpus.
     */
   val ivfIndex: Fixture[Similarity.IvfIndex] = fixture("ivfIndex") { (s, dir) =>
     val idx = Similarity.buildIvfIndex(
@@ -313,9 +314,10 @@ private[graft] object Fixtures {
     idx.copy(bucketed = materialized(idx.bucketed))
   }
 
-  /** One PQ index per (session, sf dir) — per-subspace codebook training
-    * + corpus encoding is the amortizable build; queries ADC-scan the
-    * cached code table (the compressed corpus, not the vectors).
+  /** One PQ index per (session, sf dir) — the m subspace codebooks
+    * fitted in one task on a bounded sample + one narrow encode pass is
+    * the amortizable build; queries ADC-scan the cached code table (the
+    * compressed corpus, not the vectors).
     */
   val pqIndex: Fixture[Similarity.PqIndex] = fixture("pqIndex") { (s, dir) =>
     val idx = Similarity.buildPqIndex(
@@ -324,7 +326,8 @@ private[graft] object Fixtures {
   }
 
   /** One IVF-PQ index per (session, sf dir) — the full-composition build
-    * (coarse cells + subspace codebooks + carried-cell encode) amortizes
+    * (coarse cells and subspace codebooks fitted in one task, then a
+    * narrow assignment + carried-cell encode) amortizes
     * like its siblings; queries prune to probed cells AND scan codes.
     */
   val ivfPqIndex: Fixture[Similarity.IvfPqIndex] = fixture("ivfPqIndex") { (s, dir) =>
@@ -558,7 +561,8 @@ private[graft] object Fixtures {
   }
 
   /** The scale-aware IVF index over [[clusteredEmbeddings]] — same
-    * numCells = ⌈√n⌉ sizing as [[ivfIndexScaled]]. */
+    * numCells = ⌈√n⌉ sizing and one-task k-means fit as
+    * [[ivfIndexScaled]]. */
   val ivfIndexClustered: Fixture[Similarity.IvfIndex] = fixture("ivfIndexClustered") { (s, dir) =>
     val emb = clusteredEmbeddings(s, dir)
     val cells = math.max(16,

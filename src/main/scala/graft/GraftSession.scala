@@ -26,8 +26,17 @@ object GraftSession {
   /** A `local[cores]` session with one shuffle partition per core, AQE on,
     * UTC, no UI, WARN logging and every graft function registered.
     * `extra` confs are applied on top (ScaleGen's parquet-read confs).
+    *
+    * `getOrCreate` hands back a session on an already running
+    * SparkContext, where the master and the static codegen-cache conf
+    * cannot change. A context that differs in either fails with
+    * `IllegalStateException`; a running session is checked before the
+    * builder touches it, so a refused call leaves its runtime confs as
+    * they were.
     */
   def create(cores: Int = envCores, extra: Seq[(String, String)] = Nil): SparkSession = {
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .foreach(requireContext(_, cores))
     val builder = SparkSession.builder()
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores.toString)
@@ -37,8 +46,21 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
     val spark = extra.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
+    requireContext(spark, cores)
     spark.sparkContext.setLogLevel("WARN")
     GraftFunctions.registerAll(spark)
     spark
+  }
+
+  private def requireContext(spark: SparkSession, cores: Int): Unit = {
+    val master = spark.sparkContext.master
+    if (master != s"local[$cores]")
+      throw new IllegalStateException(
+        s"requested master local[$cores], but the running SparkContext is $master")
+    val key = "spark.sql.codegen.cache.maxEntries"
+    val cache = spark.conf.get(key)
+    if (cache != CodegenCacheEntries.toString)
+      throw new IllegalStateException(
+        s"requested $key=$CodegenCacheEntries, but the running SparkContext has $cache")
   }
 }

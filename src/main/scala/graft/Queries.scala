@@ -1596,7 +1596,7 @@ object Queries {
 
   private val simSearchIvf = Q(
     // query path against the per-session index fixture — the build
-    // (sampled KMeans fit + assignment) is the amortized step, like a
+    // (one-task k-means fit on a sample + assignment) is the amortized step, like a
     // persisted ANN index in production
     (s, dir) => annCertified(s, dir, minRecall = 0.4)(
       Similarity.ivfQuery(Fixtures.ivfIndex(s, dir),
@@ -1676,8 +1676,8 @@ object Queries {
     Some(annOracleSql))
 
   /** Exact-mode k-NN join (nprobe = numCells): every embedding finds its 3
-    * nearest neighbors through the full distributed plumbing — sampled
-    * KMeans cells, literal-centroid narrow probe selection on the left
+    * nearest neighbors through the full distributed plumbing — k-means
+    * cells fitted on a sample, literal-centroid narrow probe selection on the left
     * side, the cell equi-join, the group-limited ranking window — and with
     * all cells probed the result is provably the brute-force join, which
     * the oracle computes directly. The nprobe < numCells recall dial is
@@ -3911,7 +3911,7 @@ object Queries {
     * rule ("a lower-id vector in MY cell within cosine threshold") —
     * different join strategy, shuffle shape, and dedup mechanics, same
     * declarative definition. The vector count is the SQL anchor; cell
-    * assignments themselves are engine-specific (KMeans), which is exactly
+    * assignments themselves are engine-specific (k-means), which is exactly
     * why the parity must be computed in-engine.
     */
   private val dedupSemantic = Q(

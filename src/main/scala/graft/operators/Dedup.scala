@@ -413,13 +413,13 @@ object Dedup {
   }
 
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic near-dup
-    * removal via clustered cosine. KMeans cells bound the candidate set;
+    * removal via clustered cosine. k-means cells bound the candidate set;
     * within each cell a vector is a duplicate iff it has cosine ≥
     * `threshold` to some LOWER-id vector of the same cell (deterministic
     * exemplar rule: the minimum id of each within-cell near-dup group
     * always survives). Returns (id, is_dup) for every input vector.
     *
-    * Scale design: the iterative KMeans fit runs on a bounded sample
+    * Scale design: the k-means fit runs on a bounded sample in one task
     * ([[Similarity.buildIvfIndex]]); full-corpus assignment is one narrow
     * pass. The only shuffle is the cell-key exchange; within-cell pairing
     * is quadratic in CELL size, so `numCells` must grow ∝ corpus size —
@@ -441,7 +441,7 @@ object Dedup {
   /** Within-cell duplicate marking over precomputed `(nid, nv, cell)`
     * assignments (the [[Similarity.IvfIndex.bucketed]] layout) — split out
     * so parity with a brute-force per-cell oracle can be tested on planted
-    * assignments, independent of the KMeans fit.
+    * assignments, independent of the k-means fit.
     */
   def semDedupFromCells(bucketed: DataFrame, threshold: Double): DataFrame = {
     VectorExprs.register(bucketed.sparkSession)

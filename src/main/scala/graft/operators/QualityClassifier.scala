@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   *  - TRAINING is the only iterative part — L-BFGS runs `maxIter` bounded
   *    passes, each a map-side-combined `treeAggregate` of gradients (one
   *    dense `numFeatures` vector per partition, no per-row shuffle).
-  *    Like the KMeans fits in [[Similarity]], the fit input is bounded to
+  *    Like the k-means fits in [[Similarity]], the fit input is bounded to
   *    `trainRows` by sampling: a linear filter converges long before
   *    billions of examples, so the 100 TB corpus never feeds the
   *    optimizer directly.

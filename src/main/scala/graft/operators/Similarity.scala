@@ -2,14 +2,14 @@ package graft.operators
 
 import graft.expressions.VectorExprs
 import graft.functions.{Rounding, VectorFunctions => VF}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
   * Three paths:
-  *  - [[ivfTopK]]: inverted-file (IVF) bucketing — KMeans centroids
+  *  - [[ivfTopK]]: inverted-file (IVF) bucketing — k-means centroids
   *    partition the corpus; each query probes only its `nprobe` nearest
   *    cells. The classic recall/cost dial for billion-vector corpora.
   *  - [[bruteTopK]]: exact cosine top-k, query set broadcast against the
@@ -177,13 +177,19 @@ object Similarity {
 
   /** Build an IVF index over the corpus.
     *
-    * The KMeans fit runs on a bounded SAMPLE (≤ `trainRows` vectors):
-    * KMeans is iterative — every iteration is a full pass over its input,
-    * so fitting the raw corpus would scan 100 TB per iteration. Centroid
-    * quality converges long before millions of training points; assignment
-    * of the full corpus stays a single narrow `transform` pass (at scale,
-    * write `bucketed` partitioned by cell so queries prune to their probed
-    * cells' files).
+    * The cell quantizer is fitted on a bounded SAMPLE (≤ `trainRows`
+    * vectors, about 13 MB at 100k × 16 dims) in ONE task ([[fitQuantizers]]):
+    * the sample is shuffled to a single partition and k-means runs there
+    * to convergence, so the fit is one job whatever `numCells` or the
+    * iteration count, and only the centroids come back to the driver.
+    * Assignment of the full corpus stays distributed: one narrow
+    * nearest-centroid projection ([[probeCells]] with `nprobe = 1`, ties
+    * to the lower cell id). At scale, write `bucketed` partitioned by cell
+    * so queries prune to their probed cells' files.
+    *
+    * k-means can return FEWER than `numCells` centres (fewer distinct
+    * sample vectors than cells); `numCells` of the result is the number of
+    * centroids, as [[IvfIndex.load]] recovers it.
     */
   def buildIvfIndex(
       corpus: DataFrame,
@@ -193,27 +199,218 @@ object Similarity {
       seed: Long = 42L,
       trainRows: Long = 100000L): IvfIndex = {
     VectorExprs.register(corpus.sparkSession)
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    val featured = corpus.select(col(idCol).as("nid"), col(vecCol).as("nv"))
-      .withColumn("fv", array_to_vector(col("nv").cast("array<double>")))
+    val sel = corpus.select(col(idCol).as("nid"), col(vecCol).as("nv"))
     // count() is footer-metadata cheap on parquet; it bounds the sampling
-    // fraction so the iterative fit input never exceeds trainRows
-    val n = featured.count()
-    val trainSet =
-      if (n <= trainRows) featured
-      else featured.sample(withReplacement = false,
-        trainRows.toDouble / n, seed)
-    val model = new KMeans().setK(numCells).setSeed(seed)
-      .setFeaturesCol("fv").setPredictionCol("cell")
-      .fit(trainSet)
-    val bucketed = model.transform(featured).select("nid", "nv", "cell")
-    val spark = corpus.sparkSession
+    // fraction so the one-task fit never holds more than trainRows vectors
+    val sample = trainSample(sel, sel.count(), seed, trainRows)
+    val cents = fitQuantizers(sample, "nv", Seq(Fit(numCells, seed))).head
+    val centroids = centroidFrame(corpus.sparkSession, cents)
+    // a local relation: probeCells fetches it without running a job
+    IvfIndex(centroids, probeCells(sel, centroids, nprobe = 1, ProbeLiteralMaxCells, "nv"),
+      cents.length)
+  }
+
+  /** One k-means quantizer to fit: `k` centres over the `sub`-th of `subs`
+    * equal contiguous slices of every sample vector (`subs = 1`: the whole
+    * vector), seeded by `seed`.
+    */
+  private final case class Fit(k: Int, seed: Long, sub: Int = 0, subs: Int = 1)
+
+  /** Spark ML `KMeans` defaults, kept so the one-task fit seeds and stops
+    * where the distributed fit did.
+    */
+  private val InitSteps = 2
+  private val MaxIter = 20
+  private val Tol = 1e-4
+  /** Lloyd rounds of the weighted k-means++ pass that cuts the k-means||
+    * candidates down to k (Spark's `LocalKMeans` bound). */
+  private val PlusPlusIter = 30
+
+  /** The bounded training sample: all of `df` when `n ≤ trainRows`, else a
+    * seeded Bernoulli sample of about `trainRows` rows.
+    */
+  private def trainSample(df: DataFrame, n: Long, seed: Long, trainRows: Long): DataFrame =
+    if (n <= trainRows) df
+    else df.sample(withReplacement = false, trainRows.toDouble / n, seed)
+
+  /** Fit every quantizer of `fits` on the `vecCol` vectors of `sample` in
+    * ONE task: `repartition(1)` + `mapPartitions`, the finish-small shape
+    * of `TrainPipeline`'s union-find. The sample is bounded by the caller
+    * (`trainRows`), so it fits in the task's memory; only the centroids
+    * come back, never the sample. Replaces Spark ML `KMeans`, whose
+    * k-means|| seeding and Lloyd iterations each ran one driver-synced job
+    * (7 + up to 20 per fit, and one fit per PQ subspace). The shuffle is
+    * an RDD one, so the fit is a single job: under AQE a Dataset
+    * repartition would run its map stage as a job of its own.
+    *
+    * The task sorts the sample before fitting, so the result depends only
+    * on the sampled vectors and the seeds, not on shuffle arrival order.
+    * Returns each fit's centres in `fits` order; null vectors are skipped
+    * and an empty sample fails.
+    */
+  private def fitQuantizers(
+      sample: DataFrame, vecCol: String, fits: Seq[Fit]): Seq[Array[Array[Double]]] = {
+    val spark = sample.sparkSession
     import spark.implicits._
-    val centroids = model.clusterCenters.zipWithIndex
-      .map { case (c, i) => (i, c.toArray) }.toSeq
-      .toDF("cell", "centroid")
-    IvfIndex(centroids, bucketed, numCells)
+    val fs = fits.toArray
+    val rows = sample.where(col(vecCol).isNotNull)
+      .select(col(vecCol).cast("array<double>")).as[Array[Double]]
+      .rdd.repartition(1)
+      .mapPartitions { it =>
+        val pts = it.toArray
+        java.util.Arrays.sort(pts,
+          (a: Array[Double], b: Array[Double]) => java.util.Arrays.compare(a, b))
+        if (pts.isEmpty) Iterator.empty
+        else fs.iterator.zipWithIndex.flatMap { case (f, i) =>
+          kMeans(subspace(pts, f.sub, f.subs), f.k, f.seed)
+            .iterator.zipWithIndex.map { case (c, j) => (i, j, c) }
+        }
+      }
+      .collect()
+    require(rows.nonEmpty, s"no training vectors in column $vecCol")
+    fs.indices.map(i => rows.filter(_._1 == i).sortBy(_._2).map(_._3))
+  }
+
+  /** The `sub`-th of `subs` equal contiguous slices of every point. */
+  private def subspace(pts: Array[Array[Double]], sub: Int, subs: Int): Array[Array[Double]] =
+    if (subs == 1 || pts.isEmpty) pts
+    else {
+      val dim = pts(0).length
+      require(dim % subs == 0, s"dim $dim must be divisible by m=$subs subspaces")
+      val d = dim / subs
+      pts.map(p => java.util.Arrays.copyOfRange(p, sub * d, sub * d + d))
+    }
+
+  /** k-means on one task's points, with Spark ML's seeding and stopping
+    * rules: k-means|| initialisation ([[InitSteps]] rounds, each keeping
+    * every point with probability 2k·cost/Σcost), weighted k-means++ over
+    * the distinct candidates when there are more than `k`, then Lloyd with
+    * squared Euclidean distance ([[lloyd]]). Returns fewer than `k`
+    * centres when k-means|| finds fewer distinct candidates. k-means||
+    * spreads the seeds by distance; a plain k-means++ start gives
+    * near-equal cells on isotropic data, which lowers recall at a fixed
+    * `nprobe`.
+    */
+  private def kMeans(pts: Array[Array[Double]], k: Int, seed: Long): Array[Array[Double]] = {
+    val n = pts.length
+    val rnd = new java.util.Random(seed)
+    val cost = Array.fill(n)(Double.PositiveInfinity)
+    val cands = scala.collection.mutable.ArrayBuffer(pts(rnd.nextInt(n)))
+    var fresh = cands.toArray
+    var step = 0
+    while (step < InitSteps) {
+      var sum = 0.0
+      var i = 0
+      while (i < n) {
+        if (fresh.nonEmpty)
+          cost(i) = math.min(cost(i), sqDist(pts(i), fresh(closest(fresh, pts(i)))))
+        sum += cost(i)
+        i += 1
+      }
+      fresh = pts.indices.filter(i => rnd.nextDouble() < 2.0 * k * cost(i) / sum)
+        .map(pts).toArray
+      cands ++= fresh
+      step += 1
+    }
+    val distinct = cands.distinctBy(c => c.toSeq).toArray
+    val init =
+      if (distinct.length <= k) distinct
+      else {
+        val w = new Array[Double](distinct.length)
+        pts.foreach(p => w(closest(distinct, p)) += 1.0)
+        kMeansPlusPlus(distinct, w, k, rnd)
+      }
+    lloyd(pts, Array.fill(n)(1.0), init, MaxIter)
+  }
+
+  /** Weighted k-means++ (Spark's `LocalKMeans.kMeansPlusPlus`): draw `k`
+    * centres with probability ∝ weight × squared distance to the chosen
+    * ones, then refine them with weighted Lloyd over the candidates.
+    */
+  private def kMeansPlusPlus(
+      pts: Array[Array[Double]], w: Array[Double], k: Int,
+      rnd: java.util.Random): Array[Array[Double]] = {
+    def pick(score: Int => Double): Array[Double] = {
+      val r = rnd.nextDouble() * pts.indices.map(score).sum
+      var acc = 0.0
+      var j = 0
+      while (j < pts.length && acc < r) { acc += score(j); j += 1 }
+      pts(math.max(j - 1, 0))
+    }
+    val centers = new Array[Array[Double]](k)
+    centers(0) = pick(w(_))
+    val cost = pts.map(sqDist(_, centers(0)))
+    for (c <- 1 until k) {
+      centers(c) = pick(j => w(j) * cost(j))
+      pts.indices.foreach(j => cost(j) = math.min(cost(j), sqDist(pts(j), centers(c))))
+    }
+    lloyd(pts, w, centers, PlusPlusIter)
+  }
+
+  /** Weighted Lloyd rounds from `init` until no centre moves more than
+    * [[Tol]] or `maxIter` rounds; an empty cluster keeps its centre.
+    */
+  private def lloyd(
+      pts: Array[Array[Double]], w: Array[Double], init: Array[Array[Double]],
+      maxIter: Int): Array[Array[Double]] = {
+    val k = init.length
+    val dim = init(0).length
+    val centers = init.map(_.clone)
+    var iter = 0
+    var converged = false
+    while (iter < maxIter && !converged) {
+      val sums = Array.ofDim[Double](k, dim)
+      val counts = new Array[Double](k)
+      var i = 0
+      while (i < pts.length) {
+        val p = pts(i)
+        val c = closest(centers, p)
+        val s = sums(c)
+        var d = 0
+        while (d < dim) { s(d) += w(i) * p(d); d += 1 }
+        counts(c) += w(i)
+        i += 1
+      }
+      converged = true
+      var c = 0
+      while (c < k) {
+        if (counts(c) > 0) {
+          val next = sums(c).map(_ / counts(c))
+          if (sqDist(next, centers(c)) > Tol * Tol) converged = false
+          centers(c) = next
+        }
+        c += 1
+      }
+      iter += 1
+    }
+    centers
+  }
+
+  /** Index of the nearest centre by squared Euclidean distance; the
+    * first minimum wins ties. */
+  private def closest(centers: Array[Array[Double]], p: Array[Double]): Int = {
+    var best = 0
+    var bestD = Double.PositiveInfinity
+    var c = 0
+    while (c < centers.length) {
+      val d = sqDist(p, centers(c))
+      if (d < bestD) { bestD = d; best = c }
+      c += 1
+    }
+    best
+  }
+
+  private def sqDist(a: Array[Double], b: Array[Double]): Double = {
+    var s = 0.0
+    var i = 0
+    while (i < a.length) { val d = a(i) - b(i); s += d * d; i += 1 }
+    s
+  }
+
+  /** The `(cell, centroid)` table of fitted centres, cell = position. */
+  private def centroidFrame(spark: SparkSession, cents: Array[Array[Double]]): DataFrame = {
+    import spark.implicits._
+    cents.toSeq.zipWithIndex.map { case (c, i) => (i, c) }.toDF("cell", "centroid")
   }
 
   /** Answer a query batch against a prebuilt index: pick each query's
@@ -277,8 +474,8 @@ object Similarity {
     * is broadcast or cross-joined. Both sides route through a shared IVF
     * cell assignment —
     *
-    *  - the `right` side is bucketed once by [[buildIvfIndex]] (sampled
-    *    KMeans fit, narrow full-corpus assignment);
+    *  - the `right` side is bucketed once by [[buildIvfIndex]] (one-task
+    *    k-means fit on a bounded sample, narrow full-corpus assignment);
     *  - the `left` side picks its `nprobe` nearest cells as a NARROW
     *    per-row projection: the centroid table is tiny (`numCells` rows),
     *    so it rides along as a LITERAL array and cell selection is
@@ -431,7 +628,7 @@ object Similarity {
 
   private[graft] def probeCells(
       withQv: DataFrame, centroids: DataFrame, nprobe: Int,
-      maxLiteralCells: Int): DataFrame = {
+      maxLiteralCells: Int, vecCol: String = "qv"): DataFrame = {
     val keep = withQv.columns.map(col)
     val centsTyped = centroids
       .select(col("cell").cast("int"), col("centroid").cast("array<double>"))
@@ -450,16 +647,10 @@ object Similarity {
       val cents = headRows
         .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
         .sortBy(_._1)
-      val candStructs = cents.map { case (cell, c) =>
-        struct(
-          (VectorExprs.dot(col("qv"), lit(c)) * lit(-2.0) +
-            lit(c.map(x => x * x).sum)).as("dist"),
-          lit(cell).as("cell"))
-      }
       withQv
         .select(scala.collection.immutable.ArraySeq.unsafeWrapArray(keep :+
-          explode(slice(array_sort(array(candStructs.toSeq: _*)), 1, probeN))
-            .as("p")): _*)
+          explode(slice(array_sort(array(cellDistances(col(vecCol), cents.toSeq): _*)),
+            1, probeN)).as("p")): _*)
         .select(scala.collection.immutable.ArraySeq.unsafeWrapArray(
           keep :+ col("p.cell").as("cell")): _*)
     } else {
@@ -481,7 +672,7 @@ object Similarity {
         .select(scala.collection.immutable.ArraySeq.unsafeWrapArray(keep :+
           explode(slice(array_sort(transform(col("_cents"), c =>
               struct(
-                (VectorExprs.dot(col("qv"), c.getField("centroid")) * lit(-2.0) +
+                (VectorExprs.dot(col(vecCol), c.getField("centroid")) * lit(-2.0) +
                   c.getField("cnorm2")).as("dist"),
                 c.getField("cell").as("cell")))),
             1, probeN)).as("p")): _*)
@@ -490,8 +681,19 @@ object Similarity {
     }
   }
 
+  /** One `(dist, cell)` struct per literal centre: dist = −2·v·c + c·c,
+    * the squared L2 distance with the constant |v|² dropped, so ordering
+    * the structs orders by distance and then by cell id.
+    */
+  private def cellDistances(v: Column, cents: Seq[(Int, Array[Double])]): Seq[Column] =
+    cents.map { case (cell, c) =>
+      struct(
+        (VectorExprs.dot(v, lit(c)) * lit(-2.0) + lit(c.map(x => x * x).sum)).as("dist"),
+        lit(cell).as("cell"))
+    }
+
   /** A product-quantization index (FAISS `IndexPQ` shape): per-subspace
-    * KMeans codebooks plus the corpus compressed to one small code per
+    * k-means codebooks plus the corpus compressed to one small code per
     * subspace. `codebooks(sub, code, centroid)` is tiny (m × codesPerSub
     * centroids); `codes(nid, codes)` carries m small ints per vector —
     * the memory story of PQ: a 64-dim float vector (256 B) becomes m = 8
@@ -540,15 +742,13 @@ object Similarity {
   }
 
   /** Build a PQ index: split each (normalized) vector into `m` contiguous
-    * subspaces, fit an independent KMeans codebook of `codesPerSub`
-    * centroids per subspace on a bounded sample (same rationale as
-    * [[buildIvfIndex]] — the iterative fit must never pass over the full
-    * corpus), then encode the corpus with `m` chained nearest-centroid
-    * assignments — all narrow single-pass work.
-    *
-    * The one-row `head()` reads the dimensionality from the data (a
-    * single-split, single-row driver action — index-build-time only,
-    * never on the query path). `dim` must divide evenly by `m`.
+    * subspaces and fit an independent codebook of `codesPerSub` centroids
+    * per subspace on a bounded sample (≤ `trainRows` vectors). All `m`
+    * codebooks are fitted in ONE task over one sample ([[fitQuantizers]]),
+    * then the corpus is encoded by one narrow projection over the `m`
+    * literal codebooks ([[pqEncode]]). The vector dimension must divide
+    * evenly by `m`; the fit task reads it from the sample and fails the
+    * build otherwise.
     */
   def buildPqIndex(
       corpus: DataFrame,
@@ -559,67 +759,58 @@ object Similarity {
       seed: Long = 42L,
       trainRows: Long = 100000L): PqIndex = {
     VectorExprs.register(corpus.sparkSession)
-    val dim = corpus.select(size(col(vecCol)).as("d")).head().getInt(0)
     val unit = normalized(corpus, idCol, vecCol, "nid", "nv")
     // count the RAW corpus (parquet-footer cheap — no filter/projection
     // in the way) to bound the sample fraction; the handful of zero-norm
     // rows normalized() drops only make the sample marginally smaller
-    val (codebooks, encoded) = pqFitEncode(unit, corpus.count(), dim, m,
-      codesPerSub, seed, trainRows, carry = Nil)
-    PqIndex(codebooks, encoded, m, codesPerSub, dim)
+    val books = fitQuantizers(trainSample(unit, corpus.count(), seed, trainRows),
+      "nv", pqFits(m, codesPerSub, seed))
+    PqIndex(codebookFrame(corpus.sparkSession, books, codesPerSub),
+      pqEncode(unit, books, carry = Nil), m, codesPerSub, books.head.head.length * m)
   }
 
-  /** Shared PQ trainer/encoder over an already-normalized `(nid, nv, …)`
-    * frame: per-subspace sampled KMeans fits, then one narrow encode pass
-    * emitting `(nid, carry…, codes)`. Factored out so [[buildPqIndex]] and
-    * [[buildIvfPqIndex]] train identically (the latter carries the cell
-    * assignment through the encode instead of re-joining it on id later —
-    * at scale that join would be a second full shuffle of the corpus).
+  /** The `m` subspace quantizers of a PQ index, subspace `s` seeded
+    * `seed + s`. */
+  private def pqFits(m: Int, codesPerSub: Int, seed: Long): Seq[Fit] =
+    (0 until m).map(s => Fit(codesPerSub, seed + s, sub = s, subs = m))
+
+  /** The `(sub, code, centroid)` codebook table. k-means may return FEWER
+    * than `codesPerSub` centres (low-cardinality subspace / tiny sample).
+    * The ADC table is indexed positionally by sub*codesPerSub + code, so a
+    * deficient codebook is padded to exactly codesPerSub rows, or every
+    * later subspace's lookups would shift (silent mis-ranking; top slots
+    * out of bounds). Padded slots repeat centre 0; [[pqEncode]] encodes
+    * against the fitted centres only, so no code references them.
     */
-  private def pqFitEncode(
-      unit: DataFrame,
-      n: Long,
-      dim: Int,
-      m: Int,
-      codesPerSub: Int,
-      seed: Long,
-      trainRows: Long,
-      carry: Seq[String]): (DataFrame, DataFrame) = {
-    VectorExprs.register(unit.sparkSession)
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    require(dim % m == 0, s"dim $dim must be divisible by m=$m subspaces")
-    val dsub = dim / m
-    val withSubs = (0 until m).foldLeft(unit) { (df, s) =>
-      df.withColumn(s"fv$s",
-        array_to_vector(slice(col("nv"), s * dsub + 1, dsub)))
-    }
-    val trainSet =
-      if (n <= trainRows) withSubs
-      else withSubs.sample(withReplacement = false, trainRows.toDouble / n, seed)
-    val models = (0 until m).map { s =>
-      new KMeans().setK(codesPerSub).setSeed(seed + s)
-        .setFeaturesCol(s"fv$s").setPredictionCol(s"code$s")
-        .fit(trainSet)
-    }
-    val encoded = models
-      .foldLeft(withSubs)((df, model) => model.transform(df))
-      .select((col("nid") +: carry.map(col) :+
-        array((0 until m).map(s => col(s"code$s")): _*).as("codes")): _*)
-    val spark = unit.sparkSession
+  private def codebookFrame(
+      spark: SparkSession, books: Seq[Array[Array[Double]]], codesPerSub: Int): DataFrame = {
     import spark.implicits._
-    val codebooks = models.zipWithIndex.flatMap { case (model, s) =>
-      // KMeans may return FEWER than k centers (low-cardinality subspace /
-      // tiny sample). The ADC table is indexed positionally by
-      // sub*codesPerSub + code, so deficient codebooks must be padded to
-      // exactly codesPerSub rows or every later subspace's lookups shift
-      // (silent mis-ranking; top slots out of bounds). Padded slots repeat
-      // center 0 — codes from the SAME model never reference them.
-      val centers = model.clusterCenters
+    books.zipWithIndex.flatMap { case (centers, s) =>
       val padded = centers ++ Array.fill(codesPerSub - centers.length)(centers(0))
-      padded.zipWithIndex.map { case (c, code) => (s, code, c.toArray) }
+      padded.toSeq.zipWithIndex.map { case (c, code) => (s, code, c) }
     }.toDF("sub", "code", "centroid")
-    (codebooks, encoded)
+  }
+
+  /** Encode an already-normalized `(nid, nv, …)` frame against fitted
+    * codebooks in one narrow projection: each subspace's code is its
+    * nearest literal centre (ties to the lower code), emitting
+    * `(nid, carry…, codes)`. [[buildIvfPqIndex]] carries the cell
+    * assignment through the encode instead of re-joining it on id later —
+    * at scale that join would be a second full shuffle of the corpus.
+    */
+  private def pqEncode(
+      df: DataFrame, books: Seq[Array[Array[Double]]], carry: Seq[String]): DataFrame = {
+    val dsub = books.head.head.length
+    val keep = col("nid") +: carry.map(col)
+    // the slices are their own projection so each is cut once per row,
+    // not once per centre
+    val subs = df.select(keep ++ books.indices.map(s =>
+      slice(col("nv"), s * dsub + 1, dsub).as(s"_sub$s")): _*)
+    val codes = books.zipWithIndex.map { case (centers, s) =>
+      val dists = cellDistances(col(s"_sub$s"), centers.toSeq.zipWithIndex.map(_.swap))
+      (if (dists.length == 1) dists.head else least(dists: _*)).getField("cell")
+    }
+    subs.select(keep :+ array(codes: _*).as("codes"): _*)
   }
 
   private def normalized(df: DataFrame, idCol: String, vecCol: String,
@@ -807,10 +998,11 @@ object Similarity {
     }
   }
 
-  /** Build the IVF-PQ index: one normalization pass feeds both the coarse
-    * (cell) quantizer and the per-subspace PQ fits; the encode carries the
-    * cell assignment through, so the corpus is touched by exactly one wide
-    * KMeans-assignment pipeline — no id re-join.
+  /** Build the IVF-PQ index: one normalization pass and one sample feed
+    * the coarse (cell) quantizer and the `m` subspace codebooks, all
+    * fitted in the same single task ([[fitQuantizers]]); the narrow cell
+    * assignment and the narrow encode then run over the corpus in one
+    * pipeline, carrying the cell through the encode — no id re-join.
     */
   def buildIvfPqIndex(
       corpus: DataFrame,
@@ -822,13 +1014,16 @@ object Similarity {
       seed: Long = 42L,
       trainRows: Long = 100000L): IvfPqIndex = {
     VectorExprs.register(corpus.sparkSession)
-    val dim = corpus.select(size(col(vecCol)).as("d")).head().getInt(0)
+    val spark = corpus.sparkSession
     val unit = normalized(corpus, idCol, vecCol, "nid", "nv")
-    val ivf = buildIvfIndex(unit, "nid", "nv", numCells, seed, trainRows)
-    val (codebooks, encoded) = pqFitEncode(ivf.bucketed, corpus.count(), dim,
-      m, codesPerSub, seed, trainRows, carry = Seq("cell"))
-    IvfPqIndex(ivf.centroids, codebooks, encoded, numCells, m, codesPerSub,
-      dim)
+    val fitted = fitQuantizers(trainSample(unit, corpus.count(), seed, trainRows),
+      "nv", Fit(numCells, seed) +: pqFits(m, codesPerSub, seed))
+    val (cents, books) = (fitted.head, fitted.tail)
+    val centroids = centroidFrame(spark, cents)
+    val bucketed = probeCells(unit, centroids, nprobe = 1, ProbeLiteralMaxCells, "nv")
+    IvfPqIndex(centroids, codebookFrame(spark, books, codesPerSub),
+      pqEncode(bucketed, books, carry = Seq("cell")), cents.length, m,
+      codesPerSub, cents.head.length)
   }
 
   /** Query the IVF-PQ index: per-query ADC tables against the broadcast

@@ -47,6 +47,10 @@ object Spread {
         size() > 256
     })
 
+  /** How many gate calls paid the `.rdd` planning pass (tier 3), for
+    * specs that pin which sources reach it. */
+  private[graft] val rddProbes = new java.util.concurrent.atomic.AtomicLong
+
   /** Should `sel` be hash-spread to `parallelism` before per-row compute?
     * See the object scaladoc for the tiered gate and caching contract.
     */
@@ -63,8 +67,10 @@ object Spread {
     }.isDefined
     val manyFiles =
       try sel.inputFiles.length >= parallelism catch { case _: Exception => true }
-    val verdict =
-      !derived && !manyFiles && sel.rdd.getNumPartitions < parallelism
+    val verdict = !derived && !manyFiles && {
+      rddProbes.incrementAndGet()
+      sel.rdd.getNumPartitions < parallelism
+    }
     verdicts.put(key, java.lang.Boolean.valueOf(verdict))
     verdict
   }
@@ -75,6 +81,13 @@ object Spread {
     * row order only, so any downstream aggregate / join / final sort is
     * unaffected; callers feeding order-SENSITIVE operators (window without
     * a total order, first/last aggregates) must not use this.
+    *
+    * `keys` must take at least `parallelism` distinct values over `df`:
+    * the hash exchange puts each key's rows in one partition, so with
+    * fewer distinct keys some of the `parallelism` partitions stay empty
+    * and their cores idle (a low-cardinality key such as a namespace or
+    * a flag spreads a single-file scan to as many tasks as it has
+    * values, no more). An id column is the usual choice.
     */
   def maybe(df: DataFrame, keys: Column*): DataFrame = {
     val spark = df.sparkSession

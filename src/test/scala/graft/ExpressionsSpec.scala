@@ -215,7 +215,10 @@ class ExpressionsSpec extends SparkTestBase {
 
   test("pqTopK recall vs brute-force on the shared embeddings") {
     val emb = spark.read.parquet(sf() + "/embeddings.parquet")
-    val queries = emb.where(col("vec_id") < 5)
+    // 100 queries (1,000 true neighbours): on 5, the raw ADC estimate
+    // spreads 0.16-0.32 across build seeds on these isotropic vectors,
+    // across the floor, for Spark ML's KMeans and the one-task fit alike
+    val queries = emb.where(col("vec_id") < 100)
     val brute = Similarity.bruteTopK(emb, queries, "vec_id", "embedding", 10)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
     val idx = Similarity.buildPqIndex(emb, "vec_id", "embedding")
@@ -235,7 +238,10 @@ class ExpressionsSpec extends SparkTestBase {
 
   test("ivfPq: raw ADC over probed cells recalls, refine steps up, all-cells+refine near-exact") {
     val emb = spark.read.parquet(sf() + "/embeddings.parquet")
-    val queries = emb.where(col("vec_id") < 5)
+    // 100 queries (1,000 true neighbours): on 5, the raw ADC estimate
+    // spreads 0.16-0.32 across build seeds on these isotropic vectors,
+    // across the floor, for Spark ML's KMeans and the one-task fit alike
+    val queries = emb.where(col("vec_id") < 100)
     val brute = Similarity.bruteTopK(emb, queries, "vec_id", "embedding", 10)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
     val idx = Similarity.buildIvfPqIndex(emb, "vec_id", "embedding",

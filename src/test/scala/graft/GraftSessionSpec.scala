@@ -16,4 +16,13 @@ class GraftSessionSpec extends SparkTestBase {
     assert(spark.sql("SELECT graft_round(CAST(2.5 AS DOUBLE), 0) AS v")
       .head().getDouble(0) == 3.0)
   }
+
+  test("factory session: a call that cannot get its own context fails and leaves the running session as it was") {
+    assert(spark.sparkContext.master == "local[4]") // the shared context is up first
+    val e = intercept[IllegalStateException](GraftSession.create(cores = 2))
+    assert(e.getMessage.contains("local[2]") && e.getMessage.contains("local[4]"))
+    // the refused call set no runtime conf on the shared session
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(spark.range(10).where("id % 2 = 0").count() == 5)
+  }
 }

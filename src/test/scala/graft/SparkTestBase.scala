@@ -35,8 +35,13 @@ trait SparkTestBase extends AnyFunSuite {
 }
 
 object SparkTestBase {
-  private[graft] def deleteOnExit(f: java.io.File): Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => Fixtures.deleteRecursively(f)))
+  private[graft] def deleteOnExit(f: java.io.File): Unit = {
+    // initialise Fixtures now: its first use inside a shutdown hook would
+    // register the session caches' own hook during shutdown, which the
+    // JVM refuses, and the dir would stay
+    val fixtures = Fixtures
+    Runtime.getRuntime.addShutdownHook(new Thread(() => fixtures.deleteRecursively(f)))
+  }
 
   lazy val session: SparkSession = {
     // embedded Derby (JdbcSinkSpec) writes derby.log into the CWD — the
