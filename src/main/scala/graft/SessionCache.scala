@@ -6,8 +6,9 @@ import org.apache.spark.sql.SparkSession
 import scala.collection.concurrent.TrieMap
 
 /** Values built at most once per (live session, key): the one cache behind
-  * the registry's fixtures ([[Fixture]]) and the table readers
-  * ([[graft.sources.Tables]]).
+  * the registry's fixtures ([[Fixture]]), the table readers
+  * ([[graft.sources.Tables]]) and the skip indexes' per-generation state
+  * ([[graft.model.SidecarIndex]]).
   *
   *  - Entries are keyed by session OBJECT IDENTITY: DataFrames and indexes
   *    are bound to the session that built them, so a later session (or a
@@ -43,15 +44,19 @@ final class SessionCache[K, V](onRelease: V => Unit = (_: V) => ()) {
     cells.get((s, key)).flatMap(_.value)
 
   /** Drop the entries (of every session) whose key matches; the next call
-    * builds again. `onRelease` does not run: the caller invalidates because
-    * the value is stale, not because its session ended.
+    * builds again. `release` runs on each dropped value, `onRelease` does
+    * not: the caller invalidates because the value is stale, not because
+    * its session ended.
     */
-  def invalidate(stale: K => Boolean): Unit =
-    cells.filterInPlace { case ((_, k), _) => !stale(k) }
+  def invalidate(stale: K => Boolean, release: V => Unit = (_: V) => ()): Unit =
+    drop({ case (_, k) => stale(k) }, release)
 
   private def release(owner: SparkSession => Boolean): Unit =
-    cells.foreach { case (key @ (s, _), cell) =>
-      if (owner(s) && cells.remove(key, cell)) cell.value.foreach(onRelease)
+    drop({ case (s, _) => owner(s) }, onRelease)
+
+  private def drop(which: ((SparkSession, K)) => Boolean, release: V => Unit): Unit =
+    cells.foreach { case (key, cell) =>
+      if (which(key) && cells.remove(key, cell)) cell.value.foreach(release)
     }
 }
 

@@ -14,14 +14,14 @@ import scala.util.control.NonFatal
   * tools/run.sh graft.Tools dump-plans   <sfDir> <outDir> <suffix> <query...>
   * tools/run.sh graft.Tools host-band    <sfDir> <reps> <query...>
   * tools/run.sh graft.Tools profile      <sfDir> [query...]
-  * tools/run.sh graft.Tools sidecar-cold [N...] | --decide N... [--tables N...]
+  * tools/run.sh graft.Tools sidecar-cold [N...]
   * }}}
   */
 object Tools {
   private val usage =
     "usage: graft.Tools plan-shape <sfDir> | dump-plans <sfDir> <outDir> <suffix> <query...> | " +
       "host-band <sfDir> <reps> <query...> | profile <sfDir> [query...] | " +
-      "sidecar-cold [N...] | sidecar-cold --decide N... [--tables N...]"
+      "sidecar-cold [N...]"
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, usage)
@@ -171,23 +171,13 @@ object Tools {
     * and 10000) it writes a synthetic range-clustered table of N files,
     * indexes it, and times the COLD probe for a selective range, with the
     * rows collected to the driver. With candidate-bounded collection the
-    * driver transfer stays flat as N grows 10×. `--decide N...` times the
-    * decide step alone (driver Seq path vs distributed Df path) on a
-    * synthetic sidecar of N files, where writing N parquet files would
-    * measure the filesystem, not the operator. Every table is written
+    * driver transfer stays flat as N grows 10×. Every table is written
     * under the session's temp root ([[Fixtures.tempDir]]), which is
     * deleted when the run's session stops.
     */
   def sidecarCold(spark: SparkSession, args: Seq[String]): Unit = {
     import graft.model.{SidecarIndex, ZoneMapIndex}
-    val (decideSizes, tableSizes) = args.span(_ != "--tables") match {
-      case (pre, post) if pre.headOption.contains("--decide") =>
-        (pre.drop(1).map(_.toInt), post.drop(1).map(_.toInt))
-      case _ => (Nil, args.map(_.toInt))
-    }
-    val sizes = if (tableSizes.nonEmpty || decideSizes.nonEmpty) tableSizes
-      else Seq(1000, 10000)
-
+    val sizes = if (args.nonEmpty) args.map(_.toInt) else Seq(1000, 10000)
     for (n <- sizes) {
       val dir = Fixtures.tempDir(spark, s"sidecar-cold-$n")
       // n files, file i spanning x in [100i, 100(i+1)) — tight spans, the
@@ -228,50 +218,6 @@ object Tools {
         f"manifest=$covS%6.3fs/$covRows%6d rows " +
         f"cold=$coldS%6.3fs warm=$warmS%6.3fs collected=$collected%4d " +
         f"candidates=${p.candidates.size}%4d pruned=${p.pruned}%6d")
-    }
-
-    // The decide step reads only the sidecar and the live list, never the
-    // data files. Per size: one warm driver-path probe (Seq decide) vs one
-    // warm Df-path probe (SidecarIndex.decideDf — distributed joins,
-    // candidate-bounded collect, liveDf held persisted the way a streaming
-    // sink holds its hot listing).
-    for (n <- decideSizes) {
-      val dir = Fixtures.tempDir(spark, s"sidecar-decide-$n")
-      def fileName = concat(lit(s"$dir/part-"), format_string("%08d", col("id")),
-        lit(".parquet")).as("file")
-      spark.range(n.toLong).select(
-        fileName,
-        lit("x").as("col"),
-        (col("id") * 100).cast("double").as("lo"),
-        (col("id") * 100 + 95).cast("double").as("hi"))
-        .write.mode("overwrite").parquet(
-          SidecarIndex.indexPath(dir, ZoneMapIndex.IndexDirName).toString)
-      val live: Seq[String] = (0L until n.toLong)
-        .map(i => f"$dir%s/part-$i%08d.parquet")
-      val liveDf = spark.range(n.toLong).select(fileName)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      liveDf.count()
-      val mid = n.toLong * 100 / 2
-      val range = Seq(("x", mid.toDouble, (mid + 150).toDouble))
-      // warm both paths: index scan + match cache + manifest populate
-      val seqWarm = ZoneMapIndex.pruneAll(spark, dir, range, live).head
-      val dfWarm = ZoneMapIndex.pruneAllAlignedDf(spark, dir, range, liveDf)
-        .head.get
-      require(seqWarm.candidates.map(SidecarIndex.norm).toSet ==
-        dfWarm.candidates.map(SidecarIndex.norm).toSet &&
-        seqWarm.pruned == dfWarm.pruned &&
-        seqWarm.unindexed == dfWarm.unindexed,
-        s"decide paths disagree at n=$n: $seqWarm vs $dfWarm")
-      val t1 = System.nanoTime()
-      val a = ZoneMapIndex.pruneAll(spark, dir, range, live).head
-      val seqS = (System.nanoTime() - t1) / 1e9
-      val t2 = System.nanoTime()
-      val b = ZoneMapIndex.pruneAllAlignedDf(spark, dir, range, liveDf).head.get
-      val dfS = (System.nanoTime() - t2) / 1e9
-      println(f"[sidecar-decide] files=$n%8d warm_seq=$seqS%7.3fs " +
-        f"warm_df=$dfS%7.3fs candidates=${b.candidates.size}%3d " +
-        f"pruned=${b.pruned}%8d (seq candidates=${a.candidates.size})")
-      liveDf.unpersist()
     }
   }
 }

@@ -52,17 +52,11 @@ object NgramIndex {
   private def indexPath(tablePath: String) =
     SidecarIndex.indexPath(tablePath, IndexDirName)
 
-  private def norm(p: String): String = SidecarIndex.norm(p)
-
-  private def indexExists(spark: SparkSession, tablePath: String): Boolean =
-    SidecarIndex.exists(spark, tablePath, IndexDirName)
-
-  private def readIndex(spark: SparkSession, tablePath: String): DataFrame =
-    SidecarIndex.readCached(spark, tablePath, IndexDirName)
-
-  /** Index every live data file not yet indexed; returns the newly indexed
-    * files. `rebuild = true` starts from scratch (also the way to change
-    * `n`/sizing, and implicitly vacuums dead rows).
+  /** Index every live data file not yet indexed at width `n`; returns the
+    * newly indexed files. Coverage is per width, so a build at a new `n`
+    * indexes every file for it alongside the existing widths.
+    * `rebuild = true` starts from scratch (the way to change sizing or drop
+    * a width, and implicitly vacuums dead rows).
     *
     * `expectedNdv` sizes each per-file bloom for the file's DISTINCT
     * n-gram count: ~0.7·ndv·|ln fpp| bits, so the 1M/2% default is
@@ -91,14 +85,18 @@ object NgramIndex {
     val live: Seq[String] =
       if (partitions.isEmpty) LogSchema.readLogs(spark, tablePath).inputFiles.toSeq
       else SidecarIndex.listFiles(spark.sparkContext.hadoopConfiguration, partitions)
-    // distributed coverage probe ([[SidecarIndex.missingFiles]]): only
-    // the files that actually need indexing come back to the driver —
-    // the index's own rows (file paths at 10⁵–10⁶-file scale) never do
+    // distributed coverage probe ([[SidecarIndex.missingCoverage]]) at
+    // this width: only the files that actually need indexing come back to
+    // the driver — the index's own rows (file paths at 10⁵–10⁶-file scale)
+    // never do
     val todo: Seq[String] =
-      if (rebuild || !indexExists(spark, tablePath)) live
-      else SidecarIndex.missingFiles(spark,
-        SidecarIndex.scopeToPartitions(
-          readIndex(spark, tablePath).select("file"), partitions), live)
+      (if (rebuild) None else SidecarIndex.readCached(spark, tablePath, IndexDirName)) match {
+        case None => live
+        case Some(idx) => SidecarIndex.missingCoverage(spark,
+          SidecarIndex.scopeToPartitions(
+            idx.select(col("file"), col("n").cast("string").as("dim")), partitions),
+          live, Seq(n.toString)).map(_._1)
+      }
     if (todo.isEmpty) return Seq.empty
     val rows = spark.read
       .option("basePath", tablePath)
@@ -136,8 +134,8 @@ object NgramIndex {
       LogSchema.readLogs(spark, tablePath).inputFiles.toSeq)
 
   /** The pruning decision for `needle`, or None when the index cannot help
-    * (missing, or the needle is shorter than the gram width — no gram of
-    * the needle exists to demand of a file).
+    * (missing, holding no row of width `n`, or the needle is shorter than
+    * the gram width — no gram of the needle exists to demand of a file).
     */
   def prune(
       spark: SparkSession,
@@ -154,15 +152,16 @@ object NgramIndex {
     * bloom-verdict column of a single index scan, so a k-needle query pays
     * one Spark job and one cached-index decode instead of k — the probe
     * constant that made the indexed front-end slower than the raw scan at
-    * small SF. Needles too short to produce a gram are skipped (the
-    * returned Seq covers only probe-able needles — each entry is an
-    * independently sound prune, so callers intersect whatever comes back).
+    * small SF. Needles too short to produce a gram, and all needles when
+    * the index holds no row of width `n`, are skipped (the returned Seq
+    * covers only probe-able needles — each entry is an independently
+    * sound prune, so callers intersect whatever comes back).
     * Blooms still never leave the executors, and the verdicts are
     * evaluated DISTRIBUTED: the fused scan filters to rows some needle
     * could not rule out, so the collect is bounded by the CANDIDATE
     * count, not the file count (the coverage manifest — (width, file)
     * string pairs, one collect per index generation — reconciles
-    * unindexed files; see [[SidecarIndex.coverage]]). `live` is by-name:
+    * unindexed files; see [[SidecarIndex.probe]]). `live` is by-name:
     * no table listing is paid when the index is missing or no needle is
     * probe-able.
     */
@@ -173,40 +172,14 @@ object NgramIndex {
       live: => Seq[String],
       n: Int = 4): Seq[Pruning] = {
     GraftFunctions.registerAll(spark)
-    if (needles.isEmpty || !indexExists(spark, tablePath)) return Nil
-    val keyed: Seq[(String, Array[Long])] = needles
-      .map(nd => (nd, NgramHash.needleHashes(nd, n)))
-      .filter(_._2.nonEmpty)
-    if (keyed.isEmpty) return Nil
     // probe identity = gram width + the needle's gram hashes (what the
     // scan actually evaluates), so equal-hash probes share a cache row
-    val byKey: Map[String, Array[Long]] =
-      keyed.map { case (_, hs) => s"n$n:${hs.mkString(",")}" -> hs }.toMap
-    val probeKeys = keyed.map { case (_, hs) => s"n$n:${hs.mkString(",")}" }
-    val matches = SidecarIndex.probeCached(
-        spark, tablePath, IndexDirName, probeKeys) { missing =>
-      val cols = missing.zipWithIndex.map { case (k, i) =>
-        NgramBloomExprs.bloomContainsAll(col("bloom"), byKey(k)).as(s"ok$i")
-      }
-      val anyOk = missing.indices.map(i => col(s"ok$i")).reduce(_ or _)
-      val rows = readIndex(spark, tablePath).where(col("n") === lit(n))
-        .select(col("file") +: cols: _*)
-        .where(anyOk) // all-needles-reject rows never reach the driver
-        .collect()
-      SidecarIndex.lastProbeCollected.set(rows.length.toLong)
-      missing.zipWithIndex.map { case (k, i) =>
-        k -> rows.collect {
-          case r if r.getBoolean(i + 1) => norm(r.getString(0))
-        }.toSet
-      }.toMap
-    }
-    val covered = SidecarIndex
-      .coverage(spark, tablePath, IndexDirName, "n")
-      .getOrElse(n.toString, Set.empty)
-    val liveList = live
-    // the computeMissing above answers every key, so .get never misses
-    probeKeys.map(k =>
-      SidecarIndex.decide(matches(k).getOrElse(Set.empty), covered, liveList))
+    val probes = needles
+      .map(nd => NgramHash.needleHashes(nd, n))
+      .filter(_.nonEmpty)
+      .map(hs => (s"n$n:${hs.mkString(",")}", n,
+        NgramBloomExprs.bloomContainsAll(col("bloom"), hs)))
+    SidecarIndex.probe(spark, tablePath, IndexDirName, "n", probes, live).flatten
   }
 
   /** Substring search over the table's `log` column, skip-reading via the

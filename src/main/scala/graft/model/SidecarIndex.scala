@@ -1,11 +1,13 @@
 package graft.model
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
 
 /** The shared skeleton of a file-level skip index stored as a parquet
   * sidecar inside the table directory (underscore-prefixed, so Spark's
   * listing never surfaces it to table reads): path/identity conventions,
-  * existence/read, and the stage-then-swap vacuum. [[NgramIndex]]
+  * the fused probe with its per-generation cache, coverage for the
+  * incremental builds, and the stage-then-swap vacuum. [[NgramIndex]]
   * (ngrambf-style bloom) and [[ZoneMapIndex]] (minmax) are the two
   * instances; a fix to the swap or normalization logic lands in both by
   * construction.
@@ -39,7 +41,7 @@ private[graft] object SidecarIndex {
     * staged-present can only mean the crash fell between vacuum's two
     * renames — promote the staged dir and carry on. (Same protocol as
     * [[DedupIndex]]'s table vacuum.) Every read path funnels through
-    * [[exists]]/[[read]], so recovery is automatic on the next probe.
+    * [[indexFiles]], so recovery is automatic on the next probe.
     */
   private def recover(
       spark: SparkSession, tablePath: String, dirName: String): Unit = {
@@ -54,225 +56,186 @@ private[graft] object SidecarIndex {
         s"sidecar vacuum recovery failed: $staged -> $ip")
   }
 
-  def exists(spark: SparkSession, tablePath: String, dirName: String): Boolean = {
-    recover(spark, tablePath, dirName)
-    val p = indexPath(tablePath, dirName)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet"))
-  }
-
-  def read(spark: SparkSession, tablePath: String, dirName: String): DataFrame = {
-    recover(spark, tablePath, dirName)
-    spark.read.parquet(indexPath(tablePath, dirName).toString)
-  }
-
-  /** [[read]] with an executor-side cache keyed by the index dir's
-    * GENERATION — the (name, length, mtime) signature of its files, one
-    * cheap listing per probe (parquet writes always create fresh file
-    * names, so any build/vacuum changes the signature and the next probe
-    * transparently re-reads). The frame is `persist`ed MEMORY_AND_DISK:
-    * bloom byte arrays stay on executors, repeated probes of a hot table
-    * skip the parquet decode that dominated the indexed-probe constant.
-    * Stopped-session and stale-generation entries are dropped from the
-    * map on the next access; the fast path is one lock-free map read +
-    * one listing.
-    *
-    * The cache is keyed by (session, path) — two sessions probing the same
-    * table each keep their own persisted copy rather than evicting each
-    * other on every access. Within one session, a generation change
-    * unpersists the prior entry non-blocking — eagerness is a CORRECTNESS
-    * requirement, not hygiene: the CacheManager would otherwise substitute
-    * the stale registered InMemoryRelation into every later read of the
-    * path (see the eviction comment below). A probe still EXECUTING
-    * against that entry at that instant recomputes from the file list its
-    * plan captured at creation, so it either completes on the old files or
-    * fails loudly if maintenance removed them — it never silently mixes
-    * generations (index builds/vacuums are maintenance operations; run
-    * one writer per table at a time). Two-session and cross-generation
-    * concurrency is exercised by ZoneMapSpec's hammer test.
+  /** The index dir's parquet files after [[recover]]; empty when the
+    * index does not exist.
     */
-  /** The index dir's generation signature — the (name, length, mtime) of
-    * its files, one cheap listing. Parquet writes always create fresh
-    * file names, so any build/vacuum changes the signature; both the
-    * frame cache and the verdict cache validate against it.
-    */
-  def signature(
-      spark: SparkSession, tablePath: String, dirName: String): Seq[(String, Long, Long)] = {
+  private def indexFiles(spark: SparkSession, tablePath: String, dirName: String)
+    : Seq[org.apache.hadoop.fs.FileStatus] = {
+    recover(spark, tablePath, dirName)
     val ip = indexPath(tablePath, dirName)
     val fs = ip.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(ip).toSeq
-      .map(st => (st.getPath.getName, st.getLen, st.getModificationTime))
-      .sortBy(_._1)
+    if (!fs.exists(ip)) Nil
+    else fs.listStatus(ip).toSeq.filter(_.getPath.getName.endsWith(".parquet"))
   }
 
-  def readCached(spark: SparkSession, tablePath: String, dirName: String): DataFrame = {
-    recover(spark, tablePath, dirName)
-    val ip = indexPath(tablePath, dirName)
-    val sig = signature(spark, tablePath, dirName)
-    val key = (System.identityHashCode(spark).toLong, ip.toString)
-    readCache.get(key) match {
-      case Some((owner, s0, df))
-          if (owner eq spark) && !owner.sparkContext.isStopped && s0 == sig =>
-        df
-      case _ => readCache.synchronized {
-        // re-check under the lock; evict whatever lost the race or went stale
-        readCache.get(key) match {
-          case Some((owner, s0, df))
-              if (owner eq spark) && !owner.sparkContext.isStopped && s0 == sig =>
-            df
-          case prior =>
-            // Stale generations MUST be unpersisted eagerly (non-blocking),
-            // not lazily abandoned to the ContextCleaner: persist()
-            // registers the frame's analyzed plan with the session's
-            // CacheManager, which SUBSTITUTES the cached InMemoryRelation
-            // into ANY later read of the same path — leave the stale entry
-            // registered and the post-rebuild re-read (and even the
-            // uncached `read`) silently serves the PREVIOUS generation's
-            // rows (reproduced: vacuum convergence broke under lazy
-            // abandon). The unpersist is non-blocking; a probe still
-            // executing against the old frame recomputes from the file
-            // list its plan captured, completing on the old files or
-            // failing loudly if maintenance removed them — never silently
-            // mixing generations (single maintenance writer per table).
-            prior.foreach { case (owner, _, df) =>
-              if (!owner.sparkContext.isStopped) {
-                try df.unpersist(false)
-                catch { case scala.util.control.NonFatal(_) => }
-              }
-            }
-            // drop entries whose session has stopped (their blocks are
-            // gone with the context; the map rows would otherwise pin
-            // dead sessions forever)
-            readCache.filterInPlace { case (_, (owner, _, _)) =>
-              !owner.sparkContext.isStopped
-            }
-            val df = spark.read.parquet(ip.toString)
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            readCache.put(key, (spark, sig, df))
-            df
-        }
-      }
-    }
-  }
-
-  private val readCache = scala.collection.concurrent.TrieMap
-    .empty[(Long, String), (SparkSession, Seq[(String, Long, Long)], DataFrame)]
-
-  /** Per-probe MATCH SETS memoized against the index generation: a
-    * repeated probe (dashboards re-issuing the same needles / ranges —
-    * the reference UI's refresh loop is exactly this) pays the
-    * distributed index scan once per index GENERATION, not once per
-    * query. Sound because a match set is a pure function of the index
-    * contents — the live file list, which DOES drift with ingest, stays
-    * outside the cache and is re-combined by [[decide]] on every probe.
-    * Entries validate against the same file signature as [[readCached]]
-    * (any build/vacuum invalidates on the next probe); dead-session and
-    * over-cap entries are dropped on miss, so a long-lived session
-    * issuing unbounded distinct probes cannot hoard driver state.
+  /** One index dir's GENERATION as one session sees it: the persisted
+    * index frame, the coverage manifest per dim column and the match sets
+    * of recent probes. A generation is keyed by the (name, length, mtime)
+    * signature of the dir's files, one cheap listing per probe: parquet
+    * writes always create fresh file names, so any build/vacuum changes
+    * the signature and the next probe transparently starts a new
+    * generation.
     *
-    * A key's value is the set of NORMALIZED index-covered file paths the
-    * probe could NOT rule out — the only rows the cold scan collects, so
-    * per-probe driver transfer is bounded by the CANDIDATE count, not the
-    * file count (the selective case is exactly the one that matters at
-    * 10⁵–10⁶ files; an unselective probe degrades to the file count,
-    * which is what it would have to read anyway). Files the index does
-    * not cover are reconciled by [[decide]] against [[coverage]]'s
-    * per-generation manifest.
-    *
-    * `probeKeys` identify the probes (duplicates collapse); `computeMissing`
-    * receives only the keys absent from cache and returns their match sets
-    * in ONE fused index scan — a key it omits (e.g. an unindexed column)
-    * is cached and RETURNED as `None`, so the scan is not repeated for it
-    * and callers see the same shape on cold and cached probes.
+    * The frame is `persist`ed MEMORY_AND_DISK: bloom byte arrays stay on
+    * executors, repeated probes of a hot table skip the parquet decode
+    * that dominated the indexed-probe constant. The CacheManager is shared
+    * by every session of a context and keys by plan, so sessions probing
+    * the same generation share one persisted copy.
     */
-  def probeCached(
-      spark: SparkSession,
-      tablePath: String,
-      dirName: String,
-      probeKeys: Seq[String])(
-      computeMissing: Seq[String] => Map[String, Set[String]])
-    : Map[String, Option[Set[String]]] = {
-    val ip = indexPath(tablePath, dirName).toString
-    val sid = System.identityHashCode(spark).toLong
-    val sig = signature(spark, tablePath, dirName)
-    val distinct = probeKeys.distinct
-    val hit = distinct.flatMap { k =>
-      matchCache.get((sid, ip, k)) match {
-        case Some((owner, s0, v)) if (owner eq spark) && s0 == sig =>
-          Some(k -> v)
-        case _ => None
+  private final class Generation(val frame: DataFrame) {
+    private val manifests = scala.collection.mutable.Map.empty[String, Map[String, Set[String]]]
+    private val matches = scala.collection.mutable.Map.empty[String, Set[String]]
+
+    /** The COVERAGE MANIFEST for `dimCol` (the gram width for
+      * [[NgramIndex]], the column name for [[ZoneMapIndex]]): per dim
+      * value, the set of normalized file paths the index covers. One
+      * collect of (dim, file) STRING pairs per generation — the
+      * blooms/bounds never ship — the same order of driver state as the
+      * live file listing every caller already holds (Spark's own listing),
+      * amortized across every probe of the generation. This is what lets
+      * a probe's own collect stay candidate-bounded: [[decide]] derives
+      * the unindexed set from the manifest instead of from per-file
+      * verdict rows.
+      */
+    def coverage(dimCol: String): Map[String, Set[String]] =
+      manifests.synchronized(manifests.getOrElseUpdate(dimCol,
+        frame.select(col(dimCol).cast("string"), col("file")).distinct().collect()
+          .groupBy(_.getString(0))
+          .map { case (dim, rs) => dim -> rs.map(r => norm(r.getString(1))).toSet }))
+
+    /** Per-probe MATCH SETS memoized for the generation: a repeated probe
+      * (dashboards re-issuing the same needles / ranges — the reference
+      * UI's refresh loop is exactly this) pays the distributed index scan
+      * once per index GENERATION, not once per query. Sound because a
+      * match set is a pure function of the index contents — the live file
+      * list, which DOES drift with ingest, stays outside the cache and is
+      * re-combined by [[decide]] on every probe. Past [[MatchCacheCap]]
+      * entries only the current probe's keys are kept, so a long-lived
+      * session issuing unbounded distinct probes cannot hoard driver state.
+      *
+      * `scan` receives only the keys absent from cache and returns their
+      * match sets in ONE fused index scan.
+      */
+    def matchSets(keys: Seq[String])(
+        scan: Seq[String] => Map[String, Set[String]]): Map[String, Set[String]] = {
+      val hit = matches.synchronized(keys.flatMap(k => matches.get(k).map(k -> _)).toMap)
+      val missing = keys.distinct.filterNot(hit.contains)
+      if (missing.isEmpty) return hit
+      val computed = scan(missing)
+      matches.synchronized {
+        matches ++= computed
+        if (matches.size > MatchCacheCap) matches.filterInPlace((k, _) => keys.contains(k))
       }
-    }.toMap
-    val missing = distinct.filterNot(hit.contains)
-    if (missing.isEmpty) return hit
-    val computed = computeMissing(missing)
-    val all: Map[String, Option[Set[String]]] =
-      missing.map(k => k -> computed.get(k)).toMap
-    all.foreach { case (k, v) =>
-      matchCache.put((sid, ip, k), (spark, sig, v))
+      hit ++ computed
     }
-    matchCache.filterInPlace { case ((s, p, _), (owner, s0, _)) =>
-      !owner.sparkContext.isStopped &&
-        // stale generations of this index die now; other indexes keep theirs
-        (s != sid || p != ip || s0 == sig)
-    }
-    if (matchCache.count { case ((s, p, _), _) => s == sid && p == ip }
-        > MatchCacheCap) {
-      val keep = distinct.toSet
-      matchCache.filterInPlace { case ((s, p, k), _) =>
-        s != sid || p != ip || keep(k)
-      }
-    }
-    hit ++ all
   }
 
   private val MatchCacheCap = 64
-  private val matchCache = scala.collection.concurrent.TrieMap
-    .empty[(Long, String, String),
-      (SparkSession, Seq[(String, Long, Long)], Option[Set[String]])]
 
-  /** The index's COVERAGE MANIFEST, memoized against the generation: for
-    * each value of `dimCol` (the gram width for [[NgramIndex]], the column
-    * name for [[ZoneMapIndex]]), the set of normalized file paths the
-    * index covers. One collect of (dim, file) STRING pairs per generation
-    * — the blooms/bounds never ship — the same order of driver state as
-    * the live file listing every caller already holds (Spark's own
-    * listing), amortized across every probe of the generation. This is
-    * what lets a probe's own collect stay candidate-bounded: [[decide]]
-    * derives the unindexed set from the manifest instead of from per-file
-    * verdict rows.
+  // keyed by (index dir, signature): a new signature is a new generation
+  private val generations =
+    new graft.SessionCache[(String, Seq[(String, Long, Long)]), Generation]()
+
+  /** The dir's current generation in this session, or None when the index
+    * does not exist; lists the dir once.
+    *
+    * Starting a generation unpersists every older generation of the dir
+    * (in every session) eagerly, non-blocking, BEFORE the new frame
+    * persists. Eagerness is a CORRECTNESS requirement, not hygiene:
+    * persist() registers the frame's analyzed plan with the CacheManager,
+    * which SUBSTITUTES the cached InMemoryRelation into ANY later read of
+    * the same path — leave the stale entry registered and the
+    * post-rebuild re-read (and even an uncached `spark.read`) silently serves
+    * the PREVIOUS generation's rows (reproduced: vacuum convergence broke
+    * under lazy abandon). A probe still executing against the old frame
+    * recomputes from the file list its plan captured, completing on the
+    * old files or failing loudly if maintenance removed them — never
+    * silently mixing generations (index builds/vacuums are maintenance
+    * operations; run one writer per table at a time). Two-session and
+    * cross-generation concurrency is exercised by ZoneMapSpec's hammer
+    * test. Releasing a session drops its generations without unpersisting:
+    * another session may be reading the same registered frame.
+    */
+  private def generation(
+      spark: SparkSession, tablePath: String, dirName: String): Option[Generation] = {
+    val files = indexFiles(spark, tablePath, dirName)
+    if (files.isEmpty) return None
+    val dir = indexPath(tablePath, dirName).toString
+    val sig = files.map(st => (st.getPath.getName, st.getLen, st.getModificationTime))
+      .sortBy(_._1)
+    Some(generations(spark, (dir, sig)) {
+      generations.invalidate({ case (d, s) => d == dir && s != sig },
+        _.frame.unpersist(blocking = false))
+      new Generation(spark.read.parquet(dir)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    })
+  }
+
+  /** The current generation's persisted index frame, or None when the
+    * index does not exist.
+    */
+  def readCached(
+      spark: SparkSession, tablePath: String, dirName: String): Option[DataFrame] =
+    generation(spark, tablePath, dirName).map(_.frame)
+
+  /** [[Generation.coverage]] of the current generation; empty when the
+    * index does not exist.
     */
   def coverage(
       spark: SparkSession,
       tablePath: String,
       dirName: String,
-      dimCol: String): Map[String, Set[String]] = {
-    val ip = indexPath(tablePath, dirName).toString
-    val sid = System.identityHashCode(spark).toLong
-    val sig = signature(spark, tablePath, dirName)
-    manifestCache.get((sid, ip, dimCol)) match {
-      case Some((owner, s0, m)) if (owner eq spark) && s0 == sig => m
-      case _ =>
-        import org.apache.spark.sql.functions.col
-        val rows = readCached(spark, tablePath, dirName)
-          .select(col(dimCol).cast("string"), col("file"))
-          .distinct()
-          .collect()
-        val m = rows.groupBy(_.getString(0)).map { case (dim, rs) =>
-          dim -> rs.map(r => norm(r.getString(1))).toSet
-        }
-        manifestCache.put((sid, ip, dimCol), (spark, sig, m))
-        manifestCache.filterInPlace { case ((s, p, _), (owner, s0, _)) =>
-          !owner.sparkContext.isStopped &&
-            (s != sid || p != ip || s0 == sig)
-        }
-        m
+      dimCol: String): Map[String, Set[String]] =
+    generation(spark, tablePath, dirName).fold(Map.empty[String, Set[String]])(_.coverage(dimCol))
+
+  /** One FUSED probe of an index: element i answers `probes(i)`, a
+    * `(key, dim, verdict)` triple, or is None where the index cannot help
+    * (it is missing, or covers no file for that dim). `key` identifies the
+    * probe in the generation's match cache (duplicates collapse); `verdict`
+    * is true on an index row whose file the probe cannot rule out.
+    *
+    * Every uncached probe becomes one `ok$i` column of a single scan of the
+    * rows of the probed dims, so k probes cost one Spark job, and the scan
+    * keeps only rows some probe could not rule out: per-probe driver
+    * transfer is bounded by the CANDIDATE count, not the file count (the
+    * selective case is exactly the one that matters at 10⁵–10⁶ files; an
+    * unselective probe degrades to the file count, which is what it would
+    * have to read anyway). Files the index does not cover are reconciled
+    * by [[decide]] against the manifest. `live` is by-name: no table
+    * listing is paid when the index is missing or cannot answer.
+    */
+  def probe(
+      spark: SparkSession,
+      tablePath: String,
+      dirName: String,
+      dimCol: String,
+      probes: Seq[(String, Any, Column)],
+      live: => Seq[String]): Seq[Option[Pruning]] = {
+    val gen = if (probes.isEmpty) None else generation(spark, tablePath, dirName)
+    val covered = gen.fold(Map.empty[String, Set[String]])(_.coverage(dimCol))
+    val answerable = probes.filter { case (_, dim, _) => covered.contains(dim.toString) }
+    if (answerable.isEmpty) return probes.map(_ => None)
+    val g = gen.get
+    val matches = g.matchSets(answerable.map(_._1)) { missing =>
+      val scanned = missing.map(answerable.map(p => p._1 -> p).toMap)
+      val oks = scanned.zipWithIndex.map { case ((_, dim, verdict), i) =>
+        (col(dimCol) === lit(dim) && verdict).as(s"ok$i")
+      }
+      val rows = g.frame
+        .where(col(dimCol).isin(scanned.map(_._2).distinct: _*))
+        .select(col("file") +: oks: _*)
+        .where(scanned.indices.map(i => col(s"ok$i")).reduce(_ or _))
+        .collect()
+      lastProbeCollected.set(rows.length.toLong)
+      scanned.zipWithIndex.map { case ((k, _, _), i) =>
+        k -> rows.collect { case r if r.getBoolean(i + 1) => norm(r.getString(0)) }.toSet
+      }.toMap
+    }
+    lazy val liveList = live
+    probes.map { case (k, dim, _) =>
+      matches.get(k).map(decide(_, covered(dim.toString), liveList))
     }
   }
-
-  private val manifestCache = scala.collection.concurrent.TrieMap
-    .empty[(Long, String, String),
-      (SparkSession, Seq[(String, Long, Long)], Map[String, Set[String]])]
 
   /** Driver rows collected by the most recent COLD index probe in this
     * process (test/bench telemetry only — racy across concurrent probes
@@ -311,7 +274,6 @@ private[graft] object SidecarIndex {
     * collected set proportional to the partitions being probed.
     */
   def scopeToPartitions(idx: DataFrame, partitions: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.col
     if (partitions.isEmpty) idx
     else partitions
       .map(d => "/" + new org.apache.hadoop.fs.Path(d).getName + "/")
@@ -319,43 +281,28 @@ private[graft] object SidecarIndex {
       .reduce(_ unionAll _)
   }
 
-  /** Live files with NO index coverage, via a distributed anti-join —
-    * unlike a collect-the-index-and-diff, the index's rows never visit
-    * the driver; only the MISSING files come back (bounded by the files
-    * that actually need work — normally the fresh ingest since the last
-    * build, while the live list itself is driver-side in the caller
-    * already, like Spark's own file listing). Returned paths are the
-    * caller's original (un-normalized) ones, ready for a parquet read.
-    */
-  def missingFiles(
-      spark: SparkSession, idxKeys: DataFrame, live: Seq[String]): Seq[String] = {
-    import org.apache.spark.sql.functions.col
-    val sp = spark
-    import sp.implicits._
-    val wanted = live.map(norm).toDF("file")
-    val idxN = idxKeys.select(normFile(col("file")).as("file")).distinct()
-    val missing = wanted.join(idxN, Seq("file"), "left_anti")
-      .collect().map(_.getString(0)).toSet
-    live.filter(f => missing(norm(f)))
-  }
-
-  /** Per-(file, column) variant of [[missingFiles]] for indexes whose
-    * coverage is column-granular: returns, per original live path, the
-    * subset of `cols` the index does not cover for it (absent = fully
-    * covered). Same anti-join shape — index rows stay on executors.
+  /** What the index does not cover, via a distributed anti-join: per
+    * original live path, the subset of `dims` the index holds no row for
+    * (absent = fully covered). `idxKeys` carries `file` and the dim as a
+    * string column `dim` (the gram width, the column name). Unlike a
+    * collect-the-index-and-diff, the index's rows never visit the driver;
+    * only the MISSING pairs come back (bounded by the files that actually
+    * need work — normally the fresh ingest since the last build, while
+    * the live list itself is driver-side in the caller already, like
+    * Spark's own file listing). Returned paths are the caller's original
+    * (un-normalized) ones, ready for a parquet read.
     */
   def missingCoverage(
       spark: SparkSession,
       idxKeys: DataFrame,
       live: Seq[String],
-      cols: Seq[String]): Seq[(String, Set[String])] = {
-    import org.apache.spark.sql.functions.col
+      dims: Seq[String]): Seq[(String, Set[String])] = {
     val sp = spark
     import sp.implicits._
     val byNorm = live.map(f => norm(f) -> f).toMap
-    val wanted = live.map(norm).toDF("file").crossJoin(cols.toDF("col"))
-    val idxN = idxKeys.select(normFile(col("file")).as("file"), col("col"))
-    wanted.join(idxN, Seq("file", "col"), "left_anti")
+    val wanted = (for (f <- live; d <- dims) yield (norm(f), d)).toDF("file", "dim")
+    val idxN = idxKeys.select(normFile(col("file")).as("file"), col("dim"))
+    wanted.join(idxN, Seq("file", "dim"), "left_anti")
       .collect()
       .groupBy(_.getString(0)).toSeq
       .map { case (f, rs) => byNorm(f) -> rs.map(_.getString(1)).toSet }
@@ -369,107 +316,12 @@ private[graft] object SidecarIndex {
     * surface). Both sets hold NORMALIZED paths ([[norm]]); `live` keeps
     * the caller's original paths, ready for a parquet read.
     */
-  def decide(
+  private def decide(
       matches: Set[String], covered: Set[String], live: Seq[String]): Pruning = {
     val (known, unindexed) = live.partition(f => covered(norm(f)))
     val candidates = known.filter(f => matches(norm(f))) ++ unindexed
     Pruning(candidates, pruned = (live.size - candidates.size).toLong,
       unindexed = unindexed.size.toLong)
-  }
-
-  /** The distinct dim values the index covers AT ALL — the collect is
-    * bounded by the dim domain (a handful of columns / gram widths), so
-    * unlike [[coverage]] it never transfers O(files) strings. The
-    * Df-based probe path uses this for the "is this column indexed?"
-    * test and [[coverageDf]] for file membership, so NOTHING in that
-    * path is O(files) on the driver.
-    */
-  def coverageDims(
-      spark: SparkSession, tablePath: String, dirName: String,
-      dimCol: String): Set[String] = {
-    import org.apache.spark.sql.functions.col
-    readCached(spark, tablePath, dirName)
-      .select(col(dimCol).cast("string")).distinct()
-      .collect().map(_.getString(0)).toSet
-  }
-
-  /** [[coverage]]'s DISTRIBUTED form: the (dim, normalized file) frame,
-    * derived from the generation-cached persisted index scan — never
-    * collected. [[decideDf]] joins against it executor-side.
-    */
-  def coverageDf(
-      spark: SparkSession, tablePath: String, dirName: String,
-      dimCol: String): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    readCached(spark, tablePath, dirName)
-      .select(col(dimCol).cast("string").as("dim"),
-        normFile(col("file")).as("file"))
-      .distinct()
-  }
-
-  /** [[listFiles]] as a DISTRIBUTED listing: partition dirs are
-    * parallelized and each task lists its own dirs, so a 10⁶-file table
-    * never materializes its listing on the driver — the frame feeds
-    * [[decideDf]] (and can be persisted by a caller that probes the same
-    * generation repeatedly, the way a streaming sink holds its hot
-    * partitions).
-    */
-  def listFilesDf(spark: SparkSession, dirs: Seq[String]): DataFrame = {
-    val sp = spark
-    import sp.implicits._
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    val n = math.max(1, math.min(dirs.size,
-      spark.sparkContext.defaultParallelism))
-    spark.createDataset(dirs).repartition(n)
-      .flatMap { dir =>
-        val p = new org.apache.hadoop.fs.Path(dir)
-        val fs = p.getFileSystem(conf.value)
-        if (!fs.exists(p)) Iterator.empty
-        else fs.listStatus(p).iterator.collect {
-          case f if f.isFile && !f.getPath.getName.startsWith(".") &&
-            !f.getPath.getName.startsWith("_") => f.getPath.toString
-        }
-      }.toDF("file")
-  }
-
-  /** [[decide]] OFF the driver: the same staleness contract — unindexed
-    * live files are always candidates, index rows for dead files are
-    * ignored — but coverage membership and the match filter run as
-    * distributed joins over the live-file FRAME, so per-probe driver
-    * work is bounded by the CANDIDATE count (the collect below) instead
-    * of O(live files) of set lookups and Path normalizations (measured
-    * ~6 µs/file — ~6 s per probe at 10⁶ files; SCALING.md). `matches`
-    * is candidate-bounded by [[probeCached]]'s contract, so it
-    * broadcasts. `coveredForDim` carries the NORMALIZED `file` column
-    * for ONE dim ([[coverageDf]] filtered); `liveCount` is the caller's
-    * (one count per probe batch, shared across ranges).
-    */
-  def decideDf(
-      spark: SparkSession,
-      matches: Set[String],
-      coveredForDim: DataFrame,
-      liveDf: DataFrame,
-      liveCount: Long): Pruning = {
-    import org.apache.spark.sql.functions.{broadcast, col, lit}
-    val sp = spark
-    import sp.implicits._
-    val liveN = liveDf.select(col("file").as("orig"),
-      normFile(col("file")).as("file"))
-    val cov = coveredForDim.select(col("file"))
-    val unindexed = liveN.join(cov, Seq("file"), "left_anti")
-      .select(col("orig"), lit(true).as("un"))
-    val matchedKnown =
-      if (matches.isEmpty)
-        spark.emptyDataset[(String, Boolean)].toDF("orig", "un")
-      else liveN
-        .join(cov, Seq("file"), "left_semi")
-        .join(broadcast(matches.toSeq.toDF("file")), Seq("file"), "left_semi")
-        .select(col("orig"), lit(false).as("un"))
-    val rows = matchedKnown.unionAll(unindexed).collect()
-    val candidates = rows.map(_.getString(0)).toSeq
-    val nUnindexed = rows.count(_.getBoolean(1)).toLong
-    Pruning(candidates, pruned = liveCount - candidates.size, nUnindexed)
   }
 
   /** Drop index rows whose data file no longer exists (post-compaction /
@@ -499,8 +351,8 @@ private[graft] object SidecarIndex {
       dirName: String,
       liveFiles: => Seq[String],
       targetBytes: Long = 128L << 20): Long = {
-    if (!exists(spark, tablePath, dirName)) return 0L
-    import org.apache.spark.sql.functions.{broadcast, col}
+    if (indexFiles(spark, tablePath, dirName).isEmpty) return 0L
+    import org.apache.spark.sql.functions.broadcast
     val ip = indexPath(tablePath, dirName)
     val fs = ip.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val staged = stagedPath(tablePath, dirName)
@@ -510,7 +362,7 @@ private[graft] object SidecarIndex {
     import sp.implicits._
     val live = broadcast(
       liveFiles.map(norm).toDF("_live_file"))
-    val idx = read(spark, tablePath, dirName)
+    val idx = spark.read.parquet(ip.toString)
     val keyed = idx.withColumn("_nf", normFile(col("file")))
     val dead = keyed
       .join(live, keyed("_nf") === live("_live_file"), "left_anti").count()

@@ -52,14 +52,6 @@ object ZoneMapIndex {
   type Pruning = SidecarIndex.Pruning
   val Pruning = SidecarIndex.Pruning
 
-  private def norm(p: String): String = SidecarIndex.norm(p)
-
-  private def indexExists(spark: SparkSession, tablePath: String): Boolean =
-    SidecarIndex.exists(spark, tablePath, IndexDirName)
-
-  private def readIndex(spark: SparkSession, tablePath: String): DataFrame =
-    SidecarIndex.readCached(spark, tablePath, IndexDirName)
-
   private def tableFiles(spark: SparkSession, tablePath: String): Seq[String] =
     spark.read.parquet(tablePath).inputFiles.toSeq
 
@@ -91,12 +83,13 @@ object ZoneMapIndex {
     // so the index's own rows never land on the driver — only the files
     // that actually need work come back
     val missingByFile: Seq[(String, Set[String])] =
-      if (rebuild || !indexExists(spark, tablePath))
-        live.map(f => f -> cols.toSet)
-      else SidecarIndex.missingCoverage(spark,
-        SidecarIndex.scopeToPartitions(
-          readIndex(spark, tablePath).select("file", "col"), partitions),
-        live, cols)
+      (if (rebuild) None else SidecarIndex.readCached(spark, tablePath, IndexDirName)) match {
+        case None => live.map(f => f -> cols.toSet)
+        case Some(idx) => SidecarIndex.missingCoverage(spark,
+          SidecarIndex.scopeToPartitions(
+            idx.select(col("file"), col("col").as("dim")), partitions),
+          live, cols)
+      }
     if (missingByFile.isEmpty) return Seq.empty
     val out = SidecarIndex.indexPath(tablePath, IndexDirName).toString
     for ((missing, files) <- missingByFile.groupBy(_._2)
@@ -156,21 +149,8 @@ object ZoneMapIndex {
       colName: String,
       lo: Double,
       hi: Double): Option[Pruning] =
-    pruneAgainst(spark, tablePath, colName, lo, hi,
-      tableFiles(spark, tablePath))
-
-  /** [[prune]] with the live file list supplied by a caller that already
-    * has it — [[rangeScan]] builds the full-table frame anyway, so the
-    * table is listed once per scan, not twice.
-    */
-  private def pruneAgainst(
-      spark: SparkSession,
-      tablePath: String,
-      colName: String,
-      lo: Double,
-      hi: Double,
-      live: => Seq[String]): Option[Pruning] =
-    pruneAll(spark, tablePath, Seq((colName, lo, hi)), live).headOption
+    pruneAll(spark, tablePath, Seq((colName, lo, hi)),
+      tableFiles(spark, tablePath)).headOption
 
   /** [[prune]] for SEVERAL `(column, lo, hi)` ranges in ONE index pass
     * against a live file list the caller already holds: the sidecar is
@@ -185,8 +165,8 @@ object ZoneMapIndex {
     * The verdicts are evaluated DISTRIBUTED: the fused scan filters to
     * rows some range could not rule out, so the collect is bounded by the
     * CANDIDATE count, not the file count; unindexed files are reconciled
-    * from [[SidecarIndex.coverage]]'s per-generation manifest. `live` is
-    * by-name: no table listing is paid when the index is missing.
+    * from the per-generation coverage manifest ([[SidecarIndex.probe]]).
+    * `live` is by-name: no table listing is paid when the index is missing.
     */
   def pruneAll(
       spark: SparkSession,
@@ -209,146 +189,23 @@ object ZoneMapIndex {
         "a NaN query bound matches nothing under range semantics (NaN " +
           "satisfies no between predicate) — filter NaN explicitly instead")
     }
-    if (ranges.isEmpty || !indexExists(spark, tablePath))
-      return Seq.fill(ranges.size)(None)
-    val covered = SidecarIndex.coverage(spark, tablePath, IndexDirName, "col")
     // probe identity = column + the exact ulp-widened bounds the verdicts
     // are computed against (raw bits, so -0.0/0.0 and every double are
-    // distinct); an unindexed column is cached as a NEGATIVE (None) —
-    // kept out of the result below, matching [[prune]]'s None — decided
-    // from the manifest alone, so it never costs an index scan
-    def key(colName: String, lo: Double, hi: Double) =
-      s"$colName:${java.lang.Double.doubleToRawLongBits(lo)}:" +
-        s"${java.lang.Double.doubleToRawLongBits(hi)}"
-    val byKey = ranges.map { case (c, lo, hi) => key(c, lo, hi) -> ((c, lo, hi)) }.toMap
-    val probeKeys = ranges.map { case (c, lo, hi) => key(c, lo, hi) }
-    val matches = SidecarIndex.probeCached(
-        spark, tablePath, IndexDirName, probeKeys) { missing =>
-      val answerable = missing.filter(k =>
-        covered.getOrElse(byKey(k)._1, Set.empty).nonEmpty)
-      if (answerable.isEmpty) Map.empty
-      else {
-        val wanted = answerable.map(k => byKey(k)._1).distinct
-        // a row SURVIVES for a range when the index cannot rule its file
-        // out: null bounds = no non-null non-NaN values = prunable (drop);
-        // NaN bounds can only come from an index built before [[build]]
-        // stripped NaN — they carry no range information, so the file
-        // must be scanned, never pruned (belt-and-braces with the
-        // build-side exclusion; a rebuild restores tight bounds)
-        def okFor(colName: String, lo: Double, hi: Double) = {
-          val qlo = Math.nextDown(lo)
-          val qhi = Math.nextUp(hi)
-          col("col") === lit(colName) &&
-            col("lo").isNotNull && col("hi").isNotNull &&
-            (isnan(col("lo")) || isnan(col("hi")) ||
-              (col("hi") >= lit(qlo) && col("lo") <= lit(qhi)))
-        }
-        val conds = answerable.map { k =>
-          val (c, lo, hi) = byKey(k); k -> okFor(c, lo, hi)
-        }
-        val rows = readIndex(spark, tablePath)
-          .where(col("col").isin(wanted: _*))
-          .select(col("file") +: col("col") +:
-            conds.zipWithIndex.map { case ((_, c), i) => c.as(s"ok$i") }: _*)
-          .where(conds.indices.map(i => col(s"ok$i")).reduce(_ or _))
-          .collect()
-        SidecarIndex.lastProbeCollected.set(rows.length.toLong)
-        conds.zipWithIndex.map { case ((k, _), i) =>
-          k -> rows.collect {
-            case r if r.getBoolean(i + 2) => norm(r.getString(0))
-          }.toSet
-        }.toMap
-      }
+    // distinct). A row SURVIVES for a range when the index cannot rule its
+    // file out: null bounds = no non-null non-NaN values = prunable (drop);
+    // NaN bounds can only come from an index built before [[build]]
+    // stripped NaN — they carry no range information, so the file must be
+    // scanned, never pruned (belt-and-braces with the build-side
+    // exclusion; a rebuild restores tight bounds)
+    val probes = ranges.map { case (c, lo, hi) =>
+      val (qlo, qhi) = (Math.nextDown(lo), Math.nextUp(hi))
+      (s"$c:${java.lang.Double.doubleToRawLongBits(lo)}:" +
+        s"${java.lang.Double.doubleToRawLongBits(hi)}", c,
+        col("lo").isNotNull && col("hi").isNotNull &&
+          (isnan(col("lo")) || isnan(col("hi")) ||
+            (col("hi") >= lit(qlo) && col("lo") <= lit(qhi))))
     }
-    lazy val liveList = live
-    probeKeys.map { k =>
-      // getOrElse: `covered` was fetched before the probe — if the index
-      // is rebuilt in between (violated single-writer assumption), a
-      // cache-hit Some for a column the stale manifest no longer lists
-      // must degrade to all-unindexed (decide treats Set.empty as "no
-      // coverage" → no pruning, sound), not throw
-      matches(k).map(ms =>
-        SidecarIndex.decide(ms, covered.getOrElse(byKey(k)._1, Set.empty),
-          liveList))
-    }
-  }
-
-  /** [[pruneAllAligned]] with the live file list as a FRAME — the
-    * 10⁶-file path (VERDICT r13 #2): coverage membership and the match
-    * filter run as distributed joins ([[SidecarIndex.decideDf]]), the
-    * "is this column indexed?" test reads only the dim domain
-    * ([[SidecarIndex.coverageDims]]), and the fused index scan's collect
-    * stays candidate-bounded — so NO step is O(files) on the driver; the
-    * only per-batch O(files) work is `liveDf.count()`, one distributed
-    * job shared by all k ranges. Result-identical to the Seq form
-    * (ZoneMapSpec asserts it); callers with driver-resident lists under
-    * ~10⁴ files keep the Seq form, whose single-probe latency has no
-    * Spark-job floor.
-    */
-  def pruneAllAlignedDf(
-      spark: SparkSession,
-      tablePath: String,
-      ranges: Seq[(String, Double, Double)],
-      liveDf: DataFrame): Seq[Option[Pruning]] = {
-    ranges.foreach { case (_, lo, hi) =>
-      require(!lo.isNaN && !hi.isNaN,
-        "a NaN query bound matches nothing under range semantics (NaN " +
-          "satisfies no between predicate) — filter NaN explicitly instead")
-    }
-    if (ranges.isEmpty || !indexExists(spark, tablePath))
-      return Seq.fill(ranges.size)(None)
-    val dims = SidecarIndex.coverageDims(spark, tablePath, IndexDirName, "col")
-    def key(colName: String, lo: Double, hi: Double) =
-      s"$colName:${java.lang.Double.doubleToRawLongBits(lo)}:" +
-        s"${java.lang.Double.doubleToRawLongBits(hi)}"
-    val byKey = ranges.map { case (c, lo, hi) => key(c, lo, hi) -> ((c, lo, hi)) }.toMap
-    val probeKeys = ranges.map { case (c, lo, hi) => key(c, lo, hi) }
-    val matches = SidecarIndex.probeCached(
-        spark, tablePath, IndexDirName, probeKeys) { missing =>
-      val answerable = missing.filter(k => dims(byKey(k)._1))
-      if (answerable.isEmpty) Map.empty
-      else {
-        val wanted = answerable.map(k => byKey(k)._1).distinct
-        def okFor(colName: String, lo: Double, hi: Double) = {
-          val qlo = Math.nextDown(lo)
-          val qhi = Math.nextUp(hi)
-          col("col") === lit(colName) &&
-            col("lo").isNotNull && col("hi").isNotNull &&
-            (isnan(col("lo")) || isnan(col("hi")) ||
-              (col("hi") >= lit(qlo) && col("lo") <= lit(qhi)))
-        }
-        val conds = answerable.map { k =>
-          val (c, lo, hi) = byKey(k); k -> okFor(c, lo, hi)
-        }
-        val rows = readIndex(spark, tablePath)
-          .where(col("col").isin(wanted: _*))
-          .select(col("file") +: col("col") +:
-            conds.zipWithIndex.map { case ((_, c), i) => c.as(s"ok$i") }: _*)
-          .where(conds.indices.map(i => col(s"ok$i")).reduce(_ or _))
-          .collect()
-        SidecarIndex.lastProbeCollected.set(rows.length.toLong)
-        conds.zipWithIndex.map { case ((k, _), i) =>
-          k -> rows.collect {
-            case r if r.getBoolean(i + 2) => norm(r.getString(0))
-          }.toSet
-        }.toMap
-      }
-    }
-    lazy val liveCount = liveDf.count()
-    lazy val covDf = SidecarIndex.coverageDf(
-      spark, tablePath, IndexDirName, "col")
-    probeKeys.map { k =>
-      val colName = byKey(k)._1
-      matches(k).map { ms =>
-        // a stale cache-hit for a column the current generation no longer
-        // covers degrades to all-unindexed (empty coverage → everything
-        // is a candidate), matching the Seq form's getOrElse(Set.empty)
-        val coveredForDim =
-          if (dims(colName)) covDf.where(col("dim") === lit(colName))
-          else covDf.where(lit(false))
-        SidecarIndex.decideDf(spark, ms, coveredForDim, liveDf, liveCount)
-      }
-    }
+    SidecarIndex.probe(spark, tablePath, IndexDirName, "col", probes, live)
   }
 
   /** Range scan through the index: exactly equivalent to

@@ -203,7 +203,9 @@ class ExpressionsSpec extends SparkTestBase {
 
   test("ivfTopK recall vs brute-force on the shared embeddings") {
     val emb = spark.read.parquet(sf() + "/embeddings.parquet")
-    val queries = emb.where(col("vec_id") < 5)
+    // 100 queries (1,000 true neighbours), as the PQ tests: on 5, the
+    // estimate spreads 0.44-0.64 across build seeds, close to the floor
+    val queries = emb.where(col("vec_id") < 100)
     val brute = Similarity.bruteTopK(emb, queries, "vec_id", "embedding", 10)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
     val ivf = Similarity.ivfTopK(emb, queries, "vec_id", "embedding", 10,

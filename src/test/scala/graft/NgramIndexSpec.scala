@@ -72,6 +72,28 @@ class NgramIndexSpec extends SparkTestBase {
     assert(hits.inputFiles.length == p.candidates.size)
   }
 
+  test("build coverage is per gram width: a build at n = 4 over an n = 3 sidecar indexes every file") {
+    val table = freshTable("graft-ngidx-widths")
+    val one = LogSchema.readLogs(spark, table).limit(1)
+      .withColumn("log", lit("zqxwidth-marker row only here"))
+      .drop("date").withColumn("date", lit(java.sql.Date.valueOf("2024-01-03")))
+    one.write.mode("append").partitionBy("date").parquet(table)
+    val total = LogSchema.readLogs(spark, table).inputFiles.length
+    assert(NgramIndex.build(spark, table, n = 3, expectedNdv = 1L << 14).size == total)
+    val p3 = NgramIndex.prune(spark, table, "zqxwidth-marker", n = 3).get
+    assert(p3.pruned > 0)
+    assert(NgramIndex.prune(spark, table, "zqxwidth-marker", n = 4).isEmpty,
+      "no row of width 4 yet: the index cannot help")
+    assert(NgramIndex.build(spark, table, n = 4, expectedNdv = 1L << 14).size == total,
+      "width-3 rows do not cover a width-4 probe")
+    val p4 = NgramIndex.prune(spark, table, "zqxwidth-marker", n = 4).get
+    assert(p4.unindexed == 0 && p4.pruned > 0, s"the n = 4 probe must prune: $p4")
+    val again3 = NgramIndex.prune(spark, table, "zqxwidth-marker", n = 3).get
+    assert(again3.candidates.toSet == p3.candidates.toSet && again3.pruned == p3.pruned)
+    assert(NgramIndex.searchLogs(spark, table, "zqxwidth-marker", n = 4).count() == 1)
+    assert(NgramIndex.build(spark, table, n = 4, expectedNdv = 1L << 14).isEmpty)
+  }
+
   test("empty candidate set short-circuits to an empty result with the right schema") {
     val table = freshTable("graft-ngidx-empty")
     NgramIndex.build(spark, table, expectedNdv = 1L << 14)

@@ -57,46 +57,6 @@ class ZoneMapSpec extends SparkTestBase {
     assert(again.map(_.candidates.toSet) == fused.map(_.candidates.toSet))
   }
 
-  test("pruneAllAlignedDf (distributed decide) is result-identical to the Seq form in every state") {
-    import graft.model.SidecarIndex
-    val out = tmp("graft-zonemap-df")
-    writeClustered(out)
-    ZoneMapIndex.build(spark, out, Seq("x"))
-    val live = spark.read.parquet(out).inputFiles.toSeq
-    val liveDf = live.toDF("file")
-    val ranges = Seq(("x", 2500d, 3500d), ("x", 0d, 999d), ("id", 10d, 20d))
-    val seqForm = ZoneMapIndex.pruneAllAligned(spark, out, ranges, live)
-    val dfForm = ZoneMapIndex.pruneAllAlignedDf(spark, out, ranges, liveDf)
-    assert(dfForm.map(_.isDefined) == seqForm.map(_.isDefined))
-    for ((Some(a), Some(b)) <- seqForm.zip(dfForm)) {
-      assert(a.candidates.map(SidecarIndex.norm).toSet ==
-        b.candidates.map(SidecarIndex.norm).toSet)
-      assert(a.pruned == b.pruned && a.unindexed == b.unindexed)
-    }
-    // staleness contract: a freshly appended (unindexed) file is a
-    // candidate on both paths
-    (8000 until 8010).map(i => (i.toLong, i.toLong, s"r$i")).toDF("id", "x", "s")
-      .coalesce(1).write.mode("append").parquet(out)
-    val live2 = spark.read.parquet(out).inputFiles.toSeq
-    val a2 = ZoneMapIndex.pruneAll(spark, out, Seq(("x", 2500d, 3500d)),
-      live2).head
-    val b2 = ZoneMapIndex.pruneAllAlignedDf(spark, out,
-      Seq(("x", 2500d, 3500d)), live2.toDF("file")).head.get
-    assert(a2.unindexed == 1 && b2.unindexed == 1)
-    assert(a2.candidates.map(SidecarIndex.norm).toSet ==
-      b2.candidates.map(SidecarIndex.norm).toSet)
-    // missing index → None, empty ranges → empty
-    val bare = tmp("graft-zonemap-df-noidx")
-    (1 to 10).toDF("x").write.mode("overwrite").parquet(bare)
-    assert(ZoneMapIndex.pruneAllAlignedDf(spark, bare, Seq(("x", 0d, 1d)),
-      spark.read.parquet(bare).inputFiles.toSeq.toDF("file")) == Seq(None))
-    assert(ZoneMapIndex.pruneAllAlignedDf(spark, out, Nil, liveDf).isEmpty)
-    // the distributed listing helper sees exactly the table's data files
-    val listed = SidecarIndex.listFilesDf(spark, Seq(out))
-      .collect().map(r => SidecarIndex.norm(r.getString(0))).toSet
-    assert(listed == live2.map(SidecarIndex.norm).toSet)
-  }
-
   test("cold probe collects only surviving rows; unindexed columns and missing indexes cost no scan/listing") {
     import graft.model.SidecarIndex
     val out = tmp("graft-zonemap-bounded")
@@ -155,7 +115,7 @@ class ZoneMapSpec extends SparkTestBase {
     }
     hammer()
     // generation change mid-life: rebuild, then both sessions must converge
-    // on the new generation (stale entries abandoned lazily, not yanked)
+    // on the new generation (the first probe to see it unpersists the old one)
     ZoneMapIndex.build(spark, out, Seq("x", "id"), rebuild = true)
     assert(ZoneMapIndex.prune(spark, out, "x", 2500d, 3500d)
       .get.candidates.toSet == expected)
@@ -164,6 +124,60 @@ class ZoneMapSpec extends SparkTestBase {
     hammer()
     // the new generation serves the widened column set in both sessions
     assert(ZoneMapIndex.prune(s2, out, "id", 10d, 20d).isDefined)
+  }
+
+  test("a new index generation's first probe leaves no cache entry of the old one") {
+    import graft.model.SidecarIndex
+    val out = tmp("graft-zonemap-unpersist")
+    writeClustered(out)
+    ZoneMapIndex.build(spark, out, Seq("x"))
+    val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    // the cache entry the current generation's frame reads through
+    def entry() = cm.lookupCachedData(
+      SidecarIndex.readCached(spark, out, ZoneMapIndex.IndexDirName).get
+        .asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+      .get.cachedRepresentation.cacheBuilder
+    // every generation reads the same path, so their plans match: a stale
+    // entry left registered would be substituted into every later read
+    def probeReleases(change: => Unit): Unit = {
+      ZoneMapIndex.prune(spark, out, "x", 2500d, 3500d)
+      val old = entry()
+      val oldRdd = old.cachedColumnBuffers.id
+      assert(spark.sparkContext.getPersistentRDDs.contains(oldRdd))
+      change
+      ZoneMapIndex.prune(spark, out, "x", 2500d, 3500d)
+      assert(entry() ne old, "the new generation must not read the old cache entry")
+      assert(!spark.sparkContext.getPersistentRDDs.contains(oldRdd),
+        "the old generation's cached blocks must be released")
+    }
+    probeReleases(ZoneMapIndex.build(spark, out, Seq("x", "id"), rebuild = true))
+    // vacuum publishes by rename, which Spark's own write-path recache
+    // does not see: only the probe's eager unpersist releases the entry
+    probeReleases {
+      val dead = new org.apache.hadoop.fs.Path(spark.read.parquet(out).inputFiles.head)
+      dead.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(dead, false)
+      assert(ZoneMapIndex.vacuum(spark, out) > 0)
+    }
+  }
+
+  test("releasing a child session drops its sidecar state; the parent stays warm") {
+    import graft.model.SidecarIndex
+    val out = tmp("graft-zonemap-release")
+    writeClustered(out)
+    ZoneMapIndex.build(spark, out, Seq("x"))
+    val child = spark.newSession()
+    def collected(s: org.apache.spark.sql.SparkSession): Long = {
+      SidecarIndex.lastProbeCollected.set(-1L)
+      ZoneMapIndex.prune(s, out, "x", 2500d, 3500d)
+      SidecarIndex.lastProbeCollected.get
+    }
+    assert(collected(spark) >= 0L && collected(child) >= 0L,
+      "each session's first probe is cold")
+    assert(collected(child) == -1L, "the child's re-probe is warm")
+    SessionCache.release(child)
+    assert(collected(spark) == -1L, "the parent's entries survive the child's release")
+    assert(collected(child) >= 0L, "the child's entries went with its release")
   }
 
   test("unindexed (freshly appended) files are always scanned; build indexes only them") {
