@@ -3,7 +3,7 @@ package graft.model
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.expressions.{GraftFunctions, NgramBloomAgg, NgramBloomExprs, NgramHash}
+import graft.expressions.{GraftFunctions, NgramBloomExprs, NgramHash}
 
 /** A file-skipping n-gram bloom index for substring search over `log` —
   * the Spark-lake analogue of ClickHouse's `ngrambf_v1` MergeTree skip
@@ -21,9 +21,10 @@ import graft.expressions.{GraftFunctions, NgramBloomAgg, NgramBloomExprs, NgramH
   *
   * Scale contract (the reason this exists):
   *   - The index build is one partial-combined aggregate keyed by
-  *     `input_file_name()`: tasks gram their own rows locally and the
-  *     shuffle carries one bloom per file, never row data. Incremental by
-  *     construction — only files absent from the index are read.
+  *     `input_file_name()` ([[SidecarIndex.build]], shared with the zone
+  *     map): tasks gram their own rows locally and the shuffle carries one
+  *     bloom per file, never row data. Incremental by construction — only
+  *     files absent from the index are read.
   *   - The probe scans the INDEX (O(files) rows of ~ndv/8 bytes), with the
   *     blooms evaluated DISTRIBUTED ([[NgramBloomExprs.bloomContainsAll]]);
   *     only matching file PATHS reach the driver, and a path list is
@@ -56,18 +57,20 @@ object NgramIndex {
     * newly indexed files. Coverage is per width, so a build at a new `n`
     * indexes every file for it alongside the existing widths.
     * `rebuild = true` starts from scratch (the way to change sizing or drop
-    * a width, and implicitly vacuums dead rows).
+    * a width, and implicitly vacuums dead rows). The build is
+    * [[SidecarIndex.build]] with the n-gram sidecar only.
     *
     * `expectedNdv` sizes each per-file bloom for the file's DISTINCT
-    * n-gram count: ~0.7·ndv·|ln fpp| bits, so the 1M/2% default is
-    * ~700 KB per data file — sidecar overhead well under 0.1% of a
-    * target-size compacted file, the ngrambf_v1 trade.
+    * n-gram count: Spark's `BloomFilter.create` takes
+    * ndv·|ln fpp|/(ln 2)² ≈ 2.08·ndv·|ln fpp| bits, so the 1M/2% default
+    * is ~1.07 MB per data file (2^16 is ~67 KB) — sidecar overhead well
+    * under 1% of a target-size compacted file, the ngrambf_v1 trade.
     *
     * `partitions` scopes discovery to those `date=` partition DIRS (full
     * paths): both the live-file listing and the already-indexed probe
     * touch only the named days, so a caller that knows what it just wrote
-    * (the streaming sink indexes per micro-batch) pays O(hot partitions),
-    * not O(table), per invocation. Empty = whole table.
+    * pays O(hot partitions), not O(table), per invocation. Empty = whole
+    * table.
     */
   def build(
       spark: SparkSession,
@@ -78,36 +81,8 @@ object NgramIndex {
       rebuild: Boolean = false,
       partitions: Seq[String] = Nil): Seq[String] = {
     GraftFunctions.registerAll(spark)
-    require(!rebuild || partitions.isEmpty,
-      "rebuild with a partition scope would overwrite the whole sidecar " +
-        "with only the scoped rows, wiping index coverage everywhere else; " +
-        "rebuild the full table, or use vacuum + incremental build")
-    val live: Seq[String] =
-      if (partitions.isEmpty) LogSchema.readLogs(spark, tablePath).inputFiles.toSeq
-      else SidecarIndex.listFiles(spark.sparkContext.hadoopConfiguration, partitions)
-    // distributed coverage probe ([[SidecarIndex.missingCoverage]]) at
-    // this width: only the files that actually need indexing come back to
-    // the driver — the index's own rows (file paths at 10⁵–10⁶-file scale)
-    // never do
-    val todo: Seq[String] =
-      (if (rebuild) None else SidecarIndex.readCached(spark, tablePath, IndexDirName)) match {
-        case None => live
-        case Some(idx) => SidecarIndex.missingCoverage(spark,
-          SidecarIndex.scopeToPartitions(
-            idx.select(col("file"), col("n").cast("string").as("dim")), partitions),
-          live, Seq(n.toString)).map(_._1)
-      }
-    if (todo.isEmpty) return Seq.empty
-    val rows = spark.read
-      .option("basePath", tablePath)
-      .parquet(todo: _*)
-      .select(input_file_name().as("file"), col("log"))
-      .groupBy("file")
-      .agg(NgramBloomAgg.ngramBloom(col("log"), n, expectedNdv, fpp).as("bloom"))
-      .withColumn("n", lit(n))
-    rows.write.mode(if (rebuild) "overwrite" else "append")
-      .parquet(indexPath(tablePath).toString)
-    todo
+    SidecarIndex.build(spark, tablePath, Some(Config(n, expectedNdv, fpp)), Nil,
+      rebuild, partitions).ngram
   }
 
   /** Post-maintenance convergence in one call: index whatever compaction /

@@ -1,13 +1,17 @@
 package graft.model
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import graft.expressions.NgramBloomAgg
 
 /** The shared skeleton of a file-level skip index stored as a parquet
   * sidecar inside the table directory (underscore-prefixed, so Spark's
   * listing never surfaces it to table reads): path/identity conventions,
-  * the fused probe with its per-generation cache, coverage for the
-  * incremental builds, and the stage-then-swap vacuum. [[NgramIndex]]
+  * the sidecars' schemas, the fused probe with its per-generation cache,
+  * the one incremental build of both sidecars, and the stage-then-swap
+  * vacuum. [[NgramIndex]]
   * (ngrambf-style bloom) and [[ZoneMapIndex]] (minmax) are the two
   * instances; a fix to the swap or normalization logic lands in both by
   * construction.
@@ -166,7 +170,7 @@ private[graft] object SidecarIndex {
     Some(generations(spark, (dir, sig)) {
       generations.invalidate({ case (d, s) => d == dir && s != sig },
         _.frame.unpersist(blocking = false))
-      new Generation(spark.read.parquet(dir)
+      new Generation(readSidecar(spark, tablePath, dirName)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     })
   }
@@ -252,7 +256,7 @@ private[graft] object SidecarIndex {
       (p: String) => new org.apache.hadoop.fs.Path(p).toUri.getPath)
 
   /** Data files directly under the given partition DIRS (full paths) —
-    * the scoped discovery both index builds use so a caller that knows
+    * the scoped discovery of [[build]], so a caller that knows
     * what it just wrote (the streaming sink, per micro-batch) pays
     * O(hot partitions), not O(table), per invocation.
     */
@@ -269,43 +273,170 @@ private[graft] object SidecarIndex {
       }
     }
 
-  /** Restrict an index frame (with a `file` column) to rows under the
-    * named partition dirs: a parquet string predicate per dir keeps the
-    * collected set proportional to the partitions being probed.
+  /** The n-gram sidecar's rows: one bloom per (data file, gram width). */
+  val NgramSchema: StructType = StructType(Seq(
+    StructField("file", StringType), StructField("bloom", BinaryType),
+    StructField("n", IntegerType)))
+
+  /** The zone map's rows: the NaN-stripped bounds per (data file, column). */
+  val ZoneMapSchema: StructType = StructType(Seq(
+    StructField("file", StringType), StructField("col", StringType),
+    StructField("lo", DoubleType), StructField("hi", DoubleType)))
+
+  /** Every sidecar read states its schema: an inferred parquet read costs
+    * a one-task Spark job per new generation, vacuum and build.
     */
-  def scopeToPartitions(idx: DataFrame, partitions: Seq[String]): DataFrame = {
-    if (partitions.isEmpty) idx
-    else partitions
-      .map(d => "/" + new org.apache.hadoop.fs.Path(d).getName + "/")
-      .map(seg => idx.where(col("file").contains(seg)))
-      .reduce(_ unionAll _)
+  private def schemaOf(dirName: String): StructType =
+    if (dirName == NgramIndex.IndexDirName) NgramSchema
+    else if (dirName == ZoneMapIndex.IndexDirName) ZoneMapSchema
+    else throw new IllegalArgumentException(s"unknown sidecar $dirName")
+
+  /** The sidecar's `columns` (all when none are named) read with its schema. */
+  private def readSidecar(
+      spark: SparkSession, tablePath: String, dirName: String,
+      columns: String*): DataFrame = {
+    val all = schemaOf(dirName)
+    spark.read
+      .schema(if (columns.isEmpty) all else StructType(all.filter(f => columns.contains(f.name))))
+      .parquet(indexPath(tablePath, dirName).toString)
   }
 
-  /** What the index does not cover, via a distributed anti-join: per
-    * original live path, the subset of `dims` the index holds no row for
-    * (absent = fully covered). `idxKeys` carries `file` and the dim as a
-    * string column `dim` (the gram width, the column name). Unlike a
-    * collect-the-index-and-diff, the index's rows never visit the driver;
-    * only the MISSING pairs come back (bounded by the files that actually
-    * need work — normally the fresh ingest since the last build, while
-    * the live list itself is driver-side in the caller already, like
-    * Spark's own file listing). Returned paths are the caller's original
-    * (un-normalized) ones, ready for a parquet read.
+  /** What one [[build]] indexed: the live files given an n-gram row, and
+    * the live files given a zone-map row for at least one column.
     */
-  def missingCoverage(
+  case class Built(ngram: Seq[String], zone: Seq[String])
+
+  /** Index-at-ingest for both sidecars in one read-back: the n-gram bloom
+    * (when `ngram` is set) and the zone-map bounds of `zoneCols` for every
+    * live data file the sidecars do not cover yet. [[NgramIndex.build]],
+    * [[ZoneMapIndex.build]] and the streaming sink all build through here.
+    *
+    *   - Coverage is one column-pruned scan of both sidecars' (file, dim)
+    *     pairs, restricted to `partitions` (full `date=` dir paths; empty =
+    *     the whole table) and to the requested width and columns. Only
+    *     file and dim strings reach the driver (the order of the live
+    *     listing the caller holds anyway); no bloom is read and no index
+    *     generation is persisted.
+    *   - The files missing any coverage are read back once, with
+    *     `dataSchema` (the writer's schema, e.g. the micro-batch's) when
+    *     given, so no schema-inference job runs. One partial-combined
+    *     `groupBy(input_file_name())` computes every file's bloom and every
+    *     column's bounds; the shuffle carries one bloom and two doubles per
+    *     column per file, never row data.
+    *   - Both sidecars are written from that one aggregate, computed once.
+    *     A file covered by one sidecar but not the other is aggregated once
+    *     and written only where it is missing, so no (file, dim) row is
+    *     ever stored twice.
+    *
+    * NaN is excluded from the stored bounds: Spark's min/max sort NaN
+    * greatest, so one NaN row would poison a file's `hi` to NaN and every
+    * range verdict would reject it. NaN satisfies no between(lo, hi)
+    * predicate (in Spark and DuckDB alike), so bounds over the non-NaN
+    * values are exact for range pruning; a file holding only NaN/null
+    * values gets null bounds and is pruned. Cast-then-min equals
+    * min-then-cast: the numeric→double casts are monotone.
+    *
+    * `rebuild = true` ignores coverage and overwrites the built sidecars
+    * (the way to change sizing or the column set; it drops dead rows too).
+    */
+  def build(
       spark: SparkSession,
-      idxKeys: DataFrame,
-      live: Seq[String],
-      dims: Seq[String]): Seq[(String, Set[String])] = {
-    val sp = spark
-    import sp.implicits._
-    val byNorm = live.map(f => norm(f) -> f).toMap
-    val wanted = (for (f <- live; d <- dims) yield (norm(f), d)).toDF("file", "dim")
-    val idxN = idxKeys.select(normFile(col("file")).as("file"), col("dim"))
-    wanted.join(idxN, Seq("file", "dim"), "left_anti")
-      .collect()
-      .groupBy(_.getString(0)).toSeq
-      .map { case (f, rs) => byNorm(f) -> rs.map(_.getString(1)).toSet }
+      tablePath: String,
+      ngram: Option[NgramIndex.Config],
+      zoneCols: Seq[String],
+      rebuild: Boolean = false,
+      partitions: Seq[String] = Nil,
+      dataSchema: Option[StructType] = None): Built = {
+    require(ngram.isDefined || zoneCols.nonEmpty, "nothing to build")
+    require(!rebuild || partitions.isEmpty,
+      "rebuild with a partition scope would overwrite the whole sidecar " +
+        "with only the scoped rows, wiping index coverage everywhere else; " +
+        "rebuild the full table, or use vacuum + incremental build")
+    val (live, schema) =
+      if (partitions.nonEmpty)
+        (listFiles(spark.sparkContext.hadoopConfiguration, partitions), dataSchema)
+      else {
+        val table = LogSchema.readLogs(spark, tablePath)
+        (table.inputFiles.toSeq, dataSchema.orElse(Some(table.schema)))
+      }
+    val ngramDir = NgramIndex.IndexDirName
+    val zoneDir = ZoneMapIndex.IndexDirName
+    val inScope =
+      if (partitions.isEmpty) lit(true)
+      else partitions
+        .map(d => col("file").contains("/" + new org.apache.hadoop.fs.Path(d).getName + "/"))
+        .reduce(_ || _)
+    def pairs(dirName: String, dimCol: String, wanted: Column): Option[DataFrame] =
+      if (rebuild || indexFiles(spark, tablePath, dirName).isEmpty) None
+      else Some(readSidecar(spark, tablePath, dirName, "file", dimCol)
+        .where(inScope && wanted)
+        .select(lit(dirName).as("idx"), col("file"), col(dimCol).cast("string").as("dim")))
+    // (sidecar, normalized file) -> dims covered
+    val have: Map[(String, String), Set[String]] =
+      (ngram.flatMap(c => pairs(ngramDir, "n", col("n") === c.n)) ++
+        (if (zoneCols.isEmpty) None
+         else pairs(zoneDir, "col", col("col").isin(zoneCols: _*))))
+        .reduceOption(_ unionAll _)
+        .fold(Map.empty[(String, String), Set[String]])(_.collect()
+          .groupBy(r => (r.getString(0), norm(r.getString(1))))
+          .map { case (k, rs) => k -> rs.map(_.getString(2)).toSet })
+    val needNgram =
+      if (ngram.isEmpty) Nil else live.filterNot(f => have.contains((ngramDir, norm(f))))
+    val needZone: Seq[(String, Seq[String])] = live.flatMap { f =>
+      val covered = have.getOrElse((zoneDir, norm(f)), Set.empty[String])
+      Some(f -> zoneCols.filterNot(covered)).filter(_._2.nonEmpty)
+    }
+    val todo = (needNgram ++ needZone.map(_._1)).distinct
+    if (todo.isEmpty) return Built(Nil, Nil)
+
+    val cfg = ngram.filter(_ => needNgram.nonEmpty)
+    val zCols = if (needZone.isEmpty) Nil else zoneCols
+    val readCols = cfg.map(_ => "log").toSeq ++ zCols
+    val reader = spark.read.option("basePath", tablePath)
+    val fields = schema.toSeq.flatMap(s => readCols.flatMap(c => s.find(_.name == c)))
+    val data = (if (fields.size == readCols.size) reader.schema(StructType(fields)) else reader)
+      .parquet(todo: _*)
+    val aggs = cfg.map(c =>
+        NgramBloomAgg.ngramBloom(col("log"), c.n, c.expectedNdv, c.fpp).as("bloom")).toSeq ++
+      zCols.zipWithIndex.flatMap { case (c, i) =>
+        val d = col(c).cast("double")
+        val finite = when(!isnan(d), d)
+        Seq(min(finite).as(s"lo_$i"), max(finite).as(s"hi_$i"))
+      }
+    val agg = data.groupBy(input_file_name().as("file")).agg(aggs.head, aggs.tail: _*)
+    // Two writes share one computation through the persisted RDD of the
+    // executed aggregate, which keeps the partitions AQE coalesced it into:
+    // a persisted DataFrame would cache the uncoalesced shuffle partitions
+    // and write that many files per sidecar.
+    val shared =
+      if (cfg.isDefined && zCols.nonEmpty)
+        Some(agg.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      else None
+    val perFile = shared.fold(agg)(spark.createDataFrame(_, agg.schema))
+    val mode = if (rebuild) "overwrite" else "append"
+    try {
+      cfg.foreach { c =>
+        val rows = perFile.select(col("file"), col("bloom"), lit(c.n).as("n"))
+        (if (needNgram.size == todo.size) rows
+         else rows.where(normFile(col("file")).isin(needNgram.map(norm): _*)))
+          .write.mode(mode).parquet(indexPath(tablePath, ngramDir).toString)
+      }
+      if (zCols.nonEmpty) {
+        // unpivot to the narrow (file, col, lo, hi) shape in the same
+        // projection: one sidecar serves any column set
+        val rows = perFile
+          .select(col("file"), explode(array(zCols.zipWithIndex.map { case (c, i) =>
+            struct(lit(c).as("col"), col(s"lo_$i").as("lo"), col(s"hi_$i").as("hi"))
+          }: _*)).as("z"))
+          .select(col("file"), col("z.*"))
+        val complete = needZone.size == todo.size && needZone.forall(_._2.size == zCols.size)
+        (if (complete) rows
+         else rows.where(concat_ws("\u0000", normFile(col("file")), col("col")).isin(
+           needZone.flatMap { case (f, cs) => cs.map(c => norm(f) + "\u0000" + c) }: _*)))
+          .write.mode(mode).parquet(indexPath(tablePath, zoneDir).toString)
+      }
+    } finally shared.foreach(_.unpersist(blocking = false))
+    Built(needNgram, needZone.map(_._1))
   }
 
   /** Combine a probe's match set and the index's coverage manifest with
@@ -352,7 +483,6 @@ private[graft] object SidecarIndex {
       liveFiles: => Seq[String],
       targetBytes: Long = 128L << 20): Long = {
     if (indexFiles(spark, tablePath, dirName).isEmpty) return 0L
-    import org.apache.spark.sql.functions.broadcast
     val ip = indexPath(tablePath, dirName)
     val fs = ip.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val staged = stagedPath(tablePath, dirName)
@@ -362,7 +492,7 @@ private[graft] object SidecarIndex {
     import sp.implicits._
     val live = broadcast(
       liveFiles.map(norm).toDF("_live_file"))
-    val idx = spark.read.parquet(ip.toString)
+    val idx = readSidecar(spark, tablePath, dirName)
     val keyed = idx.withColumn("_nf", normFile(col("file")))
     val dead = keyed
       .join(live, keyed("_nf") === live("_live_file"), "left_anti").count()

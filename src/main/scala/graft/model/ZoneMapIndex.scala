@@ -56,12 +56,15 @@ object ZoneMapIndex {
     spark.read.parquet(tablePath).inputFiles.toSeq
 
   /** Index every live data file not yet indexed for `cols`; returns the
-    * newly indexed files. `rebuild = true` starts from scratch (also the
-    * way to change the column set; implicitly vacuums dead rows).
+    * newly indexed files. Coverage is per (file, column): a later build
+    * with a widened column set re-reads the files that miss the new
+    * columns and adds only their rows. `rebuild = true` starts from scratch
+    * (also the way to change the column set; implicitly vacuums dead rows).
     * `partitions` scopes both the discovery listing and the
     * already-indexed probe to those partition DIRS (full paths), so a
-    * caller that knows what it just wrote — the streaming sink, per
-    * micro-batch — pays O(hot partitions), not O(table), per invocation.
+    * caller that knows what it just wrote pays O(hot partitions), not
+    * O(table), per invocation. The build, with its NaN-stripped bounds, is
+    * [[SidecarIndex.build]] with the zone map only.
     */
   def build(
       spark: SparkSession,
@@ -70,60 +73,7 @@ object ZoneMapIndex {
       rebuild: Boolean = false,
       partitions: Seq[String] = Nil): Seq[String] = {
     require(cols.nonEmpty, "zone map needs at least one column")
-    require(!rebuild || partitions.isEmpty,
-      "rebuild with a partition scope would overwrite the whole sidecar " +
-        "with only the scoped rows, wiping index coverage everywhere else; " +
-        "rebuild the full table, or use vacuum + incremental build")
-    val live: Seq[String] =
-      if (partitions.isEmpty) tableFiles(spark, tablePath)
-      else SidecarIndex.listFiles(spark.sparkContext.hadoopConfiguration, partitions)
-    // per-(file, column) coverage, not per-file: a later build with a
-    // widened column set must re-read files that miss the new columns.
-    // Computed as a distributed anti-join ([[SidecarIndex.missingCoverage]])
-    // so the index's own rows never land on the driver — only the files
-    // that actually need work come back
-    val missingByFile: Seq[(String, Set[String])] =
-      (if (rebuild) None else SidecarIndex.readCached(spark, tablePath, IndexDirName)) match {
-        case None => live.map(f => f -> cols.toSet)
-        case Some(idx) => SidecarIndex.missingCoverage(spark,
-          SidecarIndex.scopeToPartitions(
-            idx.select(col("file"), col("col").as("dim")), partitions),
-          live, cols)
-      }
-    if (missingByFile.isEmpty) return Seq.empty
-    val out = SidecarIndex.indexPath(tablePath, IndexDirName).toString
-    for ((missing, files) <- missingByFile.groupBy(_._2)
-        .view.mapValues(_.map(_._1)).toSeq) {
-      val missingCols = cols.filter(missing) // keep caller order
-      // NaN is excluded from the stored bounds: Spark's min/max sort NaN
-      // greatest, so one NaN row would poison a file's `hi` to NaN and
-      // every range verdict would reject it — pruning a file whose OTHER
-      // rows are in range. Since NaN satisfies no between(lo, hi)
-      // predicate anyway (NaN compares greater than every finite value,
-      // in Spark and DuckDB alike), bounds over the non-NaN values are
-      // exact for range pruning. A file holding ONLY NaN/null values
-      // gets null bounds and is pruned — correctly, none of its rows can
-      // match any range. (Cast-then-min equals min-then-cast: the
-      // numeric→double casts are monotone.)
-      val aggs = missingCols.flatMap { c =>
-        val d = col(c).cast("double")
-        val finite = when(!isnan(d), d)
-        Seq(min(finite).as(s"lo_$c"), max(finite).as(s"hi_$c"))
-      }
-      val perFile = spark.read.option("basePath", tablePath).parquet(files: _*)
-        .groupBy(input_file_name().as("file"))
-        .agg(aggs.head, aggs.tail: _*)
-      // unpivot to the narrow (file, col, lo, hi) shape: one sidecar
-      // serves any column set, and this loop adds columns per file
-      val rows = missingCols.map(c => perFile.select(
-          col("file"), lit(c).as("col"),
-          col(s"lo_$c").as("lo"), col(s"hi_$c").as("hi")))
-        .reduce(_ unionAll _)
-      // under rebuild `have` is empty, so every file misses every column
-      // and this loop has exactly one group — overwrite runs at most once
-      rows.write.mode(if (rebuild) "overwrite" else "append").parquet(out)
-    }
-    missingByFile.map(_._1)
+    SidecarIndex.build(spark, tablePath, None, cols, rebuild, partitions).zone
   }
 
   /** Drop index rows whose data file no longer exists (post-compaction /

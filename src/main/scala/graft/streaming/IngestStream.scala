@@ -1,8 +1,8 @@
 package graft.streaming
 
-import graft.model.{LogSchema, NgramIndex}
+import graft.model.{LogSchema, NgramIndex, SidecarIndex}
 import graft.operators.{Ingest, IngestConfig}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -126,6 +126,12 @@ object IngestStream {
     * older than [[MarkerRetention]] batches are pruned as newer ones
     * commit (replay only ever revisits the tail of the batch log), so the
     * marker directory stays bounded for long-lived streams.
+    *
+    * Index-at-ingest: with `ngramIndex` and/or `zoneMapCols` set, each
+    * batch also builds both sidecars for the days it touched, after its
+    * marker ([[SidecarIndex.build]]). The write stays the only pass over
+    * the batch: it reports the touched days through an [[Observation]],
+    * and the index step reads back only the new files.
     */
   def sinkPartitionedParquet(
       ingested: DataFrame,
@@ -151,45 +157,38 @@ object IngestStream {
           s"_graft_batches/$generationId")
         val marker = new org.apache.hadoop.fs.Path(ns, batchId.toString)
         if (!fs.exists(marker)) {
-          // cached only when indexing needs a second pass over the batch
-          // (the distinct-day probe); otherwise the write is the sole pass
-          val indexing = ngramIndex.isDefined || zoneMapCols.nonEmpty
-          if (indexing) batch.persist()
-          try {
-            LogSchema.writePartitioned(batch, outPath, mode = "append")
-            fs.create(marker, true).close()
-            if (batchId >= MarkerRetention) {
-              val old = new org.apache.hadoop.fs.Path(ns,
-                (batchId - MarkerRetention).toString)
-              try { fs.delete(old, false); () } catch { case _: Exception => }
-            }
-            // Index-at-ingest (ClickHouse builds ngrambf_v1 granules as
-            // part of every INSERT, schema.sql:15-19): incrementally index
-            // the days this batch touched — O(hot partitions) per batch,
-            // not O(table). Runs AFTER the commit marker on purpose: an
-            // index failure must not re-append the batch's data on replay,
-            // and a crash in between merely leaves files unindexed (they
-            // are scanned, not lost — NgramIndex's staleness contract)
-            // until the next batch's build converges them.
-            if (indexing) {
-              // same day derivation as writePartitioned: date=to_date(ts)
-              val days = batch
-                .select(to_date(col("timestamp")).cast("string").as("d"))
-                .distinct().collect().map(_.getString(0))
-              val dirs = days.map(d =>
-                new org.apache.hadoop.fs.Path(base, s"date=$d").toString).toSeq
-              ngramIndex.foreach { cfg =>
-                NgramIndex.build(batch.sparkSession, outPath,
-                  cfg.n, cfg.expectedNdv, cfg.fpp, partitions = dirs)
-              }
-              // the minmax sidecar rides the same per-batch hook and the
-              // same staleness contract (ClickHouse builds minmax granules
-              // on every INSERT alongside ngrambf, schema.sql:15-19)
-              if (zoneMapCols.nonEmpty)
-                graft.model.ZoneMapIndex.build(batch.sparkSession, outPath,
-                  zoneMapCols, partitions = dirs)
-            }
-          } finally if (indexing) { batch.unpersist(); () }
+          // the write is the only pass over the batch: the days it touched
+          // (same derivation as writePartitioned: date=to_date(timestamp))
+          // come back as an observed metric of that write, not a second job
+          val touched =
+            if (ngramIndex.isDefined || zoneMapCols.nonEmpty) Some(Observation())
+            else None
+          LogSchema.writePartitioned(
+            touched.fold(batch)(o => batch.observe(o,
+              collect_set(to_date(col("timestamp")).cast("string")).as("days"))),
+            outPath, mode = "append")
+          fs.create(marker, true).close()
+          if (batchId >= MarkerRetention) {
+            val old = new org.apache.hadoop.fs.Path(ns,
+              (batchId - MarkerRetention).toString)
+            try { fs.delete(old, false); () } catch { case _: Exception => }
+          }
+          // Index-at-ingest (ClickHouse builds a part's minmax and
+          // ngrambf_v1 granules inside the INSERT that writes it,
+          // schema.sql:15-19): one read-back of the files in the days this
+          // batch touched that a sidecar does not cover yet, both sidecars
+          // from one aggregate — O(hot partitions) per batch, not O(table).
+          // Runs AFTER the commit marker on purpose: an index failure must
+          // not re-append the batch's data on replay, and a crash in between
+          // merely leaves files unindexed (they are scanned, not lost — the
+          // sidecars' staleness contract) until the next batch that touches
+          // their day converges them.
+          touched.map(touchedDays(_, batchId)).filter(_.nonEmpty).foreach { days =>
+            SidecarIndex.build(batch.sparkSession, outPath, ngramIndex, zoneMapCols,
+              partitions = days.map(d =>
+                new org.apache.hadoop.fs.Path(base, s"date=$d").toString),
+              dataSchema = Some(batch.schema))
+          }
         }
         ()
       }
@@ -218,6 +217,26 @@ object IngestStream {
     *     larger horizon is directory entries, not bytes.
     */
   val MarkerRetention = 128L
+
+  /** The days a batch's write reported through its observation. The
+    * metric arrives on the listener bus just after the write returns; if it
+    * never does (a dropped listener event), the batch is left unindexed —
+    * the same state as a crash between the commit marker and the index
+    * step, which the next batch touching those days converges.
+    */
+  private def touchedDays(touched: Observation, batchId: Long): Seq[String] =
+    try scala.concurrent.Await.result(touched.future, ObservationWait)
+      .getSeq[String](0)
+    catch {
+      case _: java.util.concurrent.TimeoutException =>
+        org.slf4j.LoggerFactory.getLogger(getClass).warn(
+          s"batch $batchId: the write reported no touched days within " +
+            s"$ObservationWait; its files stay unindexed until a later batch " +
+            "touches their days")
+        Nil
+    }
+
+  private val ObservationWait = scala.concurrent.duration.Duration(60, "s")
 
   /** The streaming query id persisted in `<checkpoint>/metadata` — stable
     * across restarts of the same checkpoint, fresh when the checkpoint is

@@ -9,7 +9,7 @@ import java.nio.charset.StandardCharsets
   * answers "OK", `/metrics` serves the [[StreamMetrics]] counters in
   * Prometheus text exposition format (the reference registers
   * input_records_total / errors_total / batch_size / flush_time_seconds,
-  * main.go:52-74).
+  * main.go:52-74), plus the last batch's per-phase durations.
   *
   * Uses the JDK built-in HTTP server — no added dependency, one instance
   * per driver process (the reference's server is likewise per-pod). Pass
@@ -83,7 +83,15 @@ class MetricsServer(metrics: StreamMetrics, port: Int = 2021) {
         s"${full}_sum $sum" :+ s"${full}_count $count")
         .mkString("\n")
     }
-    (buildInfo +: (simple ++ summaries)).mkString("", "\n", "\n")
+    // one gauge family, labeled by phase; a phase appears once a batch
+    // has reported it
+    val phases = StreamMetrics.Phases.flatMap(ph =>
+      Option(metrics.phaseSeconds.get(ph)).map(v =>
+        s"""graft_batch_phase_seconds{phase="$ph"} $v"""))
+    val phaseFamily =
+      if (phases.isEmpty) Nil
+      else Seq(("# TYPE graft_batch_phase_seconds gauge" +: phases).mkString("\n"))
+    (buildInfo +: (simple ++ summaries ++ phaseFamily)).mkString("", "\n", "\n")
   }
 
   private def handler(body: HttpExchange => String): HttpHandler =

@@ -34,6 +34,12 @@ class StreamMetrics extends StreamingQueryListener {
   val batchSizeWindow = new StreamMetrics.QuantileWindow(1024)
   val flushSecondsWindow = new StreamMetrics.QuantileWindow(1024)
 
+  /** The last batch's seconds per [[StreamMetrics.Phases]] phase, as Spark's
+    * progress reports them (`StreamingQueryProgress.durationMs`): where a
+    * batch's time goes besides the sink (`addBatch`).
+    */
+  val phaseSeconds = new java.util.concurrent.ConcurrentHashMap[String, Double]()
+
   // Spark delivers every query's events to every listener on the session;
   // unscoped, two pipelines would double-count into each other's metrics.
   // None = count all queries (the generic attach()); set via restrictToName.
@@ -74,6 +80,9 @@ class StreamMetrics extends StreamingQueryListener {
         lastFlushSeconds.set(ms.toDouble / 1000.0)
         flushSecondsWindow.observe(ms.toDouble / 1000.0)
       }
+      StreamMetrics.Phases.foreach { ph =>
+        Option(p.durationMs.get(ph)).foreach(ms => phaseSeconds.put(ph, ms.toDouble / 1000.0))
+      }
     }
   }
 
@@ -100,6 +109,13 @@ object StreamMetrics {
     spark.streams.addListener(m)
     m
   }
+
+  /** Micro-batch phases exported per batch: `latestOffset` and `getBatch`
+    * (source), `queryPlanning`, `addBatch` (the sink: write and
+    * index-at-ingest) and `walCommit` (offset log).
+    */
+  val Phases: Seq[String] =
+    Seq("addBatch", "getBatch", "latestOffset", "queryPlanning", "walCommit")
 
   /** Quantiles the reference's summaries publish (main.go:56-73). */
   val SummaryQuantiles: Seq[Double] = Seq(0.5, 0.9, 0.95, 0.99)

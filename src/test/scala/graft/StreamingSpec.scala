@@ -138,6 +138,35 @@ class StreamingSpec extends SparkTestBase {
     }
   }
 
+  test("/metrics serves the last batch's per-phase durations after one batch") {
+    val in = tmp("graft-phin"); val out = tmp("graft-phout"); val ckpt = tmp("graft-phckpt")
+    writeFixture(in, "batch1.json", fixtureLines(10))
+    val (q, srv, m) = IngestStream.startWithMetrics(spark, in, out, ckpt,
+      trigger = Trigger.ProcessingTime(0), metricsPort = 0)
+    try {
+      q.processAllAvailable()
+      val bound = new java.net.URL(s"http://127.0.0.1:${srv.boundPort}/metrics")
+      def scrape(): String = {
+        val is = bound.openStream()
+        try scala.io.Source.fromInputStream(is, "UTF-8").mkString finally is.close()
+      }
+      def phases(body: String): Map[String, Double] = body.linesIterator
+        .collect { case l if l.startsWith("graft_batch_phase_seconds{") =>
+          l.stripPrefix("graft_batch_phase_seconds{phase=\"").takeWhile(_ != '"') ->
+            l.split(" ").last.toDouble }.toMap
+      eventually()(phases(scrape()).size == StreamMetrics.Phases.size)
+      val body = scrape()
+      assert(body.contains("# TYPE graft_batch_phase_seconds gauge"))
+      val got = phases(body)
+      assert(got.keySet == StreamMetrics.Phases.toSet)
+      assert(got.values.forall(v => v >= 0.0 && !v.isNaN))
+      // the sink's phase holds the write, so it took time
+      assert(got("addBatch") > 0.0, body)
+    } finally {
+      q.stop(); srv.stop(); spark.streams.removeListener(m)
+    }
+  }
+
   test("tumbling window counts over the stream (update-incremental)") {
     val in = tmp("graft-in2")
     writeFixture(in, "b.json", fixtureLines(30))
