@@ -115,18 +115,13 @@ object DedupIndex {
       r.getAs[Int]("rows_per_band"))
   }
 
-  /** Reads a table dir, first completing an interrupted [[vacuum]] swap:
-    * the staged dir is complete the instant it exists, so table-missing +
-    * staged-present can only mean the crash fell between vacuum's two
-    * renames — promote the staged dir and read it.
+  /** Reads a table dir, first completing an interrupted [[vacuum]] swap
+    * ([[DirSwap.recover]]).
     */
   private def tableOf(spark: SparkSession, dir: String, table: String)
     : DataFrame = {
     val dst = new org.apache.hadoop.fs.Path(s"$dir/$table")
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staged = new org.apache.hadoop.fs.Path(s"$dir/.$table.vacuum")
-    if (!fs.exists(dst) && fs.exists(staged))
-      require(fs.rename(staged, dst), s"vacuum recovery failed for $table")
+    DirSwap.recover(dst.getFileSystem(spark.sparkContext.hadoopConfiguration), dst)
     spark.read.parquet(dst.toString)
   }
   private def bandsOf(spark: SparkSession, dir: String): DataFrame =
@@ -215,17 +210,13 @@ object DedupIndex {
     * docs (the index is the only place they survive); run it after every
     * retention/compaction pass, like [[NgramIndex.vacuum]].
     *
-    * Each table is rewritten STAGE-THEN-SWAP, sized back to
-    * `targetBytes` files, with the old dir renamed ASIDE (dst → .old,
-    * staged → dst, drop .old) so a crash at any instant leaves the table
-    * readable: before the first rename dst is untouched; between the two
-    * renames the staged dir is already complete and the read path
-    * promotes it ([[tableOf]]); after the second only a stale .old
-    * lingers, cleared by the next vacuum. A crash between the two TABLE
-    * rewrites is also safe: a dead id missing from EITHER table is inert
-    * (bands without a sketch row produce candidates the verification join
-    * drops; sketches without band rows are never probed), so partial
-    * vacuum only under-deletes. Returns the number of ids dropped.
+    * Each table is rewritten sized back to `targetBytes` files and
+    * published with [[DirSwap]]; reads recover an interrupted swap. A
+    * crash between the two TABLE rewrites is also safe: a dead id missing
+    * from EITHER table is inert (bands without a sketch row produce
+    * candidates the verification join drops; sketches without band rows
+    * are never probed), so partial vacuum only under-deletes. Returns the
+    * number of ids dropped.
     */
   def vacuum(
       spark: SparkSession,
@@ -240,18 +231,11 @@ object DedupIndex {
     def rewrite(table: String, df: DataFrame): Unit = {
       val dst = new org.apache.hadoop.fs.Path(s"$dir/$table")
       val fs = dst.getFileSystem(conf)
-      val bytes = fs.getContentSummary(dst).getLength
-      val parts = math.max(1L, bytes / targetBytes).toInt
-      val staged = new org.apache.hadoop.fs.Path(s"$dir/.$table.vacuum")
-      val old = new org.apache.hadoop.fs.Path(s"$dir/.$table.old")
-      df.join(live, Seq("id"), "left_semi")
-        .coalesce(parts).write.mode("overwrite").parquet(staged.toString)
-      fs.delete(old, true)
-      require(fs.rename(dst, old), s"vacuum swap (aside) failed for $table")
-      require(fs.rename(staged, dst),
-        s"vacuum swap (promote) failed for $table")
-      fs.delete(old, true)
-      ()
+      val parts = math.max(1L, fs.getContentSummary(dst).getLength / targetBytes).toInt
+      DirSwap.publish(fs, dst) { staged =>
+        df.join(live, Seq("id"), "left_semi")
+          .coalesce(parts).write.mode("overwrite").parquet(staged.toString)
+      }
     }
     rewrite("bands", bandsOf(spark, dir))
     rewrite("sketches", sketchesOf(spark, dir))

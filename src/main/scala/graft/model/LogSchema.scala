@@ -236,22 +236,10 @@ object LogSchema {
     * independently (at scale: schedule one job per hot partition; cold
     * partitions are selected out by the plan, making the job incremental).
     *
-    * Swap protocol per partition: write to a hidden sibling dir, rename
-    * live → hidden trash, rename sibling → live, delete trash. A crash
-    * before the first rename leaves the old data live (a stale sibling is
-    * cleaned on re-run); a crash between the renames is repaired on re-run
-    * by restoring the trash dir. Data is never lost. Readers racing the
-    * swap see the partition vanish for the instant between renames — the
-    * same listing race any non-transactional object-store layout has; a
-    * table format with atomic commits is the upgrade path when readers
-    * cannot tolerate it.
-    *
-    * `jobParallelism` submits that many partition rewrites as CONCURRENT
-    * Spark jobs (driver threads): one fragmented day is a small job that
-    * cannot fill a large cluster, and running rewrites back-to-back leaves
-    * executors idle between them. Partitions are still swapped
-    * independently — a failure in one leaves every other partition either
-    * untouched or fully published.
+    * Each partition is published with [[DirSwap]], and the run first
+    * heals any swap a crashed compaction, materialize or other rewrite of
+    * the table left behind. `jobParallelism` rewrites that many partitions
+    * as concurrent Spark jobs ([[DirSwap.rewriteEach]]).
     */
   def compactPartitions(
       spark: SparkSession,
@@ -259,71 +247,22 @@ object LogSchema {
       targetBytes: Long = 128L << 20,
       minFiles: Int = 4,
       jobParallelism: Int = 1): Seq[CompactionStat] = {
-    require(jobParallelism >= 1, s"jobParallelism must be >= 1, got $jobParallelism")
     val base = new org.apache.hadoop.fs.Path(path)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverInterruptedCompaction(fs, base)
-    def compactOne(st: CompactionStat): CompactionStat = {
-      val live = new org.apache.hadoop.fs.Path(st.dir)
-      val tmp = new org.apache.hadoop.fs.Path(base, s".compact-tmp-${live.getName}")
-      val trash = new org.apache.hadoop.fs.Path(base, s".compact-old-${live.getName}")
-      fs.delete(tmp, true) // stale sibling from a crashed run
+    DirSwap.sweep(fs, base)
+    DirSwap.rewriteEach(compactionPlan(spark, path, targetBytes, minFiles), jobParallelism) { st =>
       // hash-cluster on the sort-key prefix then sort: same within-day
       // physical layout writePartitioned produces
-      val part = spark.read.parquet(st.dir)
-      withBloomOptions(
-          part.repartition(st.targetFiles,
-            Seq("cluster", "namespace", "app").map(col): _*)
-            .sortWithinPartitions(sortKey.map(col): _*)
-            .write.mode("overwrite").option("compression", "zstd"))
-        .parquet(tmp.toString)
-      if (!fs.rename(live, trash))
-        throw new java.io.IOException(s"compaction: cannot move $live aside")
-      if (!fs.rename(tmp, live)) {
-        fs.rename(trash, live) // roll back; partition stays on old files
-        throw new java.io.IOException(s"compaction: cannot publish $tmp")
+      DirSwap.publish(fs, new org.apache.hadoop.fs.Path(st.dir)) { staged =>
+        withBloomOptions(
+            spark.read.parquet(st.dir).repartition(st.targetFiles,
+              Seq("cluster", "namespace", "app").map(col): _*)
+              .sortWithinPartitions(sortKey.map(col): _*)
+              .write.mode("overwrite").option("compression", "zstd"))
+          .parquet(staged.toString)
       }
-      fs.delete(trash, true)
       st
     }
-    val plan = compactionPlan(spark, path, targetBytes, minFiles)
-    if (jobParallelism == 1 || plan.size <= 1) plan.map(compactOne)
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(jobParallelism, plan.size))
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      try {
-        val done = scala.concurrent.Future.sequence(
-          plan.map(st => scala.concurrent.Future(compactOne(st))))
-        scala.concurrent.Await.result(done, scala.concurrent.duration.Duration.Inf)
-      } finally pool.shutdown()
-    }
-  }
-
-  /** Repair the swap protocol's one non-atomic window: a trash dir with no
-    * live partition means a crash happened between the two renames —
-    * restore it. A trash dir WITH a live partition is debris from after a
-    * successful publish — drop it.
-    */
-  private def recoverInterruptedCompaction(
-      fs: org.apache.hadoop.fs.FileSystem,
-      base: org.apache.hadoop.fs.Path): Unit =
-    recoverInterruptedSwaps(fs, base, ".compact-old-")
-
-  private def recoverInterruptedSwaps(
-      fs: org.apache.hadoop.fs.FileSystem,
-      base: org.apache.hadoop.fs.Path,
-      oldPrefix: String): Unit = {
-    if (!fs.exists(base)) return
-    fs.listStatus(base).toSeq.map(_.getPath)
-      .filter(_.getName.startsWith(oldPrefix))
-      .foreach { trash =>
-        val live = new org.apache.hadoop.fs.Path(base,
-          trash.getName.stripPrefix(oldPrefix))
-        if (!fs.exists(live)) fs.rename(trash, live)
-        else fs.delete(trash, true)
-      }
   }
 
   /** Backfill promoted columns into an EXISTING written table — the Spark
@@ -335,7 +274,7 @@ object LogSchema {
     * lack any requested promoted column is rewritten with the column
     * appended ([[withPromotedColumns]] — same metadata contract the
     * plan-time [[graft.plans.PromoteMapKeys]] rule resolves by) and
-    * published with the compaction job's crash-safe rename swap.
+    * published with [[DirSwap]], like [[compactPartitions]].
     *
     * The job is INCREMENTAL and idempotent: partitions already carrying
     * every requested column are skipped, so a re-run after new ingest (new
@@ -356,15 +295,14 @@ object LogSchema {
       stringKeys: Seq[String] = Nil,
       numberKeys: Seq[String] = Nil,
       jobParallelism: Int = 1): Seq[String] = {
-    require(jobParallelism >= 1, s"jobParallelism must be >= 1, got $jobParallelism")
     val base = new org.apache.hadoop.fs.Path(path)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverInterruptedSwaps(fs, base, ".materialize-old-")
+    DirSwap.sweep(fs, base)
     val days =
       if (!fs.exists(base)) Seq.empty
       else fs.listStatus(base).toSeq.map(_.getPath)
         .filter(_.getName.startsWith("date=")).sortBy(_.getName)
-    def rewriteOne(live: org.apache.hadoop.fs.Path): Option[String] = {
+    DirSwap.rewriteEach(days, jobParallelism) { live =>
       val part = spark.read.parquet(live.toString)
       val have = part.columns.toSet
       val missingS = stringKeys.filterNot(k =>
@@ -373,37 +311,15 @@ object LogSchema {
         have(graft.plans.PromoteMapKeys.promotedName(k)))
       if (missingS.isEmpty && missingN.isEmpty) None
       else {
-        val tmp = new org.apache.hadoop.fs.Path(base, s".materialize-tmp-${live.getName}")
-        val trash = new org.apache.hadoop.fs.Path(base, s".materialize-old-${live.getName}")
-        fs.delete(tmp, true)
-        withBloomOptions(
-            withPromotedColumns(part, missingS, missingN)
-              .write.mode("overwrite").option("compression", "zstd"))
-          .parquet(tmp.toString)
-        fs.delete(trash, true)
-        if (!fs.rename(live, trash))
-          throw new java.io.IOException(s"materialize: cannot move $live aside")
-        if (!fs.rename(tmp, live)) {
-          fs.rename(trash, live)
-          throw new java.io.IOException(s"materialize: cannot publish $tmp")
+        DirSwap.publish(fs, live) { staged =>
+          withBloomOptions(
+              withPromotedColumns(part, missingS, missingN)
+                .write.mode("overwrite").option("compression", "zstd"))
+            .parquet(staged.toString)
         }
-        fs.delete(trash, true)
         Some(live.toString)
       }
-    }
-    if (jobParallelism == 1 || days.size <= 1) days.flatMap(rewriteOne)
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(jobParallelism, days.size))
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      try {
-        val done = scala.concurrent.Future.sequence(
-          days.map(d => scala.concurrent.Future(rewriteOne(d))))
-        scala.concurrent.Await.result(done,
-          scala.concurrent.duration.Duration.Inf).flatten
-      } finally pool.shutdown()
-    }
+    }.flatten
   }
 
   /** Per-day physical table health — the `system.parts` surface ClickHouse

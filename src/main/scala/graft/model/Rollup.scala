@@ -27,12 +27,12 @@ import org.apache.spark.sql.functions._
   *     is proportional to newly-arrived data, never to table size — the
   *     property that keeps the job viable when the table is 100 TB but a
   *     day is 100 GB.
-  *   - Each refreshed day is published with the same hidden-sibling
-  *     rename-swap the compaction job uses, so a crash mid-refresh leaves
-  *     every day either on its old rollup or its new one, never half
-  *     written. The state file is written last, via its own tmp+rename: a
-  *     crash between publishing days and recording state only causes an
-  *     idempotent re-aggregation on the next run.
+  *   - Each refreshed day is published with [[DirSwap]], so a crash
+  *     mid-refresh leaves every day either on its old rollup or its new
+  *     one (a new day: absent), never half written. The state file is
+  *     written last, via its own tmp+rename: a crash between publishing
+  *     days and recording state only causes an idempotent re-aggregation
+  *     on the next run.
   */
 object Rollup {
 
@@ -149,8 +149,7 @@ object Rollup {
     * `logPath`, re-aggregating only days whose source files changed.
     * Returns what was done, empty when already current (the steady-state
     * cron outcome). `jobParallelism` runs that many per-day refreshes as
-    * concurrent Spark jobs, as [[LogSchema.compactPartitions]] does — one
-    * day's rollup is a small job that cannot fill a large cluster alone.
+    * concurrent Spark jobs ([[DirSwap.rewriteEach]]).
     */
   def refresh(
       spark: SparkSession,
@@ -158,10 +157,10 @@ object Rollup {
       rollupPath: String,
       jobParallelism: Int = 1,
       numericKeys: Seq[String] = defaultNumericKeys): Seq[RefreshStat] = {
-    require(jobParallelism >= 1, s"jobParallelism must be >= 1, got $jobParallelism")
     val base = new org.apache.hadoop.fs.Path(rollupPath)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(base)
+    DirSwap.sweep(fs, base)
     val current = sourceFingerprints(spark, logPath)
     val recorded = readState(fs, base)
     val stale = current.toSeq.collect {
@@ -171,39 +170,16 @@ object Rollup {
     val orphaned = (recorded.keySet -- current.keySet).toSeq.sorted
 
     def refreshOne(st: RefreshStat): RefreshStat = {
-      val live = new org.apache.hadoop.fs.Path(base, s"date=${st.day}")
-      val tmp = new org.apache.hadoop.fs.Path(base, s".rollup-tmp-date=${st.day}")
-      val trash = new org.apache.hadoop.fs.Path(base, s".rollup-old-date=${st.day}")
-      fs.delete(tmp, true) // stale sibling from a crashed run
-      // one output file: a day's rollup is tiny (hours × service triples)
-      dayAggregates(spark.read.parquet(s"$logPath/date=${st.day}"), numericKeys)
-        .coalesce(1)
-        .write.mode("overwrite").option("compression", "zstd")
-        .parquet(tmp.toString)
-      fs.delete(trash, true)
-      if (fs.exists(live) && !fs.rename(live, trash))
-        throw new java.io.IOException(s"rollup: cannot move $live aside")
-      if (!fs.rename(tmp, live)) {
-        fs.rename(trash, live) // roll back; day keeps its old rollup
-        throw new java.io.IOException(s"rollup: cannot publish $tmp")
+      DirSwap.publish(fs, new org.apache.hadoop.fs.Path(base, s"date=${st.day}")) { staged =>
+        // one output file: a day's rollup is tiny (hours × service triples)
+        dayAggregates(spark.read.parquet(s"$logPath/date=${st.day}"), numericKeys)
+          .coalesce(1)
+          .write.mode("overwrite").option("compression", "zstd")
+          .parquet(staged.toString)
       }
-      fs.delete(trash, true)
       st
     }
-
-    val refreshed =
-      if (jobParallelism == 1 || stale.size <= 1) stale.map(refreshOne)
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(jobParallelism, stale.size))
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        try {
-          val done = scala.concurrent.Future.sequence(
-            stale.map(st => scala.concurrent.Future(refreshOne(st))))
-          scala.concurrent.Await.result(done, scala.concurrent.duration.Duration.Inf)
-        } finally pool.shutdown()
-      }
+    val refreshed = DirSwap.rewriteEach(stale, jobParallelism)(refreshOne)
     orphaned.foreach { day =>
       fs.delete(new org.apache.hadoop.fs.Path(base, s"date=$day"), true)
     }

@@ -10,10 +10,9 @@ import graft.expressions.NgramBloomAgg
   * sidecar inside the table directory (underscore-prefixed, so Spark's
   * listing never surfaces it to table reads): path/identity conventions,
   * the sidecars' schemas, the fused probe with its per-generation cache,
-  * the one incremental build of both sidecars, and the stage-then-swap
-  * vacuum. [[NgramIndex]]
-  * (ngrambf-style bloom) and [[ZoneMapIndex]] (minmax) are the two
-  * instances; a fix to the swap or normalization logic lands in both by
+  * the one incremental build of both sidecars, and the vacuum.
+  * [[NgramIndex]] (ngrambf-style bloom) and [[ZoneMapIndex]] (minmax) are
+  * the two instances; a fix to the normalization logic lands in both by
   * construction.
   */
 private[graft] object SidecarIndex {
@@ -34,41 +33,15 @@ private[graft] object SidecarIndex {
   def norm(p: String): String =
     new org.apache.hadoop.fs.Path(p).toUri.getPath
 
-  private def stagedPath(tablePath: String, dirName: String) =
-    new org.apache.hadoop.fs.Path(tablePath, "." + dirName + ".vacuum")
-
-  private def asidePath(tablePath: String, dirName: String) =
-    new org.apache.hadoop.fs.Path(tablePath, "." + dirName + ".old")
-
-  /** Crash recovery for [[vacuum]]'s rename-aside swap: the staged dir is
-    * complete before the first rename ever runs, so index-missing +
-    * staged-present can only mean the crash fell between vacuum's two
-    * renames — promote the staged dir and carry on. (Same protocol as
-    * [[DedupIndex]]'s table vacuum.) Every read path funnels through
-    * [[indexFiles]], so recovery is automatic on the next probe.
-    */
-  private def recover(
-      spark: SparkSession, tablePath: String, dirName: String): Unit = {
-    val ip = indexPath(tablePath, dirName)
-    val fs = ip.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staged = stagedPath(tablePath, dirName)
-    if (!fs.exists(ip) && fs.exists(staged))
-      // concurrent readers (or vacuum's own promote) race to the same
-      // rename; exactly one wins and the state is healthy either way —
-      // only fail when the destination still doesn't exist afterwards
-      require(fs.rename(staged, ip) || fs.exists(ip),
-        s"sidecar vacuum recovery failed: $staged -> $ip")
-  }
-
-  /** The index dir's parquet files after [[recover]]; empty when the
-    * index does not exist.
+  /** The index dir's parquet files after [[DirSwap.recover]] completes an
+    * interrupted [[vacuum]] (every read path funnels through here); empty
+    * when the index does not exist.
     */
   private def indexFiles(spark: SparkSession, tablePath: String, dirName: String)
     : Seq[org.apache.hadoop.fs.FileStatus] = {
-    recover(spark, tablePath, dirName)
     val ip = indexPath(tablePath, dirName)
     val fs = ip.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(ip)) Nil
+    if (!DirSwap.recover(fs, ip)) Nil
     else fs.listStatus(ip).toSeq.filter(_.getPath.getName.endsWith(".parquet"))
   }
 
@@ -174,13 +147,6 @@ private[graft] object SidecarIndex {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     })
   }
-
-  /** The current generation's persisted index frame, or None when the
-    * index does not exist.
-    */
-  def readCached(
-      spark: SparkSession, tablePath: String, dirName: String): Option[DataFrame] =
-    generation(spark, tablePath, dirName).map(_.frame)
 
   /** [[Generation.coverage]] of the current generation; empty when the
     * index does not exist.
@@ -468,13 +434,8 @@ private[graft] object SidecarIndex {
     * file listing). Output is re-sized to `targetBytes` files, not
     * `coalesce(1)`.
     *
-    * Publish is a rename-ASIDE swap (dst → .old, staged → dst, drop
-    * .old), so a crash at any instant leaves a usable index: before the
-    * first rename dst is untouched; between the two renames the staged
-    * dir is already complete and [[recover]] promotes it on the next
-    * read; after the second only a stale .old lingers, cleared by the
-    * next vacuum. The swap steps are checked and throw rather than
-    * silently leaving a half state.
+    * Published with [[DirSwap]]; the next probe recovers an interrupted
+    * swap.
     */
   def vacuum(
       spark: SparkSession,
@@ -485,9 +446,6 @@ private[graft] object SidecarIndex {
     if (indexFiles(spark, tablePath, dirName).isEmpty) return 0L
     val ip = indexPath(tablePath, dirName)
     val fs = ip.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staged = stagedPath(tablePath, dirName)
-    val old = asidePath(tablePath, dirName)
-    fs.delete(old, true) // stale aside from a prior vacuum's last instant
     val sp = spark
     import sp.implicits._
     val live = broadcast(
@@ -497,16 +455,12 @@ private[graft] object SidecarIndex {
     val dead = keyed
       .join(live, keyed("_nf") === live("_live_file"), "left_anti").count()
     if (dead > 0) {
-      val bytes = fs.getContentSummary(ip).getLength
-      val parts = math.max(1L, bytes / targetBytes).toInt
-      keyed.join(live, keyed("_nf") === live("_live_file"), "left_semi")
-        .drop("_nf")
-        .coalesce(parts).write.mode("overwrite").parquet(staged.toString)
-      require(fs.rename(ip, old), s"vacuum swap (aside) failed: $ip -> $old")
-      require(fs.rename(staged, ip),
-        s"vacuum swap (promote) failed: $staged -> $ip")
-      fs.delete(old, true)
-      ()
+      val parts = math.max(1L, fs.getContentSummary(ip).getLength / targetBytes).toInt
+      DirSwap.publish(fs, ip) { staged =>
+        keyed.join(live, keyed("_nf") === live("_live_file"), "left_semi")
+          .drop("_nf")
+          .coalesce(parts).write.mode("overwrite").parquet(staged.toString)
+      }
     }
     dead
   }

@@ -141,22 +141,13 @@ object IngestStream {
       queryName: Option[String] = None,
       ngramIndex: Option[NgramIndex.Config] = None,
       zoneMapCols: Seq[String] = Nil): DataStreamWriter[org.apache.spark.sql.Row] = {
-    // resolved once per writer, on the driver (foreachBatch runs there):
-    // the checkpoint metadata file exists before the first batch fires
-    var generationId: String = null
+    val markers = new CommitMarkers(outPath, checkpoint,
+      ingested.sparkSession.sparkContext.hadoopConfiguration)
     val w = ingested.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val conf = batch.sparkSession.sparkContext.hadoopConfiguration
-        if (generationId == null)
-          generationId = checkpointGenerationId(checkpoint, conf)
-        val base = new org.apache.hadoop.fs.Path(outPath)
-        val fs = base.getFileSystem(conf)
-        val ns = new org.apache.hadoop.fs.Path(base,
-          s"_graft_batches/$generationId")
-        val marker = new org.apache.hadoop.fs.Path(ns, batchId.toString)
-        if (!fs.exists(marker)) {
+        if (!markers.done(batchId)) {
           // the write is the only pass over the batch: the days it touched
           // (same derivation as writePartitioned: date=to_date(timestamp))
           // come back as an observed metric of that write, not a second job
@@ -167,12 +158,7 @@ object IngestStream {
             touched.fold(batch)(o => batch.observe(o,
               collect_set(to_date(col("timestamp")).cast("string")).as("days"))),
             outPath, mode = "append")
-          fs.create(marker, true).close()
-          if (batchId >= MarkerRetention) {
-            val old = new org.apache.hadoop.fs.Path(ns,
-              (batchId - MarkerRetention).toString)
-            try { fs.delete(old, false); () } catch { case _: Exception => }
-          }
+          markers.commit(batchId)
           // Index-at-ingest (ClickHouse builds a part's minmax and
           // ngrambf_v1 granules inside the INSERT that writes it,
           // schema.sql:15-19): one read-back of the files in the days this
@@ -186,7 +172,7 @@ object IngestStream {
           touched.map(touchedDays(_, batchId)).filter(_.nonEmpty).foreach { days =>
             SidecarIndex.build(batch.sparkSession, outPath, ngramIndex, zoneMapCols,
               partitions = days.map(d =>
-                new org.apache.hadoop.fs.Path(base, s"date=$d").toString),
+                new org.apache.hadoop.fs.Path(outPath, s"date=$d").toString),
               dataSchema = Some(batch.schema))
           }
         }
@@ -217,6 +203,33 @@ object IngestStream {
     *     larger horizon is directory entries, not bytes.
     */
   val MarkerRetention = 128L
+
+  /** The commit markers of one idempotent `foreachBatch` sink writing
+    * `outPath` from `checkpoint`: [[done]] says whether `batchId` already
+    * committed, [[commit]] records it and prunes the marker
+    * [[MarkerRetention]] batches back. Each sink chooses where in its batch
+    * it commits. Markers live under
+    * `_graft_batches/<checkpoint-generation-id>/<batchId>`
+    * ([[sinkPartitionedParquet]] says why). The generation id is resolved
+    * at the first batch, on the driver (foreachBatch runs there), when the
+    * checkpoint metadata file exists.
+    */
+  private[streaming] final class CommitMarkers(
+      outPath: String, checkpoint: String, conf: org.apache.hadoop.conf.Configuration) {
+    private lazy val dir = new org.apache.hadoop.fs.Path(outPath,
+      s"_graft_batches/${checkpointGenerationId(checkpoint, conf)}")
+    private lazy val fs = dir.getFileSystem(conf)
+    private def marker(batchId: Long) = new org.apache.hadoop.fs.Path(dir, batchId.toString)
+
+    def done(batchId: Long): Boolean = fs.exists(marker(batchId))
+
+    def commit(batchId: Long): Unit = {
+      fs.create(marker(batchId), true).close()
+      if (batchId >= MarkerRetention)
+        try { fs.delete(marker(batchId - MarkerRetention), false); () }
+        catch { case _: Exception => }
+    }
+  }
 
   /** The days a batch's write reported through its observation. The
     * metric arrives on the listener bus just after the write returns; if it

@@ -197,18 +197,13 @@ object StreamOps {
     * whether or not that predecessor itself survived (the C4/keep-first
     * convention; near-dup chains collapse to their earliest member).
     *
-    * At-least-once via the [[IngestStream.sinkPartitionedParquet]] commit-
-    * marker pattern: replay of a COMMITTED batch is a full no-op (marker
-    * short-circuits the write, and [[graft.model.DedupIndex.append]] is
-    * idempotent on ids regardless), but a crash after the survivor append
-    * and before the marker re-appends that batch's survivors once on
-    * replay — the marker pattern's documented floor. Markers older than
-    * [[IngestStream.MarkerRetention]] batches are pruned as newer ones
-    * commit, so `_graft_batches` stays bounded on long-lived streams; the
-    * precise exactly-once horizon that pruning implies (Spark's own
-    * replay horizon sits strictly inside it; only an out-of-band
-    * checkpoint restore deeper than the horizon falls to at-least-once)
-    * is stated on [[IngestStream.MarkerRetention]]. Scale shape per batch: the batch is
+    * At-least-once via [[IngestStream.CommitMarkers]]: replay of a
+    * COMMITTED batch is a full no-op (marker short-circuits the write, and
+    * [[graft.model.DedupIndex.append]] is idempotent on ids regardless),
+    * but a crash after the survivor append and before the marker
+    * re-appends that batch's survivors once on replay — the marker
+    * pattern's documented floor, with the exactly-once horizon stated on
+    * [[IngestStream.MarkerRetention]]. Scale shape per batch: the batch is
     * broadcast into the index probe — the corpus tables never shuffle —
     * and the batch is persisted once for its three uses (probe, survivor
     * filter, append).
@@ -224,20 +219,13 @@ object StreamOps {
       trigger: org.apache.spark.sql.streaming.Trigger =
         org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
     : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    var generationId: String = null
+    val markers = new IngestStream.CommitMarkers(outPath, checkpoint,
+      docs.sparkSession.sparkContext.hadoopConfiguration)
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val conf = batch.sparkSession.sparkContext.hadoopConfiguration
-        if (generationId == null)
-          generationId = IngestStream.checkpointGenerationId(checkpoint, conf)
-        val base = new org.apache.hadoop.fs.Path(outPath)
-        val fs = base.getFileSystem(conf)
-        val ns = new org.apache.hadoop.fs.Path(base,
-          s"_graft_batches/$generationId")
-        val marker = new org.apache.hadoop.fs.Path(ns, batchId.toString)
-        if (!fs.exists(marker)) {
+        if (!markers.done(batchId)) {
           batch.persist()
           try {
             val pairs = graft.model.DedupIndex.incrementalPairs(
@@ -264,16 +252,57 @@ object StreamOps {
             // data re-appended once — the marker pattern's documented
             // at-least-once floor — and the index append is idempotent.
             graft.model.DedupIndex.append(survivors, idCol, textCol, indexDir)
-            fs.create(marker, true).close()
-            if (batchId >= IngestStream.MarkerRetention) {
-              val old = new org.apache.hadoop.fs.Path(ns,
-                (batchId - IngestStream.MarkerRetention).toString)
-              try { fs.delete(old, false); () } catch { case _: Exception => }
-            }
+            markers.commit(batchId)
           } finally { batch.unpersist(); () }
         }
         ()
       }
+  }
+
+  /** Compact the streaming fingerprint index: a marker-window replay can
+    * re-append a batch's survivor rows ([[dedupMediaAtIngest]]'s
+    * documented at-least-once floor — harmless duplicates under the
+    * probe's join semantics, but probe I/O forever). Rewrites the index
+    * to DISTINCT rows, published with [[graft.model.DirSwap]]. A MISSING
+    * fingerprint index is not a safe default (the next batch would probe
+    * against nothing and re-admit every known duplicate), so every index
+    * read in this file first recovers an interrupted swap. Returns the
+    * rows removed.
+    *
+    * `minBloatRatio` gates the rewrite: only compact when duplicates
+    * exceed that fraction of the distinct rows (0.0 = any duplicate
+    * triggers). The count-vs-distinct CHECK still runs — it is the
+    * cheap two-aggregate pass; the gate saves the expensive rewrite +
+    * double swap when the index is barely bloated, which is what a
+    * per-N-batches maintenance cadence wants ([[dedupMediaAtIngest]]'s
+    * `compactEvery`).
+    */
+  def compactMediaFpIndex(
+      spark: org.apache.spark.sql.SparkSession, indexDir: String,
+      minBloatRatio: Double = 0.0): Long = {
+    val idx = new org.apache.hadoop.fs.Path(indexDir)
+    val fs = idx.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!graft.model.DirSwap.recover(fs, idx)) return 0L
+    val rows = spark.read.parquet(indexDir)
+    // ONE aggregation pass decides the gate: count + exact distinct over
+    // the whole row ride the same job (a hot maintenance cadence would
+    // otherwise pay three reads of the index — count, distinct().count(),
+    // then the rewrite). Exact, not approx_count_distinct: the return
+    // value is spec-asserted and a 2% sketch error could skip a
+    // one-duplicate index under minBloatRatio = 0.0.
+    val g = rows.agg(
+      count(lit(1)).as("total"),
+      count_distinct(struct(rows.columns.map(col).toIndexedSeq: _*))
+        .as("kept")).head()
+    val total = g.getLong(0)
+    val kept = g.getLong(1)
+    if (kept == total || (total - kept) <= kept * minBloatRatio) return 0L
+    val parts = math.max(1, fs.listStatus(idx).count(_.getPath.getName.endsWith(".parquet")) / 4)
+    graft.model.DirSwap.publish(fs, idx) { staged =>
+      spark.read.parquet(indexDir).distinct()
+        .coalesce(parts).write.mode("overwrite").parquet(staged.toString)
+    }
+    total - kept
   }
 
   /** Perceptual media dedup AT INGEST — the [[dedupAtIngest]] loop for
@@ -309,76 +338,6 @@ object StreamOps {
     * `media` must carry the [[graft.operators.Multimodal.mediaSchema]]
     * columns (`id`, `kind`, `media`, …).
     */
-  private def fpStagedPath(idx: org.apache.hadoop.fs.Path) =
-    new org.apache.hadoop.fs.Path(idx.getParent, "." + idx.getName + ".vacuum")
-  private def fpAsidePath(idx: org.apache.hadoop.fs.Path) =
-    new org.apache.hadoop.fs.Path(idx.getParent, "." + idx.getName + ".old")
-
-  /** Crash recovery for [[compactMediaFpIndex]]'s rename-aside swap — the
-    * [[graft.model.SidecarIndex]] protocol: index-missing + staged-present
-    * can only mean the crash fell between the two renames, and a MISSING
-    * fingerprint index is not a safe default here (the next batch would
-    * probe against nothing and re-admit every known duplicate), so every
-    * index read in this file funnels through this promote-if-needed.
-    */
-  private def recoverFpIndex(
-      fs: org.apache.hadoop.fs.FileSystem,
-      idx: org.apache.hadoop.fs.Path): Unit = {
-    val staged = fpStagedPath(idx)
-    if (!fs.exists(idx) && fs.exists(staged))
-      require(fs.rename(staged, idx) || fs.exists(idx),
-        s"fingerprint index recovery failed: $staged -> $idx")
-  }
-
-  /** Compact the streaming fingerprint index: a marker-window replay can
-    * re-append a batch's survivor rows ([[dedupMediaAtIngest]]'s
-    * documented at-least-once floor — harmless duplicates under the
-    * probe's join semantics, but probe I/O forever). Rewrites the index
-    * to DISTINCT rows with the stage-then-swap publish, crash-safe at
-    * every instant (recovery above). Returns the rows removed.
-    *
-    * `minBloatRatio` gates the rewrite: only compact when duplicates
-    * exceed that fraction of the distinct rows (0.0 = any duplicate
-    * triggers). The count-vs-distinct CHECK still runs — it is the
-    * cheap two-aggregate pass; the gate saves the expensive rewrite +
-    * double swap when the index is barely bloated, which is what a
-    * per-N-batches maintenance cadence wants ([[dedupMediaAtIngest]]'s
-    * `compactEvery`).
-    */
-  def compactMediaFpIndex(
-      spark: org.apache.spark.sql.SparkSession, indexDir: String,
-      minBloatRatio: Double = 0.0): Long = {
-    val idx = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = idx.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverFpIndex(fs, idx)
-    if (!fs.exists(idx)) return 0L
-    val rows = spark.read.parquet(indexDir)
-    // ONE aggregation pass decides the gate: count + exact distinct over
-    // the whole row ride the same job (a hot maintenance cadence would
-    // otherwise pay three reads of the index — count, distinct().count(),
-    // then the rewrite). Exact, not approx_count_distinct: the return
-    // value is spec-asserted and a 2% sketch error could skip a
-    // one-duplicate index under minBloatRatio = 0.0.
-    val g = rows.agg(
-      count(lit(1)).as("total"),
-      count_distinct(struct(rows.columns.map(col).toIndexedSeq: _*))
-        .as("kept")).head()
-    val total = g.getLong(0)
-    val kept = g.getLong(1)
-    if (kept == total || (total - kept) <= kept * minBloatRatio) return 0L
-    val staged = fpStagedPath(idx)
-    val aside = fpAsidePath(idx)
-    fs.delete(aside, true) // stale aside from a prior compact's last instant
-    spark.read.parquet(indexDir).distinct()
-      .coalesce(math.max(1, fs.listStatus(idx).count(
-        _.getPath.getName.endsWith(".parquet")) / 4))
-      .write.mode("overwrite").parquet(staged.toString)
-    require(fs.rename(idx, aside), s"fp compact swap (aside) failed: $idx")
-    require(fs.rename(staged, idx), s"fp compact swap (promote) failed: $idx")
-    fs.delete(aside, true)
-    total - kept
-  }
-
   def dedupMediaAtIngest(
       media: DataFrame,
       indexDir: String,
@@ -391,7 +350,8 @@ object StreamOps {
       compactBloatRatio: Double = 0.25)
     : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     import graft.operators.Multimodal
-    var generationId: String = null
+    val markers = new IngestStream.CommitMarkers(outPath, checkpoint,
+      media.sparkSession.sparkContext.hadoopConfiguration)
     media.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
@@ -399,14 +359,7 @@ object StreamOps {
         val spark = batch.sparkSession
         import spark.implicits._
         val conf = spark.sparkContext.hadoopConfiguration
-        if (generationId == null)
-          generationId = IngestStream.checkpointGenerationId(checkpoint, conf)
-        val base = new org.apache.hadoop.fs.Path(outPath)
-        val fs = base.getFileSystem(conf)
-        val ns = new org.apache.hadoop.fs.Path(base,
-          s"_graft_batches/$generationId")
-        val marker = new org.apache.hadoop.fs.Path(ns, batchId.toString)
-        if (!fs.exists(marker)) {
+        if (!markers.done(batchId)) {
           batch.persist()
           try {
             val fps = Multimodal.perceptualFingerprints(
@@ -417,12 +370,11 @@ object StreamOps {
             try {
               val idxPath = new org.apache.hadoop.fs.Path(indexDir)
               val idxFs = idxPath.getFileSystem(conf)
-              recoverFpIndex(idxFs, idxPath)
               // batch rows with an indexed predecessor (any OTHER id on
               // the same fingerprint): aggregate before returning, so
               // only victim ids — bounded by the batch — leave the join
               val corpusVictims: DataFrame =
-                if (!idxFs.exists(idxPath) ||
+                if (!graft.model.DirSwap.recover(idxFs, idxPath) ||
                     !idxFs.listStatus(idxPath).exists(
                       _.getPath.getName.endsWith(".parquet")))
                   Seq.empty[Long].toDF("victim")
@@ -447,24 +399,19 @@ object StreamOps {
                     col("id").cast("long").as("sid"))),
                   fps("id") === col("sid"), "left_semi")
                 .write.mode("append").parquet(indexDir)
-              fs.create(marker, true).close()
-              if (batchId >= IngestStream.MarkerRetention) {
-                val old = new org.apache.hadoop.fs.Path(ns,
-                  (batchId - IngestStream.MarkerRetention).toString)
-                try { fs.delete(old, false); () } catch { case _: Exception => }
-              }
+              markers.commit(batchId)
               // maintenance cadence (LogSchema.compactPartitions's
               // background-merge analogue): every `compactEvery`
               // committed batches, reclaim the at-least-once replay
               // bloat — gated on the rows-vs-distinct ratio so a clean
               // index never pays the rewrite. Runs AFTER the marker, so
               // a crash mid-compact replays as a no-op (marker present)
-              // and the swap's own crash-safety (recoverFpIndex) holds.
+              // and the swap's own crash-safety (DirSwap) holds.
               // Best-effort: the marker is already written, so dedup
               // correctness never depends on this succeeding — a
               // transient FS error here must not fail the batch and put
               // the query into a retry loop whose replay is a no-op
-              // anyway. The swap itself is crash-safe (recoverFpIndex);
+              // anyway. The swap itself is crash-safe (DirSwap);
               // a skipped compaction is retried at the next cadence tick.
               if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
                 try { compactMediaFpIndex(spark, indexDir, compactBloatRatio); () }

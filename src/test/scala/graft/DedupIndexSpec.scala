@@ -122,12 +122,39 @@ class DedupIndexSpec extends SparkTestBase {
     // complete, promote-rename never executed — dst missing, staged
     // present, a stale .old lingering
     import java.nio.file.{Files, Paths}
-    Files.move(Paths.get(s"$dir/bands"), Paths.get(s"$dir/.bands.vacuum"))
+    Files.move(Paths.get(s"$dir/bands"), Paths.get(s"$dir/.bands.staged"))
     Files.createDirectory(Paths.get(s"$dir/.bands.old"))
     assert(all() == before) // read recovered, not errored
     // and the recovery was durable: the table dir is back in place
     assert(Files.exists(Paths.get(s"$dir/bands")))
-    assert(!Files.exists(Paths.get(s"$dir/.bands.vacuum")))
+    assert(!Files.exists(Paths.get(s"$dir/.bands.staged")))
+  }
+
+  test("readers racing to recover one between-renames state all succeed") {
+    val dir = tmp("graft-dedupidx-race")
+    DedupIndex.build(corpus, "doc_id", "text", dir, params)
+    def all() = DedupIndex.allPairs(spark, dir, jaccardThreshold = 0.5)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val before = all()
+    import java.nio.file.{Files, Paths}
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(16)
+    try (1 to 10).foreach { _ =>
+      // a crash between each table's renames: the complete staged bands
+      // are promoted, the aside sketches (nothing staged) restored. Every
+      // reader finds both tables missing and races the others to the same
+      // renames; the losers must read the winner's dir, not throw
+      Files.move(Paths.get(s"$dir/bands"), Paths.get(s"$dir/.bands.staged"))
+      Files.move(Paths.get(s"$dir/sketches"), Paths.get(s"$dir/.sketches.old"))
+      val gate = new java.util.concurrent.CountDownLatch(1)
+      val reads = (0 until 16).map(_ => pool.submit(() => {
+        gate.await()
+        DedupIndex.allPairs(spark, dir, jaccardThreshold = 0.5)
+      }))
+      gate.countDown()
+      reads.foreach(_.get()) // rethrows any reader's failure
+      assert(Files.exists(Paths.get(s"$dir/bands")) && Files.exists(Paths.get(s"$dir/sketches")))
+    } finally pool.shutdown()
+    assert(all() == before)
   }
 
   test("property: incremental ≡ from-scratch on seeded random corpora with heavy overlap") {

@@ -179,10 +179,10 @@ class LogSchemaSpec extends SparkTestBase {
       .filter(_.getName.startsWith("date=")).sortBy(_.getName)
     // crash between the two renames: live dir moved aside, nothing published
     val victim = dirs.head
-    val trash = new java.io.File(out, ".compact-old-" + victim.getName)
+    val trash = new java.io.File(out, "." + victim.getName + ".old")
     assert(victim.renameTo(trash))
     // debris case: a stale trash dir NEXT TO a live partition
-    val debris = new java.io.File(out, ".compact-old-" + dirs.last.getName)
+    val debris = new java.io.File(out, "." + dirs.last.getName + ".old")
     assert(debris.mkdir())
     val stats = LogSchema.compactPartitions(spark, out,
       targetBytes = 1L << 40, minFiles = 2)
@@ -190,6 +190,33 @@ class LogSchemaSpec extends SparkTestBase {
     assert(new java.io.File(out, victim.getName).exists(), "victim restored")
     assert(!trash.exists() && !debris.exists(), "recovery leaves no hidden dirs")
     assert(LogSchema.readLogs(spark, out).count() == beforeRows)
+  }
+
+  test("a materialize that crashed between its renames is healed by the next compaction, row count unchanged") {
+    val out = tmp("graft-materialize-crash")
+    val logs = LogSchema.logsFromEvents(
+      graft.sources.Tables.events(spark, sf())).drop("id")
+    logs.withColumn("date", to_date(col("timestamp")))
+      .repartition(3)
+      .write.mode("overwrite").partitionBy("date").parquet(out)
+    val beforeRows = LogSchema.readLogs(spark, out).count()
+    val victim = new java.io.File(out).listFiles()
+      .filter(_.getName.startsWith("date=")).minBy(_.getName)
+    // the state materializePromotedColumns leaves when it dies between its
+    // two renames: the complete rewrite staged, the live day moved aside
+    LogSchema.withPromotedColumns(spark.read.parquet(victim.getPath),
+        stringKeys = Seq("event.type"))
+      .write.parquet(new java.io.File(out, "." + victim.getName + ".staged").getPath)
+    assert(victim.renameTo(new java.io.File(out, "." + victim.getName + ".old")))
+    assert(LogSchema.readLogs(spark, out).count() < beforeRows, "the day is hidden")
+    LogSchema.compactPartitions(spark, out, targetBytes = 1L << 40, minFiles = 2)
+    assert(victim.isDirectory, "compaction brings the day back")
+    assert(new java.io.File(out).listFiles().forall(f => !f.isDirectory || !f.getName.startsWith(".")),
+      "no hidden dir is left")
+    assert(LogSchema.readLogs(spark, out).count() == beforeRows)
+    assert(spark.read.parquet(victim.getPath).columns
+      .contains(graft.plans.PromoteMapKeys.promotedName("event.type")),
+      "the complete staged rewrite is the one published")
   }
 
   test("partitionStats: footer-only day stats agree with the filesystem and " +

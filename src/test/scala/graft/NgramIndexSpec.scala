@@ -378,7 +378,7 @@ class NgramIndexSpec extends SparkTestBase {
     // complete staged dir present — exactly the state the old
     // delete-then-rename protocol could strand forever
     val staged = new org.apache.hadoop.fs.Path(table,
-      "." + NgramIndex.IndexDirName + ".vacuum")
+      "." + NgramIndex.IndexDirName + ".staged")
     require(fs.rename(ip, staged))
     assert(!fs.exists(ip) && fs.exists(staged))
     val p = NgramIndex.prune(spark, table, "purchase")

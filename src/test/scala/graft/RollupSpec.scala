@@ -136,6 +136,60 @@ class RollupSpec extends SparkTestBase {
       "re-aggregating merged files must not change the rollup")
   }
 
+  private def hiddenIn(dir: String): Seq[String] =
+    new java.io.File(dir).listFiles().map(_.getName)
+      .filter(n => n.startsWith(".") && !n.endsWith(".crc")).toSeq
+
+  test("refresh crash windows on a changed day: an undone promote is completed, a stale staged dir is cleared") {
+    val src = tmp("rollup-src"); val out = tmp("rollup-out")
+    val initial = logsDf(days = 2, perDay = 48)
+    LogSchema.writePartitioned(initial, src)
+    Rollup.refresh(spark, src, out)
+    val late = logsDf(days = 2, perDay = 60, tag = "late-")
+      .where(to_date(col("timestamp")) === "2024-02-02")
+    LogSchema.writePartitioned(late, src, mode = "append")
+    // a refresh that died between its renames on day 2: the new aggregate
+    // staged and complete, the old day moved aside
+    val day2 = new java.io.File(out, "date=2024-02-02")
+    Rollup.dayAggregates(spark.read.parquet(s"$src/date=2024-02-02")).coalesce(1)
+      .write.parquet(new java.io.File(out, ".date=2024-02-02.staged").getPath)
+    assert(day2.renameTo(new java.io.File(out, ".date=2024-02-02.old")))
+    // and one that died before its first rename on day 1, mid-write
+    val torn = new java.io.File(out, ".date=2024-02-01.staged")
+    assert(torn.mkdir())
+    java.nio.file.Files.write(new java.io.File(torn, "part-00000.parquet").toPath,
+      "torn".getBytes("UTF-8"))
+    assert(Rollup.refresh(spark, src, out) ==
+      Seq(Rollup.RefreshStat("2024-02-02", "changed")))
+    assert(rollupAggregate(out) == directAggregate(initial.unionByName(late)))
+    assert(hiddenIn(out).isEmpty, hiddenIn(out).toString)
+  }
+
+  test("refresh crash window on a new day: a partially written staged day is never published") {
+    val src = tmp("rollup-src"); val out = tmp("rollup-out")
+    val all = logsDf(days = 3, perDay = 48)
+    val initial = all.where(to_date(col("timestamp")) < "2024-02-03")
+    LogSchema.writePartitioned(initial, src)
+    Rollup.refresh(spark, src, out)
+    LogSchema.writePartitioned(all.where(to_date(col("timestamp")) === "2024-02-03"),
+      src, mode = "append")
+    // the first refresh of day 3 died in the middle of its write: a torn
+    // file in the staged dir, no _SUCCESS, nothing to move aside
+    val torn = new java.io.File(out, ".date=2024-02-03.staged")
+    assert(torn.mkdir())
+    java.nio.file.Files.write(new java.io.File(torn, "part-00000.parquet").toPath,
+      "torn".getBytes("UTF-8"))
+    val day3 = new org.apache.hadoop.fs.Path(out, "date=2024-02-03")
+    val fs = day3.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(!graft.model.DirSwap.recover(fs, day3) && !fs.exists(day3),
+      "recovery must not publish the torn day")
+    assert(rollupAggregate(out) == directAggregate(initial))
+    assert(Rollup.refresh(spark, src, out) ==
+      Seq(Rollup.RefreshStat("2024-02-03", "new")))
+    assert(rollupAggregate(out) == directAggregate(all))
+    assert(hiddenIn(out).isEmpty, hiddenIn(out).toString)
+  }
+
   test("distinct-pod HLL sketches merge across rollup rows within tolerance") {
     val src = tmp("rollup-src"); val out = tmp("rollup-out")
     val logs = logsDf(days = 3, perDay = 120)

@@ -417,6 +417,39 @@ class StreamingSpec extends SparkTestBase {
     assert(spark.read.parquet(idx).count() == 3L)
   }
 
+  test("fingerprint index compaction crash windows: an undone promote is completed, a torn staged dir is cleared") {
+    import spark.implicits._
+    val parent = tmp("graft-fpcrash")
+    val idx = parent + "/fpidx"
+    val rows = Seq((1L, "image", 11L, 12L), (2L, "audio", 21L, 22L))
+      .toDF("id", "mod", "h1", "h2")
+    rows.write.parquet(idx)
+    rows.write.mode("append").parquet(idx)
+    val fs = new org.apache.hadoop.fs.Path(idx)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val live = new org.apache.hadoop.fs.Path(idx)
+    val staged = new org.apache.hadoop.fs.Path(parent, ".fpidx.staged")
+    def hidden() = new java.io.File(parent).listFiles().map(_.getName)
+      .filter(n => n.startsWith(".") && !n.endsWith(".crc")).toSeq
+    // a compaction that died between its renames: the distinct rows staged
+    // and complete, the bloated index moved aside
+    rows.write.parquet(staged.toString)
+    require(fs.rename(live, new org.apache.hadoop.fs.Path(parent, ".fpidx.old")))
+    assert(StreamOps.compactMediaFpIndex(spark, idx) == 0L,
+      "the promoted index is the compacted one")
+    assert(spark.read.parquet(idx).count() == 2L)
+    // one that died before its first rename, mid-write, next to a bloated index
+    rows.write.mode("append").parquet(idx)
+    fs.mkdirs(staged)
+    val torn = fs.create(new org.apache.hadoop.fs.Path(staged, "part-00000.parquet"))
+    try torn.write("torn".getBytes("UTF-8")) finally torn.close()
+    assert(StreamOps.compactMediaFpIndex(spark, idx) == 2L)
+    assert(spark.read.parquet(idx).as[(Long, String, Long, Long)].collect().toSet ==
+      rows.as[(Long, String, Long, Long)].collect().toSet)
+    assert(spark.read.parquet(idx).count() == 2L)
+    assert(hidden().isEmpty, hidden().toString)
+  }
+
   test("anomalyAlerts: stateful streaming scores ≡ batch volumeAnomalies on the same events") {
     import spark.implicits._
     import org.apache.spark.sql.types._

@@ -133,13 +133,15 @@ class ZoneMapSpec extends SparkTestBase {
     ZoneMapIndex.build(spark, out, Seq("x"))
     val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sharedState.cacheManager
-    // the cache entry the current generation's frame reads through
+    // every generation reads the same path, so their plans match: a stale
+    // entry left registered would be substituted into every later read.
+    // The cache entry the current generation's frame reads through, found
+    // through that same plan
     def entry() = cm.lookupCachedData(
-      SidecarIndex.readCached(spark, out, ZoneMapIndex.IndexDirName).get
+      spark.read.schema(SidecarIndex.ZoneMapSchema)
+        .parquet(SidecarIndex.indexPath(out, ZoneMapIndex.IndexDirName).toString)
         .asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
       .get.cachedRepresentation.cacheBuilder
-    // every generation reads the same path, so their plans match: a stale
-    // entry left registered would be substituted into every later read
     def probeReleases(change: => Unit): Unit = {
       ZoneMapIndex.prune(spark, out, "x", 2500d, 3500d)
       val old = entry()
@@ -330,7 +332,7 @@ class ZoneMapSpec extends SparkTestBase {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val ip = new org.apache.hadoop.fs.Path(out, ZoneMapIndex.IndexDirName)
     val staged = new org.apache.hadoop.fs.Path(out,
-      "." + ZoneMapIndex.IndexDirName + ".vacuum")
+      "." + ZoneMapIndex.IndexDirName + ".staged")
     require(fs.rename(ip, staged)) // crash fell between vacuum's renames
     val p = ZoneMapIndex.prune(spark, out, "x", 2500d, 3500d)
     assert(p.isDefined && p.get.pruned >= 5,
