@@ -82,14 +82,25 @@ private[graft] object DirSwap {
     * then delete those siblings. Writers only.
     */
   def sweep(fs: FileSystem, base: Path): Unit =
-    if (fs.exists(base))
-      fs.listStatus(base).toSeq.map(_.getPath.getName).collect {
-        case Hidden(name) => new Path(base, name)
-      }.distinct.foreach { live =>
-        recover(fs, live)
-        fs.delete(staged(live), true)
-        fs.delete(aside(live), true)
-      }
+    interrupted(fs, base).foreach { live =>
+      recover(fs, live)
+      fs.delete(staged(live), true)
+      fs.delete(aside(live), true)
+    }
+
+  /** [[recover]] every dir under `base` with a staged or aside sibling,
+    * deleting nothing: the read-only half of [[sweep]], safe for readers
+    * of another writer's dir.
+    */
+  def recoverAll(fs: FileSystem, base: Path): Unit =
+    interrupted(fs, base).foreach(recover(fs, _))
+
+  /** The live dirs under `base` that have a staged or aside sibling. */
+  private def interrupted(fs: FileSystem, base: Path): Seq[Path] =
+    if (!fs.exists(base)) Nil
+    else fs.listStatus(base).toSeq.map(_.getPath.getName).collect {
+      case Hidden(name) => new Path(base, name)
+    }.distinct
 
   /** `f` over `items`, up to `parallelism` of them at once as concurrent
     * Spark jobs (driver threads), results in `items`' order. One rewrite

@@ -158,8 +158,50 @@ object LogSchema {
         .option(s"parquet.bloom.filter.expected.ndv#$c", "100000")
     }
 
-  def readLogs(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+  /** The table at `path` as a parquet read, resolved once per listing
+    * generation: the schema Spark infers (one Spark job) is kept per
+    * session under the table's file listing signature, and later reads of
+    * the same listing state it instead. Any write creates fresh file
+    * names, so a new generation (a new day, a materialize that promoted
+    * columns) infers again; the entries of older generations of the path
+    * are dropped when a new one starts. The signature costs one driver
+    * listing of the table's visible dirs, the listing Spark's own read
+    * repeats anyway.
+    */
+  def readLogs(spark: SparkSession, path: String): DataFrame = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    listingSignature(fs, root).fold(spark.read.parquet(path)) { sig =>
+      val schema = tableSchemas(spark, (path, sig)) {
+        tableSchemas.invalidate { case (p, s) => p == path && s != sig }
+        spark.read.parquet(path).schema
+      }
+      spark.read.schema(schema).parquet(path)
+    }
+  }
+
+  // keyed by (table path, listing signature): a new signature is a new generation
+  private val tableSchemas =
+    new graft.SessionCache[(String, Seq[(String, Long, Long)]), StructType]()
+
+  /** (path below `root`, length, mtime) of every file a parquet read of
+    * `root` lists, sorted; None when `root` does not exist. Hidden names
+    * follow Spark's listing rule: a `.` prefix, or a `_` prefix on a name
+    * that is no `k=v` partition, except the parquet summary files.
+    */
+  private def listingSignature(
+      fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path): Option[Seq[(String, Long, Long)]] = {
+    def hidden(n: String) =
+      ((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") || n.endsWith("._COPYING_")) &&
+        !n.startsWith("_common_metadata") && !n.startsWith("_metadata")
+    def walk(st: org.apache.hadoop.fs.FileStatus, rel: String): Seq[(String, Long, Long)] =
+      if (!st.isDirectory) Seq((rel, st.getLen, st.getModificationTime))
+      else fs.listStatus(st.getPath).toSeq.filterNot(c => hidden(c.getPath.getName))
+        .flatMap(c => walk(c, rel + "/" + c.getPath.getName))
+    try Some(walk(fs.getFileStatus(root), "").sorted)
+    catch { case _: java.io.FileNotFoundException => None }
+  }
 
   /** Execute retention: delete expired daily partition directories and
     * return what was dropped (the TTL job, /root/reference/schema.sql:19

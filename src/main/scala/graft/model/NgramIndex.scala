@@ -175,8 +175,8 @@ object NgramIndex {
         if (p.candidates.isEmpty) full.limit(0)
         else spark.read
           // reuse the already-resolved table schema: skips one
-          // schema-inference job per candidate relation (r15, guide §5 —
-          // readLogs is a bare parquet read, so the schemas coincide)
+          // schema-inference job per candidate relation (the candidates
+          // are files of the same table, so the schemas coincide)
           .schema(logs.schema)
           .option("basePath", tablePath) // keep the `date` partition column
           .parquet(p.candidates: _*)

@@ -1,6 +1,7 @@
 package graft.model
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
 /** Incrementally-maintained per-partition rollups — the Spark analogue of
@@ -139,9 +140,28 @@ object Rollup {
   def podsChurned(a: Column, b: Column): Column =
     theta_sketch_estimate(theta_difference(a, b))
 
-  /** Partition-discovery read of the rollup table (recovers `date`). */
-  def readRollup(spark: SparkSession, rollupPath: String): DataFrame =
-    spark.read.parquet(rollupPath)
+  /** Partition-discovery read of the rollup table (recovers `date`),
+    * packed into read partitions by bytes alone: ⌈rollup bytes /
+    * `spark.sql.files.maxPartitionBytes`⌉ of them, at least one. The byte
+    * count is the listing the read already holds.
+    *
+    * Rollup days are tiny by construction (hours × service triples), and
+    * Spark's per-file open cost would otherwise spread a week of 40 KB
+    * days over seven tasks. A rollup that fits one split reads as one
+    * partition, which already satisfies a chart's grouping and ordering:
+    * the routed charts of [[graft.query.LogQuery]] then plan no exchange
+    * and run as one Spark job of one task. A larger rollup keeps one
+    * partition per split, so the read stays bounded by rollup bytes, not
+    * by one task.
+    */
+  def readRollup(spark: SparkSession, rollupPath: String): DataFrame = {
+    val df = spark.read.parquet(rollupPath)
+    val bytes = df.queryExecution.analyzed.collectFirst { case l: LogicalRelation => l.relation }
+      .collect { case r: HadoopFsRelation => r.location.sizeInBytes }.getOrElse(0L)
+    val split = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      spark.conf.get("spark.sql.files.maxPartitionBytes"))
+    df.coalesce(math.max(1L, (bytes + split - 1) / split).toInt)
+  }
 
   private val stateFile = "_rollup_state.tsv"
 
@@ -196,6 +216,10 @@ object Rollup {
       spark: SparkSession, logPath: String): Map[String, String] = {
     val base = new org.apache.hadoop.fs.Path(logPath)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // a day a crashed compaction or materialize left hidden under
+    // `.date=X.old`/`.date=X.staged` is still a source day: recover it
+    // read-only first, or it would count as dropped and lose its rollup day
+    DirSwap.recoverAll(fs, base)
     if (!fs.exists(base)) Map.empty
     else fs.listStatus(base).toSeq
       .map(_.getPath)

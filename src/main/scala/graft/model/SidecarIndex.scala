@@ -118,15 +118,15 @@ private[graft] object SidecarIndex {
     *
     * Starting a generation unpersists every older generation of the dir
     * (in every session) eagerly, non-blocking, BEFORE the new frame
-    * persists. Eagerness is a CORRECTNESS requirement, not hygiene:
-    * persist() registers the frame's analyzed plan with the CacheManager,
-    * which SUBSTITUTES the cached InMemoryRelation into ANY later read of
-    * the same path — leave the stale entry registered and the
-    * post-rebuild re-read (and even an uncached `spark.read`) silently serves
-    * the PREVIOUS generation's rows (reproduced: vacuum convergence broke
-    * under lazy abandon). A probe still executing against the old frame
-    * recomputes from the file list its plan captured, completing on the
-    * old files or failing loudly if maintenance removed them — never
+    * persists, so the dir's cached blocks are its current generation's
+    * only. persist() registers the frame's analyzed plan with the
+    * CacheManager, which substitutes the cached relation into any later
+    * read of the same files; a generation's frame names its own part files
+    * ([[readSidecar]]) and every build or vacuum writes fresh names, so no
+    * read of a newer generation is served an older one's rows. A probe
+    * still executing against the old frame recomputes from the file list
+    * its plan captured, completing on the old files or failing loudly if
+    * maintenance removed them — never
     * silently mixing generations (index builds/vacuums are maintenance
     * operations; run one writer per table at a time). Two-session and
     * cross-generation concurrency is exercised by ZoneMapSpec's hammer
@@ -141,12 +141,21 @@ private[graft] object SidecarIndex {
     val sig = files.map(st => (st.getPath.getName, st.getLen, st.getModificationTime))
       .sortBy(_._1)
     Some(generations(spark, (dir, sig)) {
-      generations.invalidate({ case (d, s) => d == dir && s != sig },
-        _.frame.unpersist(blocking = false))
-      new Generation(readSidecar(spark, tablePath, dirName)
+      release(dir, keep = Some(sig))
+      new Generation(readSidecar(spark, dirName, files)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     })
   }
+
+  /** Drop the cached generations of `dir` (in every session) other than
+    * `keep`, unpersisting their frames: a new generation, or a rewrite
+    * that deletes their files, retires them. A retired frame left
+    * registered would be re-listed by Spark's write-path recache of the
+    * dir after its files are gone.
+    */
+  private def release(dir: String, keep: Option[Seq[(String, Long, Long)]] = None): Unit =
+    generations.invalidate({ case (d, s) => d == dir && !keep.contains(s) },
+      _.frame.unpersist(blocking = false))
 
   /** [[Generation.coverage]] of the current generation; empty when the
     * index does not exist.
@@ -257,14 +266,19 @@ private[graft] object SidecarIndex {
     else if (dirName == ZoneMapIndex.IndexDirName) ZoneMapSchema
     else throw new IllegalArgumentException(s"unknown sidecar $dirName")
 
-  /** The sidecar's `columns` (all when none are named) read with its schema. */
+  /** The sidecar's `columns` (all when none are named) read with its
+    * schema from `files`, the part files [[indexFiles]] listed (non-empty).
+    * Naming the files, not the `_`-prefixed dir, is what a read of an
+    * underscore dir needs: Spark treats such a root as hidden and warns
+    * that it ignored it.
+    */
   private def readSidecar(
-      spark: SparkSession, tablePath: String, dirName: String,
+      spark: SparkSession, dirName: String, files: Seq[org.apache.hadoop.fs.FileStatus],
       columns: String*): DataFrame = {
     val all = schemaOf(dirName)
     spark.read
       .schema(if (columns.isEmpty) all else StructType(all.filter(f => columns.contains(f.name))))
-      .parquet(indexPath(tablePath, dirName).toString)
+      .parquet(files.map(_.getPath.toString): _*)
   }
 
   /** What one [[build]] indexed: the live files given an n-gram row, and
@@ -332,11 +346,13 @@ private[graft] object SidecarIndex {
       else partitions
         .map(d => col("file").contains("/" + new org.apache.hadoop.fs.Path(d).getName + "/"))
         .reduce(_ || _)
-    def pairs(dirName: String, dimCol: String, wanted: Column): Option[DataFrame] =
-      if (rebuild || indexFiles(spark, tablePath, dirName).isEmpty) None
-      else Some(readSidecar(spark, tablePath, dirName, "file", dimCol)
+    def pairs(dirName: String, dimCol: String, wanted: Column): Option[DataFrame] = {
+      val files = if (rebuild) Nil else indexFiles(spark, tablePath, dirName)
+      if (files.isEmpty) None
+      else Some(readSidecar(spark, dirName, files, "file", dimCol)
         .where(inScope && wanted)
         .select(lit(dirName).as("idx"), col("file"), col(dimCol).cast("string").as("dim")))
+    }
     // (sidecar, normalized file) -> dims covered
     val have: Map[(String, String), Set[String]] =
       (ngram.flatMap(c => pairs(ngramDir, "n", col("n") === c.n)) ++
@@ -380,6 +396,10 @@ private[graft] object SidecarIndex {
       else None
     val perFile = shared.fold(agg)(spark.createDataFrame(_, agg.schema))
     val mode = if (rebuild) "overwrite" else "append"
+    // an overwrite deletes the cached generations' files
+    if (rebuild)
+      (cfg.map(_ => ngramDir) ++ Some(zoneDir).filter(_ => zCols.nonEmpty))
+        .foreach(d => release(indexPath(tablePath, d).toString))
     try {
       cfg.foreach { c =>
         val rows = perFile.select(col("file"), col("bloom"), lit(c.n).as("n"))
@@ -443,14 +463,15 @@ private[graft] object SidecarIndex {
       dirName: String,
       liveFiles: => Seq[String],
       targetBytes: Long = 128L << 20): Long = {
-    if (indexFiles(spark, tablePath, dirName).isEmpty) return 0L
+    val files = indexFiles(spark, tablePath, dirName)
+    if (files.isEmpty) return 0L
     val ip = indexPath(tablePath, dirName)
     val fs = ip.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val sp = spark
     import sp.implicits._
     val live = broadcast(
       liveFiles.map(norm).toDF("_live_file"))
-    val idx = readSidecar(spark, tablePath, dirName)
+    val idx = readSidecar(spark, dirName, files)
     val keyed = idx.withColumn("_nf", normFile(col("file")))
     val dead = keyed
       .join(live, keyed("_nf") === live("_live_file"), "left_anti").count()
@@ -461,6 +482,7 @@ private[graft] object SidecarIndex {
           .drop("_nf")
           .coalesce(parts).write.mode("overwrite").parquet(staged.toString)
       }
+      release(ip.toString)
     }
     dead
   }

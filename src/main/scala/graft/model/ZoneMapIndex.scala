@@ -187,7 +187,9 @@ object ZoneMapIndex {
     // coerce against a double literal, identical coercion for the rest
     def exact(df: DataFrame, r: (String, Double, Double)) =
       df.where(col(r._1).cast("double").between(r._2, r._3))
-    val fullTable = spark.read.parquet(tablePath)
+    // the table resolved once per listing generation: no schema-inference
+    // job on a warm table
+    val fullTable = LogSchema.readLogs(spark, tablePath)
     val aligned = pruneAllAligned(spark, tablePath, ranges,
       fullTable.inputFiles.toSeq)
     // Candidate relations reuse the already-resolved table schema (skips

@@ -517,16 +517,28 @@ object LogQuery {
 
   /** The volume chart rendered above every log list in the front-end:
     * matching-row counts per time bucket. One partial-aggregated shuffle on
-    * the bucket key; the filter evaluates at the scan.
+    * the bucket key; the filter evaluates at the scan. The result is
+    * sorted in one partition ([[sortedChart]]; one row per bucket), so the
+    * request runs two Spark jobs: the scan stage and the final one.
     *
     * Returns `(bucket_ms, cnt)` — bucket start as epoch millis, count —
     * ordered by bucket.
     */
   def volume(df: DataFrame, query: String, bucket: String = "hour"): DataFrame =
-    filter(df, query)
+    sortedChart(filter(df, query)
       .groupBy(unix_millis(date_trunc(bucket, col("timestamp"))).as("bucket_ms"))
-      .agg(count(lit(1)).as("cnt"))
-      .orderBy("bucket_ms")
+      .agg(count(lit(1)).as("cnt")), "bucket_ms")
+
+  /** A chart's result sorted in ONE partition: `coalesce(1)` before the
+    * sort. The callers collect these results, and each holds at most one
+    * row per bucket and group, so the single sort task is bounded by the
+    * result size. A range-partitioned global sort would add a sampling job
+    * and a second shuffle that a collected result never benefits from.
+    * `keys` are unique in each chart's output, so the order is total and
+    * the answer is the same as the global sort's.
+    */
+  private def sortedChart(df: DataFrame, keys: String*): DataFrame =
+    df.coalesce(1).orderBy(keys.map(col): _*)
 
   /** The rollup's dimension columns — a filter touching only these is
     * answerable from the pre-aggregate, because every raw row contributes
@@ -561,6 +573,11 @@ object LogQuery {
     * dimension columns physically, so the predicate resolves to direct
     * columns, and summing `cnt` over matching groups equals counting
     * matching raw rows.
+    *
+    * Over a [[graft.model.Rollup.readRollup]] frame that fits one split
+    * (its read is one partition, bounded by rollup bytes), the grouping
+    * and the one-partition sort ([[sortedChart]]; one row per bucket) need
+    * no exchange: the chart is one Spark job of one task.
     */
   def volumeFromRollup(
       rollup: DataFrame,
@@ -577,11 +594,10 @@ object LogQuery {
             col("hour").cast("long") * 3600L) * 1000L
         case "day" => unix_date(col("date")).cast("long") * 86400000L
       }
-      Some(
+      Some(sortedChart(
         parsed.map(e => rollup.where(compile(rollup, e))).getOrElse(rollup)
           .groupBy(bucketMs.as("bucket_ms"))
-          .agg(sum(col("cnt")).as("cnt"))
-          .orderBy("bucket_ms"))
+          .agg(sum(col("cnt")).as("cnt")), "bucket_ms"))
     }
   }
 
@@ -602,6 +618,10 @@ object LogQuery {
     * standard: sum of sums, min of mins, max of maxes; avg re-derives as
     * merged sum over merged non-null count (never an average of
     * averages, which weights groups wrongly).
+    *
+    * Plans like [[volumeFromRollup]]: over a one-split rollup read, one
+    * Spark job of one task, the result (one row per group) sorted in that
+    * partition ([[sortedChart]]).
     */
   def aggregateFromRollup(
       rollup: DataFrame,
@@ -646,11 +666,10 @@ object LogQuery {
             case "avg" => sum(col(s"m_${n}_sum")) / sum(col(s"m_${n}_cnt"))
           }
       }
-      Some(
+      Some(sortedChart(
         parsed.map(e => rollup.where(compile(rollup, e))).getOrElse(rollup)
           .groupBy(col(groupField).as("group"))
-          .agg(value.as("value"))
-          .orderBy("group"))
+          .agg(value.as("value")), "group"))
     }
   }
 
@@ -658,7 +677,10 @@ object LogQuery {
     * conditions as [[volumeFromRollup]] plus the split field itself being
     * a rollup dimension — "volume by namespace", the most-rendered chart
     * in a log dashboard. Non-count metrics stay on the raw table (the
-    * rollup does not carry per-field numeric aggregates).
+    * rollup does not carry per-field numeric aggregates). Plans like
+    * [[volumeFromRollup]]: over a one-split rollup read, one Spark job of
+    * one task, the result (one row per bucket and group) sorted in that
+    * partition ([[sortedChart]]).
     */
   def seriesFromRollup(
       rollup: DataFrame,
@@ -673,26 +695,26 @@ object LogQuery {
             col("hour").cast("long") * 3600L) * 1000L
         case "day" => unix_date(col("date")).cast("long") * 86400000L
       }
-      parse(query).map(e => rollup.where(compile(rollup, e))).getOrElse(rollup)
-        .groupBy(bucketMs.as("bucket_ms"), col(groupField).as("group"))
-        .agg(sum(col("cnt")).as("value"))
-        .orderBy("bucket_ms", "group")
+      sortedChart(
+        parse(query).map(e => rollup.where(compile(rollup, e))).getOrElse(rollup)
+          .groupBy(bucketMs.as("bucket_ms"), col(groupField).as("group"))
+          .agg(sum(col("cnt")).as("value")), "bucket_ms", "group")
     }
 
   /** Field-name discovery — the autocomplete endpoint behind the query
     * editor: every dynamic field name in scope with its type. One
     * map-side-combined distinct; at scale run it over a bounded recent
-    * time slice, not the full table.
+    * time slice, not the full table. The result (one row per field and
+    * type) is sorted in one partition ([[sortedChart]]).
     */
   def fields(df: DataFrame, query: String = ""): DataFrame = {
     val base = filter(df, query)
     def keysOf(mapCol: String, t: String) =
       base.select(explode(map_keys(col(mapCol))).as("field"))
         .withColumn("ftype", lit(t))
-    keysOf("fields_string", "string")
+    sortedChart(keysOf("fields_string", "string")
       .union(keysOf("fields_number", "number"))
-      .distinct()
-      .orderBy("field", "ftype")
+      .distinct(), "field", "ftype")
   }
 
   /** Value autocomplete for one field: its distinct values (as strings)
@@ -718,7 +740,9 @@ object LogQuery {
 
   /** The per-series chart: a metric per (time bucket, group) — what the
     * front-end draws when an aggregation is split by a field over time.
-    * Same one-shuffle shape as [[aggregate]] with the bucket in the key.
+    * Same one-shuffle shape as [[aggregate]] with the bucket in the key;
+    * the result (one row per bucket and group) is sorted in one partition
+    * ([[sortedChart]]).
     */
   def series(
       df: DataFrame,
@@ -727,12 +751,11 @@ object LogQuery {
       bucket: String = "hour",
       op: String = "count",
       metricField: Option[String] = None): DataFrame = {
-    filter(df, query)
+    sortedChart(filter(df, query)
       .groupBy(
         unix_millis(date_trunc(bucket, col("timestamp"))).as("bucket_ms"),
         groupCol(df, groupField).as("group"))
-      .agg(metricFor(df, op, metricField).as("value"))
-      .orderBy("bucket_ms", "group")
+      .agg(metricFor(df, op, metricField).as("value")), "bucket_ms", "group")
   }
 
   /** Group-key resolution for aggregate/series/values: direct column, else
@@ -786,7 +809,8 @@ object LogQuery {
     * field (string side for dynamic names).
     *
     * Output: `(group, value)` ordered by group — the shape the chart
-    * consumes. Plans as one partial-aggregated shuffle.
+    * consumes. Plans as one partial-aggregated shuffle; the result (one
+    * row per group) is sorted in one partition ([[sortedChart]]).
     */
   def aggregate(
       df: DataFrame,
@@ -794,9 +818,8 @@ object LogQuery {
       groupField: String,
       op: String,
       metricField: Option[String] = None): DataFrame = {
-    filter(df, query)
+    sortedChart(filter(df, query)
       .groupBy(groupCol(df, groupField).as("group"))
-      .agg(metricFor(df, op, metricField).as("value"))
-      .orderBy("group")
+      .agg(metricFor(df, op, metricField).as("value")), "group")
   }
 }

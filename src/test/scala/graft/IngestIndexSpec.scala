@@ -50,10 +50,14 @@ class IngestIndexSpec extends SparkTestBase {
     * and (file, col, lo, hi).
     */
   private def sidecarRows(table: String): (Set[(String, Int, Seq[Byte])], Set[(String, String, Any, Any)]) = {
-    val ngram = spark.read.parquet(s"$table/${NgramIndex.IndexDirName}").collect()
+    // the part files, not the `_`-prefixed dir, which Spark would warn it ignored
+    def rows(dirName: String) = spark.read.parquet(
+      new java.io.File(table, dirName).listFiles().map(_.getPath).filter(_.endsWith(".parquet")): _*)
+      .collect()
+    val ngram = rows(NgramIndex.IndexDirName)
       .map(r => (SidecarIndex.norm(r.getAs[String]("file")), r.getAs[Int]("n"),
         r.getAs[Array[Byte]]("bloom").toSeq)).toSet
-    val zone = spark.read.parquet(s"$table/${ZoneMapIndex.IndexDirName}").collect()
+    val zone = rows(ZoneMapIndex.IndexDirName)
       .map(r => (SidecarIndex.norm(r.getAs[String]("file")), r.getAs[String]("col"),
         r.getAs[Any]("lo"), r.getAs[Any]("hi"))).toSet
     (ngram, zone)

@@ -165,6 +165,24 @@ class RollupSpec extends SparkTestBase {
     assert(hiddenIn(out).isEmpty, hiddenIn(out).toString)
   }
 
+  test("a source day hidden by a crashed compaction keeps its rollup day: refresh recovers it") {
+    val src = tmp("rollup-src"); val out = tmp("rollup-out")
+    val logs = logsDf(days = 2, perDay = 48)
+    LogSchema.writePartitioned(logs, src)
+    Rollup.refresh(spark, src, out)
+    // a compaction of day 2 that died between its renames: the compacted
+    // day staged and complete, the live day moved aside
+    val day2 = new java.io.File(src, "date=2024-02-02")
+    spark.read.parquet(day2.getPath).coalesce(1)
+      .write.parquet(new java.io.File(src, ".date=2024-02-02.staged").getPath)
+    assert(day2.renameTo(new java.io.File(src, ".date=2024-02-02.old")))
+    assert(Rollup.refresh(spark, src, out) ==
+      Seq(Rollup.RefreshStat("2024-02-02", "changed")),
+      "the promoted compaction output is a changed day, not a dropped one")
+    assert(day2.exists && new java.io.File(out, "date=2024-02-02").exists)
+    assert(rollupAggregate(out) == directAggregate(logs))
+  }
+
   test("refresh crash window on a new day: a partially written staged day is never published") {
     val src = tmp("rollup-src"); val out = tmp("rollup-out")
     val all = logsDf(days = 3, perDay = 48)

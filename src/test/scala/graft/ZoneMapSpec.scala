@@ -133,15 +133,17 @@ class ZoneMapSpec extends SparkTestBase {
     ZoneMapIndex.build(spark, out, Seq("x"))
     val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sharedState.cacheManager
-    // every generation reads the same path, so their plans match: a stale
-    // entry left registered would be substituted into every later read.
     // The cache entry the current generation's frame reads through, found
-    // through that same plan
-    def entry() = cm.lookupCachedData(
-      spark.read.schema(SidecarIndex.ZoneMapSchema)
-        .parquet(SidecarIndex.indexPath(out, ZoneMapIndex.IndexDirName).toString)
-        .asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
-      .get.cachedRepresentation.cacheBuilder
+    // through that same plan: the generation reads the dir's part files
+    def entry() = {
+      val ip = SidecarIndex.indexPath(out, ZoneMapIndex.IndexDirName)
+      val files = ip.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(ip)
+        .map(_.getPath.toString).filter(_.endsWith(".parquet"))
+      cm.lookupCachedData(
+        spark.read.schema(SidecarIndex.ZoneMapSchema).parquet(files.toIndexedSeq: _*)
+          .asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+        .get.cachedRepresentation.cacheBuilder
+    }
     def probeReleases(change: => Unit): Unit = {
       ZoneMapIndex.prune(spark, out, "x", 2500d, 3500d)
       val old = entry()
@@ -155,7 +157,7 @@ class ZoneMapSpec extends SparkTestBase {
     }
     probeReleases(ZoneMapIndex.build(spark, out, Seq("x", "id"), rebuild = true))
     // vacuum publishes by rename, which Spark's own write-path recache
-    // does not see: only the probe's eager unpersist releases the entry
+    // does not see: the index releases the retired entry itself
     probeReleases {
       val dead = new org.apache.hadoop.fs.Path(spark.read.parquet(out).inputFiles.head)
       dead.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(dead, false)

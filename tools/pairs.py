@@ -1,0 +1,128 @@
+#!/usr/bin/env python3
+"""Interleaved parent/change benchmark pairs.
+
+    python3 tools/pairs.py PARENT_DIR CHANGE_DIR --workload logs \\
+        --seeds 1111-1116 [--seconds 10] [--raw pairs.jsonl]
+    python3 tools/pairs.py --report pairs.jsonl
+
+Runs `perfbench/run.py` untraced once per seed in each checkout, the order
+alternating from pair to pair (even pairs run the parent first), so slow
+phases of a shared host fall on both sides. Every result line is appended
+to the raw file as it arrives, one JSON object per run:
+`{"side", "dir", "workload", "seed", "order", "exit", "result"}`.
+
+The report, per end-to-end metric of BENCHMARK.json: the median and
+quartiles on each side, the relative change, how many pairs the change
+won (in the metric's better direction), and the parent's interquartile
+range. A median gap no larger than that range is reported as unresolved.
+A pair counts only when both of its runs returned a result.
+"""
+import argparse
+import json
+import statistics
+import subprocess
+import sys
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parent.parent
+
+
+def seed_list(spec):
+    seeds = []
+    for part in spec.split(","):
+        lo, _, hi = part.partition("-")
+        seeds += range(int(lo), int(hi or lo) + 1)
+    return seeds
+
+
+def run_one(checkout, workload, seed, seconds):
+    cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
+           "--seconds", str(seconds), "--trace", "0"]
+    p = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True)
+    lines = [l for l in p.stdout.splitlines() if l.startswith("{")]
+    try:
+        result = json.loads(lines[-1]) if lines else None
+    except json.JSONDecodeError:
+        result = None
+    return p.returncode, result
+
+
+def quartiles(xs):
+    if len(xs) == 1:
+        return xs[0], xs[0]
+    q = statistics.quantiles(xs, n=4, method="inclusive")
+    return q[0], q[2]
+
+
+def report(records, bench):
+    by_pair = {}
+    for r in records:
+        if r.get("result") is not None:
+            by_pair.setdefault((r["workload"], r["seed"]), {})[r["side"]] = r["result"]
+    pairs = [(k, v) for k, v in sorted(by_pair.items()) if "parent" in v and "change" in v]
+    if not pairs:
+        print("no complete pair")
+        return
+    for workload in sorted({k[0] for k, _ in pairs}):
+        ps = [v for k, v in pairs if k[0] == workload]
+        ok = sum(v["parent"]["correct"] and v["change"]["correct"] for v in ps)
+        failed = sum(v[s]["failed"] for v in ps for s in ("parent", "change"))
+        print(f"{workload}: {len(ps)} pairs, both correct in {ok}, {failed} failed operations")
+        print(f"  {'metric':30} {'parent median [q1, q3]':>28} {'change median [q1, q3]':>28}"
+              f" {'change':>8} {'won':>6} {'parent IQR':>11}  verdict")
+        for m in bench["end_to_end"]:
+            name = m["name"]
+            got = [(v["parent"]["metrics"][name]["value"], v["change"]["metrics"][name]["value"])
+                   for v in ps if name in v["parent"]["metrics"] and name in v["change"]["metrics"]]
+            if not got:
+                continue
+            par, chg = [g[0] for g in got], [g[1] for g in got]
+            lower = m["better"] == "lower"
+            won = sum((c < p) if lower else (c > p) for p, c in got)
+            pm, cm = statistics.median(par), statistics.median(chg)
+            (p1, p3), (c1, c3) = quartiles(par), quartiles(chg)
+            iqr = p3 - p1
+            rel = (cm - pm) / pm * 100 if pm else float("nan")
+            verdict = "unresolved" if abs(cm - pm) <= iqr else (
+                "better" if (cm < pm) == lower else "worse")
+            print(f"  {name:30} {pm:>10.4g} [{p1:.4g}, {p3:.4g}]".ljust(61) +
+                  f" {cm:>10.4g} [{c1:.4g}, {c3:.4g}]".ljust(29) +
+                  f" {rel:>+7.1f}% {won:>2}/{len(got):<3} {iqr:>11.4g}  {verdict}")
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter)
+    ap.add_argument("parent", nargs="?", help="checkout of the parent commit")
+    ap.add_argument("change", nargs="?", help="checkout of the change")
+    ap.add_argument("--workload", choices=["logs", "llm_corpus"])
+    ap.add_argument("--seeds", help="seed list, e.g. 1111-1116 or 5,7,9")
+    ap.add_argument("--seconds", type=float, default=10)
+    ap.add_argument("--raw", default="pairs.jsonl", help="raw result file (appended to)")
+    ap.add_argument("--report", metavar="RAW", help="only report the pairs of an existing raw file")
+    a = ap.parse_args()
+    bench = json.loads((ROOT / "BENCHMARK.json").read_text())
+
+    if a.report:
+        report([json.loads(l) for l in Path(a.report).read_text().splitlines() if l.strip()], bench)
+        return
+    if not (a.parent and a.change and a.workload and a.seeds):
+        ap.error("PARENT, CHANGE, --workload and --seeds are required unless --report is given")
+    sides = {"parent": Path(a.parent).resolve(), "change": Path(a.change).resolve()}
+    records = []
+    with open(a.raw, "a") as raw:
+        for i, seed in enumerate(seed_list(a.seeds)):
+            order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
+            for side in order:
+                code, result = run_one(sides[side], a.workload, seed, a.seconds)
+                rec = {"side": side, "dir": str(sides[side]), "workload": a.workload, "seed": seed,
+                       "order": order.index(side), "exit": code, "result": result}
+                records.append(rec)
+                raw.write(json.dumps(rec) + "\n")
+                raw.flush()
+                summary = result and {k: round(v["value"], 4) for k, v in result["metrics"].items()}
+                print(f"seed {seed} {side}: exit {code} {summary}", file=sys.stderr, flush=True)
+    report(records, bench)
+
+
+if __name__ == "__main__":
+    main()
