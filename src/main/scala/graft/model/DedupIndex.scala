@@ -26,7 +26,24 @@ import org.apache.spark.sql.types._
   * `bands` is what candidate probes join against; `sketches` is the exact-
   * verification side. Both are ids+longs only — at 100 TB of text the pair
   * is orders of magnitude smaller than the corpus (a ~1 KB doc contributes
-  * ~64 band bytes + 8 bytes per distinct shingle).
+  * ~64 band bytes + 8 bytes per distinct shingle). `build` writes each
+  * table at Spark's default partitioning; every `append` adds exactly one
+  * part file to each (an increment is bounded by its own size); `vacuum`
+  * compacts them back.
+  *
+  * Read path: the two tables' schemas are fixed ([[BandsSchema]],
+  * [[SketchesSchema]]) — the writers select exactly those columns and
+  * every read states them, so no read runs a schema-inference job. The
+  * `params` row is read once per index generation and session
+  * ([[readParams]]): a probe or append of an unchanged index runs no job
+  * for it.
+  *
+  * One row per id: of an increment's copies of a repeated id, only the
+  * least text is appended, and a probe verifies against only that copy
+  * (any copy's bands may propose candidates), so neither depends on row
+  * order and no pair is reported twice. A probe verifies an id that is
+  * both indexed and in the increment (a replayed batch) against the
+  * increment's copy only; `append` keeps the indexed copy.
   *
   * Equivalence contract: build∘append and incremental probing commute with
   * from-scratch indexing — `incrementalPairs(new, idx(corpus))` equals
@@ -47,6 +64,29 @@ object DedupIndex {
     * silently wrong, so every read path recovers them from the index.
     */
   final case class Params(shingleN: Int, bands: Int, rowsPerBand: Int)
+
+  /** The `bands` and `sketches` tables' columns, as written and as read. */
+  val BandsSchema: StructType = new StructType()
+    .add("band", IntegerType).add("bandhash", LongType).add("id", LongType)
+  val SketchesSchema: StructType = new StructType()
+    .add("id", LongType).add("shash", ArrayType(LongType))
+  private val ParamsSchema = new StructType()
+    .add("shingle_n", IntegerType).add("bands", IntegerType).add("rows_per_band", IntegerType)
+
+  /** `df`'s columns of `schema`, in its order and cast to its types. */
+  private def conform(df: DataFrame, schema: StructType): DataFrame =
+    df.select(schema.map(f => col(f.name).cast(f.dataType)): _*)
+
+  /** One row per id (cast to LONG) with the least of its texts: the
+    * deterministic choice among an increment's copies of a repeated id.
+    * `array_min(collect_set(..))`, not `min(..)`: a string `min` plans a
+    * sort-based aggregate, and its sort pages (32 MB per task, measured on
+    * a 4-core local session) cost far more than a small increment; the set
+    * aggregate stays hash-based up to 128 ids per task.
+    */
+  private def onePerId(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    docs.groupBy(col(idCol).cast(LongType).as("id"))
+      .agg(array_min(collect_set(col(textCol))).as("text"))
 
   /** Derives the band and sketch tables from one shingling pass. With
     * `persistShingles` the shared shingle stage is cached so a caller that
@@ -77,11 +117,10 @@ object DedupIndex {
             slice(col("sig"), b * p.rowsPerBand + 1, lit(p.rowsPerBand)),
             v => v.cast(StringType)), ","), b)))
           .as(Seq("band", "bandhash")))
-      .select(col("band").cast(IntegerType), col("bandhash"), col("id"))
     val sketchRows = withSh.select(
       col("id"),
       array_distinct(transform(col("sh"), s => xxhash64(s))).as("shash"))
-    (bandRows, sketchRows,
+    (conform(bandRows, BandsSchema), conform(sketchRows, SketchesSchema),
       () => if (persistShingles) { withSh.unpersist(); () })
   }
 
@@ -101,73 +140,98 @@ object DedupIndex {
     val (bandRows, sketchRows, done) =
       sketch(docs, idCol, textCol, params, persistShingles = true)
     try {
-      Seq((params.shingleN, params.bands, params.rowsPerBand))
-        .toDF("shingle_n", "bands", "rows_per_band")
+      conform(Seq((params.shingleN, params.bands, params.rowsPerBand))
+          .toDF("shingle_n", "bands", "rows_per_band"), ParamsSchema)
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/params")
       bandRows.write.mode("overwrite").parquet(s"$dir/bands")
       sketchRows.write.mode("overwrite").parquet(s"$dir/sketches")
     } finally done()
   }
 
+  /** The index's persisted [[Params]], read once per generation: the row
+    * is kept per session under the file listing of `<dir>/params`, so
+    * later calls of an unchanged index cost one driver listing and no
+    * Spark job. A `build` overwrite writes fresh file names, so the next
+    * call reads the new row; the entries of older generations of the dir
+    * are dropped when a new one starts.
+    */
   def readParams(spark: SparkSession, dir: String): Params = {
-    val r = spark.read.parquet(s"$dir/params").head()
-    Params(r.getAs[Int]("shingle_n"), r.getAs[Int]("bands"),
-      r.getAs[Int]("rows_per_band"))
+    val path = new org.apache.hadoop.fs.Path(s"$dir/params")
+    def read() = {
+      val r = spark.read.schema(ParamsSchema).parquet(path.toString).head()
+      Params(r.getInt(0), r.getInt(1), r.getInt(2))
+    }
+    LogSchema.listingSignature(path.getFileSystem(spark.sparkContext.hadoopConfiguration), path)
+      .fold(read()) { sig =>
+        paramsCache(spark, (dir, sig)) {
+          paramsCache.invalidate { case (d, s) => d == dir && s != sig }
+          read()
+        }
+      }
   }
 
-  /** Reads a table dir, first completing an interrupted [[vacuum]] swap
-    * ([[DirSwap.recover]]).
+  // keyed by (index dir, listing signature of its params): a new signature is a new generation
+  private val paramsCache =
+    new graft.SessionCache[(String, Seq[(String, Long, Long)]), Params]()
+
+  /** Reads a table dir with its fixed schema, first completing an
+    * interrupted [[vacuum]] swap ([[DirSwap.recover]]).
     */
-  private def tableOf(spark: SparkSession, dir: String, table: String)
+  private def tableOf(spark: SparkSession, dir: String, table: String, schema: StructType)
     : DataFrame = {
     val dst = new org.apache.hadoop.fs.Path(s"$dir/$table")
     DirSwap.recover(dst.getFileSystem(spark.sparkContext.hadoopConfiguration), dst)
-    spark.read.parquet(dst.toString)
+    spark.read.schema(schema).parquet(dst.toString)
   }
   private def bandsOf(spark: SparkSession, dir: String): DataFrame =
-    tableOf(spark, dir, "bands")
+    tableOf(spark, dir, "bands", BandsSchema)
   private def sketchesOf(spark: SparkSession, dir: String): DataFrame =
-    tableOf(spark, dir, "sketches")
+    tableOf(spark, dir, "sketches", SketchesSchema)
 
   /** Append `newDocs`' sketch rows to the index, using the PERSISTED
     * parameters. Ids already present are skipped (idempotent re-append of
     * a replayed batch): the overlap probe is a narrow scan of the compact
     * sketch-id column against the broadcast new-id set — its result is
-    * bounded by the increment size, never the corpus. Returns the number
-    * of docs actually appended.
+    * bounded by the increment size, never the corpus. An id repeated in
+    * `newDocs` is appended once ([[onePerId]]). Each table gets one new
+    * part file. Returns the number of ids actually appended.
     */
   def append(
       newDocs: DataFrame, idCol: String, textCol: String, dir: String): Long = {
     val spark = newDocs.sparkSession
     val p = readParams(spark, dir)
-    val newIds = newDocs.select(col(idCol).cast(LongType).as("id")).distinct()
+    val one = onePerId(newDocs, idCol, textCol)
     // ids already indexed, bounded by the increment (left_semi against the
-    // broadcast new-id set). Dropped via a broadcast left_anti — never
-    // collected to the driver: a largely-replayed increment would inline an
-    // increment-sized isin literal into the plan otherwise
+    // broadcast new-id set; a semi join needs no distinct build side, so
+    // this does not wait on `one`'s shuffle). Dropped via a broadcast
+    // left_anti — never collected to the driver: a largely-replayed
+    // increment would inline an increment-sized isin literal into the plan
+    // otherwise
     val already = sketchesOf(spark, dir).select("id")
-      .join(broadcast(newIds), Seq("id"), "left_semi")
+      .join(broadcast(newDocs.select(col(idCol).cast(LongType).as("id"))), Seq("id"), "left_semi")
       .select(col("id").as("_graft_indexed_id"))
-    val fresh = newDocs.join(broadcast(already),
-      col(idCol).cast(LongType) === col("_graft_indexed_id"), "left_anti")
+    val fresh = one.join(broadcast(already),
+      col("id") === col("_graft_indexed_id"), "left_anti")
     val (bandRows, sketchRows, done) =
-      sketch(fresh, idCol, textCol, p, persistShingles = true)
+      sketch(fresh, "id", "text", p, persistShingles = true)
     try {
-      val n = sketchRows.count()
+      // an RDD count is one job over the cached rows; Dataset.count's
+      // global aggregate would add a shuffle stage (a job) of its own
+      val n = sketchRows.rdd.count()
       if (n > 0) {
-        bandRows.write.mode("append").parquet(s"$dir/bands")
-        sketchRows.write.mode("append").parquet(s"$dir/sketches")
+        bandRows.coalesce(1).write.mode("append").parquet(s"$dir/bands")
+        sketchRows.coalesce(1).write.mode("append").parquet(s"$dir/sketches")
       }
       n
     } finally done()
   }
 
   /** Exact-Jaccard verification of candidate pairs against the sketch
-    * table. With `broadcastCandidates` the candidate-derived side is
-    * broadcast into BOTH lookups, so the (corpus-sized) sketch table is
-    * never shuffled — the broadcast payload is bounded by the candidate
-    * count times one shingle-hash set, i.e. by the increment, not the
-    * corpus.
+    * table, which must hold one row per id. With `broadcastCandidates` the
+    * candidate-derived side is broadcast into BOTH lookups, so the
+    * (corpus-sized) sketch table is never shuffled — the broadcast payload
+    * is bounded by the candidate count times one shingle-hash set, i.e. by
+    * the increment, not the corpus.
     */
   private def verifyPairs(
       candidates: DataFrame, sketches: DataFrame, threshold: Double,
@@ -250,9 +314,14 @@ object DedupIndex {
     * against years of corpus): the new side's band rows are broadcast, so
     * the corpus band table is scanned narrowly (no corpus-side shuffle at
     * all); verification joins the broadcast candidate set against the
-    * sketch table the same way. Every shuffled row is a scalar pair. For
+    * sketch table the same way. Every shuffled row is the increment's own
+    * (its one-row-per-id pass) or a candidate pair. For
     * an increment too large to broadcast, pass `broadcastNew = false` and
     * the probe degrades gracefully to the hash-partitioned equi-join.
+    *
+    * Each pair is reported once: an id repeated in `newDocs` is verified
+    * against one copy ([[onePerId]]), and an id that is both indexed and
+    * new against the new copy.
     */
   def incrementalPairs(
       newDocs: DataFrame,
@@ -263,21 +332,25 @@ object DedupIndex {
       broadcastNew: Boolean = true): DataFrame = {
     val spark = newDocs.sparkSession
     val p = readParams(spark, dir)
-    val (newBands, newSketches, _) = sketch(newDocs, idCol, textCol, p)
+    // candidates come from every row's bands (the candidate distinct
+    // absorbs a repeated id) and verification reads one row per id, so the
+    // one-row-per-id shuffle runs beside the band probe, not before it
+    val (newBands, _, _) = sketch(newDocs, idCol, textCol, p)
+    val (_, newSketches, _) = sketch(onePerId(newDocs, idCol, textCol), "id", "text", p)
     val probe = if (broadcastNew) broadcast(newBands) else newBands
-    // new × corpus: corpus side stays in place, new side ships to it
-    val nc = bandsOf(spark, dir)
+    // new × (corpus ∪ new) in one join: the corpus side stays in place, the
+    // new side ships to it
+    val candidates = bandsOf(spark, dir).unionByName(newBands)
       .join(probe.withColumnRenamed("id", "new_id"), Seq("band", "bandhash"))
       .where(col("id") =!= col("new_id"))
       .select(least(col("id"), col("new_id")).as("id_a"),
         greatest(col("id"), col("new_id")).as("id_b"))
-    // new × new: the increment against itself (tiny)
-    val nn = newBands.as("l")
-      .join(newBands.as("r"), Seq("band", "bandhash"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
-      .where(col("id_a") < col("id_b"))
-    val candidates = nc.union(nn).distinct()
-    val sketches = sketchesOf(spark, dir).unionByName(newSketches)
+      .distinct()
+    // one sketch row per id: the increment's copy replaces an indexed one
+    val newIds = newDocs.select(col(idCol).cast(LongType).as("id"))
+    val sketches = sketchesOf(spark, dir)
+      .join(if (broadcastNew) broadcast(newIds) else newIds, Seq("id"), "left_anti")
+      .unionByName(newSketches)
     verifyPairs(candidates, sketches, jaccardThreshold,
       broadcastCandidates = broadcastNew)
   }

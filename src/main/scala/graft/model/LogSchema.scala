@@ -189,7 +189,7 @@ object LogSchema {
     * follow Spark's listing rule: a `.` prefix, or a `_` prefix on a name
     * that is no `k=v` partition, except the parquet summary files.
     */
-  private def listingSignature(
+  private[model] def listingSignature(
       fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path): Option[Seq[(String, Long, Long)]] = {
     def hidden(n: String) =

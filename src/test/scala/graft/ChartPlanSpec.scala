@@ -2,7 +2,6 @@ package graft
 
 import graft.model.{LogSchema, Rollup}
 import graft.query.LogQuery
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -23,35 +22,10 @@ class ChartPlanSpec extends SparkTestBase {
     (LogSchema.readLogs(spark, src), out)
   }
 
-  /** The rows of `df` and the number of Spark jobs collecting it ran. The
-    * count is complete when it returns: a sentinel job run afterwards is
-    * the last event on the listener bus.
-    */
+  /** The rows of `df` and the number of Spark jobs collecting it ran. */
   private def collectJobs(df: DataFrame): (Seq[Row], Int) = {
-    val sc = spark.sparkContext
-    val tag = s"chart-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val sentinelJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val flushed = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("graft.test.chart")).foreach {
-          case `tag` => jobs.incrementAndGet()
-          case t if t == tag + "-end" => sentinelJobs.add(e.jobId)
-          case _ =>
-        }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (sentinelJobs.contains(e.jobId)) flushed.countDown()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty("graft.test.chart", tag)
-      val rows = try df.collect().toSeq finally sc.setLocalProperty("graft.test.chart", null)
-      sc.setLocalProperty("graft.test.chart", tag + "-end")
-      try spark.range(1).count() finally sc.setLocalProperty("graft.test.chart", null)
-      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus never drained")
-      (rows, jobs.get)
-    } finally sc.removeSparkListener(listener)
+    val (rows, jobs) = withJobs(df.collect().toSeq)
+    (rows, jobs.size)
   }
 
   private def plan(df: DataFrame): String = df.queryExecution.executedPlan.toString

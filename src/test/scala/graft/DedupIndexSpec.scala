@@ -33,6 +33,10 @@ class DedupIndexSpec extends SparkTestBase {
 
   private val params = DedupIndex.Params(shingleN = 2, bands = 16, rowsPerBand = 2)
 
+  private def partFiles(dir: String, table: String): Set[String] =
+    new java.io.File(s"$dir/$table").listFiles().map(_.getName)
+      .filter(_.endsWith(".parquet")).toSet
+
   test("incremental probe finds cross-batch and intra-increment planted dups, nothing else") {
     val dir = tmp("graft-dedupidx")
     DedupIndex.build(corpus, "doc_id", "text", dir, params)
@@ -210,5 +214,93 @@ class DedupIndexSpec extends SparkTestBase {
         shingleN = 2, bands = 16, rowsPerBand = 2, jaccardThreshold = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(fromIndex == live)
+  }
+
+  private def pairsOf(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+
+  test("an id repeated in an increment is indexed once and its pairs are reported once") {
+    val dir = tmp("graft-dedupidx-dup")
+    DedupIndex.build(corpus, "doc_id", "text", dir, params)
+    // id 300 twice (two copies of doc 3: an edit and the exact text) plus a
+    // fresh doc; compared as sequences, so a doubled row cannot hide in a set
+    val twice = Seq(
+        (300L, doc(3).replace("w329", "CHANGED")), (300L, doc(3)), (301L, doc(301)))
+      .toDF("doc_id", "text")
+    val probed = pairsOf(DedupIndex.incrementalPairs(twice, "doc_id", "text", dir, 0.5))
+    assert(probed == Seq((3L, 300L)), probed.toString)
+    // the copy verified against does not depend on row order
+    def jaccard300(df: org.apache.spark.sql.DataFrame) =
+      DedupIndex.incrementalPairs(df.coalesce(1), "doc_id", "text", dir, 0.0)
+        .where(col("id_a") === 3L && col("id_b") === 300L).collect().toSeq
+    val asc = jaccard300(twice.orderBy(col("text")))
+    assert(asc.length == 1 && asc == jaccard300(twice.orderBy(col("text").desc)))
+    assert(DedupIndex.append(twice, "doc_id", "text", dir) == 2)
+    val all = pairsOf(DedupIndex.allPairs(spark, dir, 0.5))
+    assert(all.count(_ == ((3L, 300L))) == 1, all.toString)
+    assert(all.length == all.distinct.length, all.toString)
+  }
+
+  test("a replayed increment: an id already indexed is verified once") {
+    val dir = tmp("graft-dedupidx-replay")
+    DedupIndex.build(corpus, "doc_id", "text", dir, params)
+    assert(DedupIndex.append(Seq((301L, doc(301))).toDF("doc_id", "text"),
+      "doc_id", "text", dir) == 1)
+    // 301 again, beside 302, an edit of it
+    val replay = Seq((301L, doc(301)), (302L, doc(301).replace("w30129", "CHANGED")))
+      .toDF("doc_id", "text")
+    val again = pairsOf(DedupIndex.incrementalPairs(replay, "doc_id", "text", dir, 0.5))
+    assert(again == Seq((301L, 302L)), again.toString)
+  }
+
+  test("a warm increment runs at most 14 jobs, none reading params or a table schema") {
+    val dir = tmp("graft-dedupidx-jobs")
+    DedupIndex.build(corpus, "doc_id", "text", dir, params)
+    // the first increment after a build reads the new generation's params
+    DedupIndex.incrementalPairs(increment, "doc_id", "text", dir, 0.5).collect()
+    DedupIndex.append(increment, "doc_id", "text", dir)
+    val next = spark.createDataFrame((400 until 410).map(i => (i.toLong, doc(i))) :+
+        ((410L, doc(6).replace("w629", "CHANGED")))).toDF("doc_id", "text")
+    val ((pairs, appended), jobs) = withJobs {
+      (DedupIndex.incrementalPairs(next, "doc_id", "text", dir, 0.5).collect(),
+        DedupIndex.append(next, "doc_id", "text", dir))
+    }
+    assert(pairs.map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((6L, 410L)))
+    assert(appended == 11)
+    assert(jobs.size <= 14, s"${jobs.size} jobs")
+    // a job's stage details hold its call stack
+    val meta = jobs.map(_.stageInfos.map(_.details).mkString("\n"))
+      .filter(s => s.contains("DedupIndex$.readParams") || s.contains("DedupIndex$.tableOf"))
+    assert(meta.isEmpty, meta.mkString("\n---\n"))
+  }
+
+  test("the static schemas are what build and append write; append adds one file per table") {
+    val dir = tmp("graft-dedupidx-schema")
+    DedupIndex.build(corpus, "doc_id", "text", dir, params)
+    def inferred(path: String) = spark.read.parquet(path).schema
+    assert(inferred(s"$dir/bands") == DedupIndex.BandsSchema)
+    assert(inferred(s"$dir/sketches") == DedupIndex.SketchesSchema)
+    val before = Seq("bands", "sketches").map(t => t -> partFiles(dir, t)).toMap
+    assert(DedupIndex.append(increment, "doc_id", "text", dir) == increment.count())
+    for (t <- Seq("bands", "sketches")) {
+      val added = partFiles(dir, t) -- before(t)
+      assert(added.size == 1, s"$t: $added")
+      val schema = if (t == "bands") DedupIndex.BandsSchema else DedupIndex.SketchesSchema
+      assert(inferred(s"$dir/$t/${added.head}") == schema, t)
+    }
+  }
+
+  test("a build overwrite with other params is seen by the next readParams and probe") {
+    val dir = tmp("graft-dedupidx-regen")
+    DedupIndex.build(corpus, "doc_id", "text", dir, params)
+    assert(DedupIndex.readParams(spark, dir) == params)
+    val other = DedupIndex.Params(shingleN = 3, bands = 8, rowsPerBand = 3)
+    DedupIndex.build(corpus, "doc_id", "text", dir, other)
+    assert(DedupIndex.readParams(spark, dir) == other)
+    // the probe sketches with the new generation's params: its band rows
+    // meet the rebuilt table's, so the planted edit is still found
+    val pairs = DedupIndex.incrementalPairs(increment, "doc_id", "text", dir, 0.5)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(pairs.contains((5L, 101L)) && pairs.contains((7L, 102L)), pairs.toString)
   }
 }

@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Shared session for suites: one JVM-wide factory session on 4 cores. */
 trait SparkTestBase extends AnyFunSuite {
@@ -16,6 +18,38 @@ trait SparkTestBase extends AnyFunSuite {
     val d = java.nio.file.Files.createTempDirectory(prefix)
     SparkTestBase.deleteOnExit(d.toFile)
     d.toString
+  }
+
+  /** `f`'s value and the start events of the Spark jobs it ran on this
+    * thread (AQE's stage jobs included: they carry the caller's local
+    * properties). The list is complete when it returns: a sentinel job run
+    * afterwards is the last event on the listener bus.
+    */
+  def withJobs[T](f: => T): (T, Seq[SparkListenerJobStart]) = {
+    val sc = spark.sparkContext
+    val tag = s"jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val sentinelJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("graft.test.jobs")).foreach {
+          case `tag` => jobs.add(e)
+          case t if t == tag + "-end" => sentinelJobs.add(e.jobId)
+          case _ =>
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (sentinelJobs.contains(e.jobId)) flushed.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("graft.test.jobs", tag)
+      val v = try f finally sc.setLocalProperty("graft.test.jobs", null)
+      sc.setLocalProperty("graft.test.jobs", tag + "-end")
+      try spark.range(1).count() finally sc.setLocalProperty("graft.test.jobs", null)
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus never drained")
+      (v, jobs.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
   }
 
   /** Retry an assertion until it holds or `timeoutMs` elapses. Needed for

@@ -3,6 +3,7 @@
 
     python3 tools/pairs.py PARENT_DIR CHANGE_DIR --workload logs \\
         --seeds 1111-1116 [--seconds 10] [--raw pairs.jsonl]
+    python3 tools/pairs.py --aa DIR --workload llm_corpus --seeds 1301-1306
     python3 tools/pairs.py --report pairs.jsonl
 
 Runs `perfbench/run.py` untraced once per seed in each checkout, the order
@@ -14,8 +15,14 @@ to the raw file as it arrives, one JSON object per run:
 The report, per end-to-end metric of BENCHMARK.json: the median and
 quartiles on each side, the relative change, how many pairs the change
 won (in the metric's better direction), and the parent's interquartile
-range. A median gap no larger than that range is reported as unresolved.
-A pair counts only when both of its runs returned a result.
+range. A gap is "better" or "worse" only when the medians differ by more
+than that range AND one side won at least nine pairs in ten (ties count
+for neither); anything else is unresolved. A pair counts only when both
+of its runs returned a result.
+
+`--aa DIR` runs one checkout as both sides, labelled A and B, in the same
+alternating order, and prints the same table: B's spread around A's median
+is the noise floor a parent/change gap has to clear.
 """
 import argparse
 import json
@@ -55,36 +62,42 @@ def quartiles(xs):
 
 
 def report(records, bench):
+    # an A/A raw file labels its sides A and B; the table is the same
+    first, second = ("A", "B") if any(r["side"] == "A" for r in records) else ("parent", "change")
     by_pair = {}
     for r in records:
         if r.get("result") is not None:
             by_pair.setdefault((r["workload"], r["seed"]), {})[r["side"]] = r["result"]
-    pairs = [(k, v) for k, v in sorted(by_pair.items()) if "parent" in v and "change" in v]
+    pairs = [(k, v) for k, v in sorted(by_pair.items()) if first in v and second in v]
     if not pairs:
         print("no complete pair")
         return
     for workload in sorted({k[0] for k, _ in pairs}):
         ps = [v for k, v in pairs if k[0] == workload]
-        ok = sum(v["parent"]["correct"] and v["change"]["correct"] for v in ps)
-        failed = sum(v[s]["failed"] for v in ps for s in ("parent", "change"))
+        ok = sum(v[first]["correct"] and v[second]["correct"] for v in ps)
+        failed = sum(v[s]["failed"] for v in ps for s in (first, second))
         print(f"{workload}: {len(ps)} pairs, both correct in {ok}, {failed} failed operations")
-        print(f"  {'metric':30} {'parent median [q1, q3]':>28} {'change median [q1, q3]':>28}"
-              f" {'change':>8} {'won':>6} {'parent IQR':>11}  verdict")
+        print(f"  {'metric':30} {first + ' median [q1, q3]':>28} {second + ' median [q1, q3]':>28}"
+              f" {'change':>8} {'won':>6} {first + ' IQR':>11}  verdict")
         for m in bench["end_to_end"]:
             name = m["name"]
-            got = [(v["parent"]["metrics"][name]["value"], v["change"]["metrics"][name]["value"])
-                   for v in ps if name in v["parent"]["metrics"] and name in v["change"]["metrics"]]
+            got = [(v[first]["metrics"][name]["value"], v[second]["metrics"][name]["value"])
+                   for v in ps if name in v[first]["metrics"] and name in v[second]["metrics"]]
             if not got:
                 continue
             par, chg = [g[0] for g in got], [g[1] for g in got]
             lower = m["better"] == "lower"
             won = sum((c < p) if lower else (c > p) for p, c in got)
+            lost = sum((c > p) if lower else (c < p) for p, c in got)
             pm, cm = statistics.median(par), statistics.median(chg)
             (p1, p3), (c1, c3) = quartiles(par), quartiles(chg)
             iqr = p3 - p1
             rel = (cm - pm) / pm * 100 if pm else float("nan")
-            verdict = "unresolved" if abs(cm - pm) <= iqr else (
-                "better" if (cm < pm) == lower else "worse")
+            verdict = "unresolved"
+            if abs(cm - pm) > iqr and (cm < pm) == lower and won >= 0.9 * len(got):
+                verdict = "better"
+            elif abs(cm - pm) > iqr and (cm < pm) != lower and lost >= 0.9 * len(got):
+                verdict = "worse"
             print(f"  {name:30} {pm:>10.4g} [{p1:.4g}, {p3:.4g}]".ljust(61) +
                   f" {cm:>10.4g} [{c1:.4g}, {c3:.4g}]".ljust(29) +
                   f" {rel:>+7.1f}% {won:>2}/{len(got):<3} {iqr:>11.4g}  {verdict}")
@@ -94,6 +107,7 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter)
     ap.add_argument("parent", nargs="?", help="checkout of the parent commit")
     ap.add_argument("change", nargs="?", help="checkout of the change")
+    ap.add_argument("--aa", metavar="DIR", help="run one checkout as both sides (an A/A spread)")
     ap.add_argument("--workload", choices=["logs", "llm_corpus"])
     ap.add_argument("--seeds", help="seed list, e.g. 1111-1116 or 5,7,9")
     ap.add_argument("--seconds", type=float, default=10)
@@ -105,13 +119,21 @@ def main():
     if a.report:
         report([json.loads(l) for l in Path(a.report).read_text().splitlines() if l.strip()], bench)
         return
-    if not (a.parent and a.change and a.workload and a.seeds):
-        ap.error("PARENT, CHANGE, --workload and --seeds are required unless --report is given")
-    sides = {"parent": Path(a.parent).resolve(), "change": Path(a.change).resolve()}
+    if a.aa:
+        if a.parent or a.change:
+            ap.error("--aa takes one checkout; give no PARENT or CHANGE")
+        sides = {"A": Path(a.aa).resolve(), "B": Path(a.aa).resolve()}
+    elif a.parent and a.change:
+        sides = {"parent": Path(a.parent).resolve(), "change": Path(a.change).resolve()}
+    else:
+        ap.error("PARENT and CHANGE (or --aa DIR) are required unless --report is given")
+    if not (a.workload and a.seeds):
+        ap.error("--workload and --seeds are required unless --report is given")
+    first, second = sides
     records = []
     with open(a.raw, "a") as raw:
         for i, seed in enumerate(seed_list(a.seeds)):
-            order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
+            order = [first, second] if i % 2 == 0 else [second, first]
             for side in order:
                 code, result = run_one(sides[side], a.workload, seed, a.seconds)
                 rec = {"side": side, "dir": str(sides[side]), "workload": a.workload, "seed": seed,
