@@ -185,16 +185,11 @@ object LogSchema {
     new graft.SessionCache[(String, Seq[(String, Long, Long)]), StructType]()
 
   /** (path below `root`, length, mtime) of every file a parquet read of
-    * `root` lists, sorted; None when `root` does not exist. Hidden names
-    * follow Spark's listing rule: a `.` prefix, or a `_` prefix on a name
-    * that is no `k=v` partition, except the parquet summary files.
+    * `root` lists, sorted; None when `root` does not exist.
     */
   private[model] def listingSignature(
       fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path): Option[Seq[(String, Long, Long)]] = {
-    def hidden(n: String) =
-      ((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") || n.endsWith("._COPYING_")) &&
-        !n.startsWith("_common_metadata") && !n.startsWith("_metadata")
     def walk(st: org.apache.hadoop.fs.FileStatus, rel: String): Seq[(String, Long, Long)] =
       if (!st.isDirectory) Seq((rel, st.getLen, st.getModificationTime))
       else fs.listStatus(st.getPath).toSeq.filterNot(c => hidden(c.getPath.getName))
@@ -202,6 +197,37 @@ object LogSchema {
     try Some(walk(fs.getFileStatus(root), "").sorted)
     catch { case _: java.io.FileNotFoundException => None }
   }
+
+  /** Whether a parquet read skips a listed name — Spark's listing rule: a
+    * `.` prefix, a `_` prefix on a name that is no `k=v` partition, or an
+    * in-flight `._COPYING_` upload, except the parquet summary files. The
+    * one hidden-name rule of the table's listings: staged and aside swap
+    * dirs ([[DirSwap]]), `_SUCCESS`, checksums, the sidecar dirs and the
+    * rollup's `_source-` markers are all hidden by it.
+    */
+  private def hidden(n: String): Boolean =
+    ((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") || n.endsWith("._COPYING_")) &&
+      !n.startsWith("_common_metadata") && !n.startsWith("_metadata")
+
+  /** The `date=` partition dirs under `root`, sorted; empty when `root`
+    * does not exist. Every job that walks the table by day lists it here.
+    */
+  private[model] def days(
+      fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] =
+    if (!fs.exists(root)) Nil
+    else fs.listStatus(root).toSeq
+      .collect { case st if st.isDirectory && st.getPath.getName.startsWith("date=") => st.getPath }
+      .sortBy(_.getName)
+
+  /** The files directly under `dir` that a parquet read of it lists; empty
+    * when `dir` does not exist.
+    */
+  private[model] def dataFiles(
+      fs: org.apache.hadoop.fs.FileSystem,
+      dir: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir).toSeq.filter(st => st.isFile && !hidden(st.getPath.getName))
 
   /** Execute retention: delete expired daily partition directories and
     * return what was dropped (the TTL job, /root/reference/schema.sql:19
@@ -237,8 +263,9 @@ object LogSchema {
   /** Partitions whose file count exceeds both `minFiles` and what
     * `targetBytes`-sized outputs need — the merge-selection half of the
     * job, split from the rewrite so it can be tested (and dry-run)
-    * independently. Hidden files (`.`/`_` prefixes: in-flight compaction
-    * dirs, `_SUCCESS` markers, checksums) never count.
+    * independently. Only the files a parquet read lists count
+    * ([[dataFiles]]): never in-flight swap dirs, `_SUCCESS` markers,
+    * checksums or `._COPYING_` uploads.
     */
   def compactionPlan(
       spark: SparkSession,
@@ -247,21 +274,14 @@ object LogSchema {
       minFiles: Int): Seq[CompactionStat] = {
     val base = new org.apache.hadoop.fs.Path(path)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(base)) Seq.empty
-    else fs.listStatus(base).toSeq
-      .map(_.getPath)
-      .filter(_.getName.startsWith("date="))
+    days(fs, base)
       .map { p =>
-        val files = fs.listStatus(p).toSeq.filter { f =>
-          val n = f.getPath.getName
-          f.isFile && !n.startsWith(".") && !n.startsWith("_")
-        }
+        val files = dataFiles(fs, p)
         val bytes = files.map(_.getLen).sum
         val target = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
         CompactionStat(p.toString, files.size, bytes, target)
       }
       .filter(st => st.files >= minFiles && st.files > st.targetFiles)
-      .sortBy(_.dir)
   }
 
   /** Compact fragmented daily partitions — the Spark analogue of MergeTree
@@ -340,11 +360,7 @@ object LogSchema {
     val base = new org.apache.hadoop.fs.Path(path)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     DirSwap.sweep(fs, base)
-    val days =
-      if (!fs.exists(base)) Seq.empty
-      else fs.listStatus(base).toSeq.map(_.getPath)
-        .filter(_.getName.startsWith("date=")).sortBy(_.getName)
-    DirSwap.rewriteEach(days, jobParallelism) { live =>
+    DirSwap.rewriteEach(days(fs, base), jobParallelism) { live =>
       val part = spark.read.parquet(live.toString)
       val have = part.columns.toSet
       val missingS = stringKeys.filterNot(k =>
@@ -370,27 +386,17 @@ object LogSchema {
     * counts come from parquet FOOTERS (each carries its row count), read
     * DISTRIBUTED — the file list is parallelized and each task opens only
     * footers, so the job reads kilobytes per file regardless of data size;
-    * no data pages are touched. The same listing rules as
-    * [[compactionPlan]] apply (hidden/`_` files excluded), so
-    * `files`/`bytes` agree with what compaction would see.
+    * no data pages are touched. The files are those a parquet read lists
+    * ([[dataFiles]]), so `files`/`bytes` agree with what compaction and
+    * every reader see.
     */
   def partitionStats(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
     val base = new org.apache.hadoop.fs.Path(path)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files: Seq[(String, String, Long)] =
-      if (!fs.exists(base)) Seq.empty
-      else fs.listStatus(base).toSeq.map(_.getPath)
-        .filter(_.getName.startsWith("date="))
-        .flatMap { p =>
-          fs.listStatus(p).toSeq
-            .filter { f =>
-              val n = f.getPath.getName
-              f.isFile && !n.startsWith(".") && !n.startsWith("_")
-            }
-            .map(f => (p.getName.stripPrefix("date="),
-              f.getPath.toString, f.getLen))
-        }
+    val files: Seq[(String, String, Long)] = days(fs, base).flatMap { p =>
+      dataFiles(fs, p).map(f => (p.getName.stripPrefix("date="), f.getPath.toString, f.getLen))
+    }
     val perFile = spark.createDataset(files).toDF("day", "file", "bytes")
       .repartition(math.max(1, math.min(files.size,
         spark.sparkContext.defaultParallelism)))
@@ -440,10 +446,7 @@ object LogSchema {
   def partitionsBefore(spark: SparkSession, path: String, cutoff: java.time.LocalDate): Seq[String] = {
     val base = new org.apache.hadoop.fs.Path(path)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(base)) Seq.empty
-    else fs.listStatus(base).toSeq
-      .map(_.getPath)
-      .filter(_.getName.startsWith("date="))
+    days(fs, base)
       .filter { p =>
         val d = p.getName.stripPrefix("date=")
         scala.util.Try(java.time.LocalDate.parse(d).isBefore(cutoff)).getOrElse(false)

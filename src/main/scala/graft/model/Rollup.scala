@@ -20,26 +20,31 @@ import org.apache.spark.sql.functions._
   *     the day, carrying re-aggregable measures: exact counts/sums plus an
   *     HLL sketch for distinct pods (the `uniqState`/`uniqMerge` analogue —
   *     a plain distinct count would not merge across rollup rows).
-  *   - [[refresh]] is INCREMENTAL at partition grain: a fingerprint of each
-  *     source day's file listing (name + length) is kept in a state file
-  *     under the rollup root; only days whose fingerprint changed (new
-  *     ingest, compaction rewrite) are re-aggregated, and rollup days whose
-  *     source partition vanished (TTL retention) are dropped. Refresh cost
-  *     is proportional to newly-arrived data, never to table size — the
-  *     property that keeps the job viable when the table is 100 TB but a
-  *     day is 100 GB.
+  *   - [[refresh]] is INCREMENTAL at partition grain: each source day's
+  *     data-file listing (name + length) is hashed, and only days whose
+  *     hash moved (new ingest, compaction rewrite) are re-aggregated;
+  *     rollup days whose source partition vanished (TTL retention) are
+  *     dropped. A refresh reads only the changed days, never the whole
+  *     table — but it re-reads a changed day whole, so its cost is
+  *     proportional to new data only at day grain: a day that gets a
+  *     micro-batch at every trigger is re-read at every refresh.
   *   - Each refreshed day is published with [[DirSwap]], so a crash
   *     mid-refresh leaves every day either on its old rollup or its new
-  *     one (a new day: absent), never half written. The state file is
-  *     written last, via its own tmp+rename: a crash between publishing
-  *     days and recording state only causes an idempotent re-aggregation
-  *     on the next run.
+  *     one (a new day: absent), never half written. The day's freshness
+  *     record travels with it: an empty `_source-<hash>` marker written
+  *     into the staged day after its aggregate, so the day and the hash it
+  *     was built from publish in one swap. A refresh that fails part way
+  *     keeps every day it published; a day without a marker (a crash
+  *     between the aggregate and the marker, or a lost marker) only
+  *     re-aggregates once. The marker's `_` prefix hides it from every
+  *     parquet read of the rollup.
   */
 object Rollup {
 
   /** One day's refresh outcome: `"new"` (first rollup of this day),
-    * `"changed"` (source partition fingerprint moved), or `"dropped"`
-    * (source partition no longer exists — retention propagated).
+    * `"changed"` (the source listing's hash moved, or the rollup day has
+    * no marker), or `"dropped"` (source partition no longer exists —
+    * retention propagated).
     */
   final case class RefreshStat(day: String, action: String)
 
@@ -163,7 +168,10 @@ object Rollup {
     df.coalesce(math.max(1L, (bytes + split - 1) / split).toInt)
   }
 
-  private val stateFile = "_rollup_state.tsv"
+  /** Name prefix of a rollup day's freshness marker; the rest is the hex
+    * SHA-256 of the source day's listing it was aggregated from.
+    */
+  private val Marker = "_source-"
 
   /** Bring the rollup at `rollupPath` up to date with the log table at
     * `logPath`, re-aggregating only days whose source files changed.
@@ -177,14 +185,30 @@ object Rollup {
       rollupPath: String,
       jobParallelism: Int = 1,
       numericKeys: Seq[String] = defaultNumericKeys): Seq[RefreshStat] = {
+    val conf = spark.sparkContext.hadoopConfiguration
     val base = new org.apache.hadoop.fs.Path(rollupPath)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = base.getFileSystem(conf)
     fs.mkdirs(base)
     DirSwap.sweep(fs, base)
-    val current = sourceFingerprints(spark, logPath)
-    val recorded = readState(fs, base)
+    val src = new org.apache.hadoop.fs.Path(logPath)
+    val srcFs = src.getFileSystem(conf)
+    // a day a crashed compaction or materialize left hidden under
+    // `.date=X.old`/`.date=X.staged` is still a source day: recover it
+    // read-only first, or it would count as dropped and lose its rollup day
+    DirSwap.recoverAll(srcFs, src)
+    // day -> hash of its listing: any ingest append or compaction rewrite
+    // changes file names or sizes, so an equal hash is a sound "nothing to
+    // do"; it reads only directory listings, never data
+    val current = LogSchema.days(srcFs, src).map { p =>
+      p.getName.stripPrefix("date=") -> digest(LogSchema.dataFiles(srcFs, p))
+    }.toMap
+    // day -> the hash its rollup day was built from, None without a marker
+    val recorded = LogSchema.days(fs, base).map { p =>
+      p.getName.stripPrefix("date=") -> fs.listStatus(p).map(_.getPath.getName)
+        .collectFirst { case n if n.startsWith(Marker) => n.stripPrefix(Marker) }
+    }.toMap
     val stale = current.toSeq.collect {
-      case (day, fp) if !recorded.get(day).contains(fp) =>
+      case (day, fp) if !recorded.get(day).contains(Some(fp)) =>
         RefreshStat(day, if (recorded.contains(day)) "changed" else "new")
     }.sortBy(_.day)
     val orphaned = (recorded.keySet -- current.keySet).toSeq.sorted
@@ -196,6 +220,7 @@ object Rollup {
           .coalesce(1)
           .write.mode("overwrite").option("compression", "zstd")
           .parquet(staged.toString)
+        fs.create(new org.apache.hadoop.fs.Path(staged, Marker + current(st.day)), false).close()
       }
       st
     }
@@ -203,74 +228,13 @@ object Rollup {
     orphaned.foreach { day =>
       fs.delete(new org.apache.hadoop.fs.Path(base, s"date=$day"), true)
     }
-    writeState(fs, base, current)
     refreshed ++ orphaned.map(RefreshStat(_, "dropped"))
   }
 
-  /** Fingerprint every `date=` partition of the log table: sorted
-    * (file name, length) pairs hashed. Any ingest append or compaction
-    * rewrite changes file names/sizes, so fingerprint equality is a sound
-    * "nothing to do" signal; it reads only directory listings, never data.
-    */
-  private def sourceFingerprints(
-      spark: SparkSession, logPath: String): Map[String, String] = {
-    val base = new org.apache.hadoop.fs.Path(logPath)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a day a crashed compaction or materialize left hidden under
-    // `.date=X.old`/`.date=X.staged` is still a source day: recover it
-    // read-only first, or it would count as dropped and lose its rollup day
-    DirSwap.recoverAll(fs, base)
-    if (!fs.exists(base)) Map.empty
-    else fs.listStatus(base).toSeq
-      .map(_.getPath)
-      .filter(_.getName.startsWith("date="))
-      .map { p =>
-        val listing = fs.listStatus(p).toSeq
-          .filter { f =>
-            val n = f.getPath.getName
-            f.isFile && !n.startsWith(".") && !n.startsWith("_")
-          }
-          .map(f => s"${f.getPath.getName}:${f.getLen}")
-          .sorted.mkString("\n")
-        val digest = java.security.MessageDigest.getInstance("SHA-256")
-          .digest(listing.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        p.getName.stripPrefix("date=") ->
-          digest.map("%02x".format(_)).mkString
-      }
-      .toMap
-  }
-
-  private def readState(
-      fs: org.apache.hadoop.fs.FileSystem,
-      base: org.apache.hadoop.fs.Path): Map[String, String] = {
-    val p = new org.apache.hadoop.fs.Path(base, stateFile)
-    if (!fs.exists(p)) Map.empty
-    else {
-      val in = fs.open(p)
-      try {
-        scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-          .filter(_.nonEmpty)
-          .map { line =>
-            val Array(day, fp) = line.split("\t", 2)
-            day -> fp
-          }
-          .toMap
-      } finally in.close()
-    }
-  }
-
-  private def writeState(
-      fs: org.apache.hadoop.fs.FileSystem,
-      base: org.apache.hadoop.fs.Path,
-      state: Map[String, String]): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(base, s".$stateFile.tmp")
-    val live = new org.apache.hadoop.fs.Path(base, stateFile)
-    val out = fs.create(tmp, true)
-    try out.write(state.toSeq.sorted.map { case (d, fp) => s"$d\t$fp\n" }
-      .mkString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    fs.delete(live, false)
-    if (!fs.rename(tmp, live))
-      throw new java.io.IOException(s"rollup: cannot publish state $live")
-  }
+  /** Hex SHA-256 of a day's sorted `name:length` listing. */
+  private def digest(files: Seq[org.apache.hadoop.fs.FileStatus]): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(files.map(f => s"${f.getPath.getName}:${f.getLen}").sorted.mkString("\n")
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .map("%02x".format(_)).mkString
 }

@@ -230,24 +230,6 @@ private[graft] object SidecarIndex {
     org.apache.spark.sql.functions.udf(
       (p: String) => new org.apache.hadoop.fs.Path(p).toUri.getPath)
 
-  /** Data files directly under the given partition DIRS (full paths) —
-    * the scoped discovery of [[build]], so a caller that knows
-    * what it just wrote (the streaming sink, per micro-batch) pays
-    * O(hot partitions), not O(table), per invocation.
-    */
-  def listFiles(
-      conf: org.apache.hadoop.conf.Configuration,
-      dirs: Seq[String]): Seq[String] =
-    dirs.flatMap { dir =>
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(conf)
-      if (!fs.exists(p)) Nil
-      else fs.listStatus(p).toSeq.collect {
-        case f if f.isFile && !f.getPath.getName.startsWith(".") &&
-          !f.getPath.getName.startsWith("_") => f.getPath.toString
-      }
-    }
-
   /** The n-gram sidecar's rows: one bloom per (data file, gram width). */
   val NgramSchema: StructType = StructType(Seq(
     StructField("file", StringType), StructField("bloom", BinaryType),
@@ -332,10 +314,16 @@ private[graft] object SidecarIndex {
       "rebuild with a partition scope would overwrite the whole sidecar " +
         "with only the scoped rows, wiping index coverage everywhere else; " +
         "rebuild the full table, or use vacuum + incremental build")
+    // a caller that knows what it just wrote (the streaming sink, per
+    // micro-batch) lists O(hot partitions), not O(table)
     val (live, schema) =
-      if (partitions.nonEmpty)
-        (listFiles(spark.sparkContext.hadoopConfiguration, partitions), dataSchema)
-      else {
+      if (partitions.nonEmpty) {
+        val conf = spark.sparkContext.hadoopConfiguration
+        (partitions.flatMap { d =>
+          val p = new org.apache.hadoop.fs.Path(d)
+          LogSchema.dataFiles(p.getFileSystem(conf), p).map(_.getPath.toString)
+        }, dataSchema)
+      } else {
         val table = LogSchema.readLogs(spark, tablePath)
         (table.inputFiles.toSeq, dataSchema.orElse(Some(table.schema)))
       }

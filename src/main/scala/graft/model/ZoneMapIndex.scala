@@ -52,9 +52,6 @@ object ZoneMapIndex {
   type Pruning = SidecarIndex.Pruning
   val Pruning = SidecarIndex.Pruning
 
-  private def tableFiles(spark: SparkSession, tablePath: String): Seq[String] =
-    spark.read.parquet(tablePath).inputFiles.toSeq
-
   /** Index every live data file not yet indexed for `cols`; returns the
     * newly indexed files. Coverage is per (file, column): a later build
     * with a widened column set re-reads the files that miss the new
@@ -82,7 +79,7 @@ object ZoneMapIndex {
     */
   def vacuum(spark: SparkSession, tablePath: String): Long =
     SidecarIndex.vacuum(spark, tablePath, IndexDirName,
-      tableFiles(spark, tablePath))
+      LogSchema.readLogs(spark, tablePath).inputFiles.toSeq)
 
   /** The pruning decision for `lo ≤ colName ≤ hi`, or None when the index
     * cannot help (missing, or the column was never indexed).
@@ -100,7 +97,7 @@ object ZoneMapIndex {
       lo: Double,
       hi: Double): Option[Pruning] =
     pruneAll(spark, tablePath, Seq((colName, lo, hi)),
-      tableFiles(spark, tablePath)).headOption
+      LogSchema.readLogs(spark, tablePath).inputFiles.toSeq).headOption
 
   /** [[prune]] for SEVERAL `(column, lo, hi)` ranges in ONE index pass
     * against a live file list the caller already holds: the sidecar is

@@ -257,6 +257,45 @@ class LogSchemaSpec extends SparkTestBase {
     after.foreach { case (day, (_, rows)) => assert(rows == perDay(day)) }
   }
 
+  test("one hidden-name rule: compaction, stats, rollup refresh and a scoped sidecar build " +
+      "see exactly the files a parquet read lists") {
+    val out = tmp("graft-hidden"); val rollup = tmp("graft-hidden-rollup")
+    // two days of two data files each
+    spark.range(0, 400).select(
+        timestamp_seconds(lit(1706745600L) + (col("id") % 2) * 86400L + col("id")).as("timestamp"),
+        lit("c0").as("cluster"), lit("ns").as("namespace"), lit("app").as("app"),
+        concat(lit("pod-"), col("id") % 7).as("pod_name"), lit("main").as("container_name"),
+        lit("host-0").as("host"), map().cast("map<string,string>").as("fields_string"),
+        map(lit("event.value"), col("id").cast("double")).as("fields_number"),
+        concat(lit("line "), col("id")).as("log"))
+      .withColumn("date", to_date(col("timestamp")))
+      .repartition(2)
+      .write.mode("overwrite").partitionBy("date").parquet(out)
+    assert(graft.model.Rollup.refresh(spark, out, rollup).map(_.action) == Seq("new", "new"))
+    // an upload in flight and two hidden names, none of them parquet
+    val day = new java.io.File(out).listFiles().filter(_.getName.startsWith("date=")).minBy(_.getName)
+    Seq("part-99999.parquet._COPYING_", ".x", "_x").foreach(n =>
+      Files.write(new java.io.File(day, n).toPath, "not parquet".getBytes("UTF-8")))
+
+    val read = spark.read.parquet(out).inputFiles.map(graft.model.SidecarIndex.norm).toSet
+    def inDay(d: String) = read.filter(_.contains(s"/$d/"))
+    val days = read.map(f => f.split("/").find(_.startsWith("date=")).get)
+    assert(days.size == 2 && days.forall(inDay(_).size == 2))
+    def bytes(fs: Set[String]) = fs.toSeq.map(f => new java.io.File(f).length).sum
+
+    val plan = LogSchema.compactionPlan(spark, out, targetBytes = 1L << 40, minFiles = 2)
+    assert(plan.map(st => (st.dir.split("/").last, st.files, st.bytes)).toSet ==
+      days.map(d => (d, 2, bytes(inDay(d)))))
+    val stats = LogSchema.partitionStats(spark, out).collect()
+      .map(r => (s"date=${r.getString(0)}", r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+    assert(stats == days.map(d => (d, 2L, bytes(inDay(d)), 200L)))
+    assert(graft.model.Rollup.refresh(spark, out, rollup).isEmpty,
+      "files a parquet read skips do not change a day")
+    val built = graft.model.SidecarIndex.build(spark, out, None, Seq("timestamp"),
+      partitions = Seq(day.getPath))
+    assert(built.zone.map(graft.model.SidecarIndex.norm).toSet == inDay(day.getName))
+  }
+
   test("approximate sketches land within tolerance of exact answers") {
     val ev = graft.sources.Tables.events(spark, sf())
     val row = ev.agg(

@@ -208,6 +208,37 @@ class RollupSpec extends SparkTestBase {
     assert(hiddenIn(out).isEmpty, hiddenIn(out).toString)
   }
 
+  test("a refresh that fails part way keeps the days it published: the next one redoes only the failed day") {
+    val src = tmp("rollup-src"); val out = tmp("rollup-out")
+    val initial = logsDf(days = 3, perDay = 48)
+    LogSchema.writePartitioned(initial, src)
+    Rollup.refresh(spark, src, out)
+    val late = logsDf(days = 3, perDay = 60, tag = "late-")
+    LogSchema.writePartitioned(late, src, mode = "append")
+    // every day changed, and day 3 holds a file no parquet reader can open:
+    // the refresh publishes days 1 and 2, then fails on day 3
+    val bad = new java.io.File(src, "date=2024-02-03/part-99999.parquet")
+    java.nio.file.Files.write(bad.toPath, "not parquet".getBytes("UTF-8"))
+    intercept[Exception](Rollup.refresh(spark, src, out))
+    assert(bad.delete())
+    assert(Rollup.refresh(spark, src, out) == Seq(Rollup.RefreshStat("2024-02-03", "changed")))
+    assert(rollupAggregate(out) == directAggregate(initial.unionByName(late)))
+  }
+
+  test("a rollup day without its source marker re-aggregates alone") {
+    val src = tmp("rollup-src"); val out = tmp("rollup-out")
+    val logs = logsDf(days = 3, perDay = 48)
+    LogSchema.writePartitioned(logs, src)
+    Rollup.refresh(spark, src, out)
+    val markers = new java.io.File(out, "date=2024-02-02").listFiles()
+      .filter(_.getName.startsWith("_source-"))
+    assert(markers.length == 1)
+    assert(markers.head.delete())
+    assert(Rollup.refresh(spark, src, out) == Seq(Rollup.RefreshStat("2024-02-02", "changed")))
+    assert(Rollup.refresh(spark, src, out).isEmpty)
+    assert(rollupAggregate(out) == directAggregate(logs))
+  }
+
   test("distinct-pod HLL sketches merge across rollup rows within tolerance") {
     val src = tmp("rollup-src"); val out = tmp("rollup-out")
     val logs = logsDf(days = 3, perDay = 120)

@@ -204,6 +204,16 @@ class ZoneMapSpec extends SparkTestBase {
     assert(ZoneMapIndex.prune(spark, out, "x", 6000d, 6100d).get.unindexed == 0)
   }
 
+  test("a warm prune runs no Spark job: the live list is the table's cached listing generation") {
+    val out = tmp("graft-zonemap-warm")
+    writeClustered(out)
+    ZoneMapIndex.build(spark, out, Seq("x"))
+    val cold = ZoneMapIndex.prune(spark, out, "x", 2500d, 3500d)
+    val (warm, jobs) = withJobs(ZoneMapIndex.prune(spark, out, "x", 2500d, 3500d))
+    assert(jobs.isEmpty, s"a warm prune ran ${jobs.size} job(s)")
+    assert(warm == cold && warm.exists(_.pruned >= 5))
+  }
+
   test("widening the column set re-indexes existing files for the new columns only") {
     val out = tmp("graft-zonemap-addcol")
     writeClustered(out)
