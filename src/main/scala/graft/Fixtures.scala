@@ -407,9 +407,9 @@ private[graft] object Fixtures {
     // requireConvergence: the DuckDB oracle computes the EXACT recursive
     // closure, so a maxIter exit (silently split clusters) must fail
     // this query loudly rather than surface as a mystery hash mismatch.
-    // Auto = the production diameter guard: label propagation while the
-    // graph is shallow (it is, here), alternating-star restart if a
-    // deeper-than-budget chain ever appears in the fixture data.
+    // Auto = the production entry point: this graph is far under its edge
+    // gate, so it resolves in the one union-find task (label propagation
+    // and the alternating rounds run only above the gate).
     graft.operators.TrainPipeline.connectedComponentsAuto(
       docs.where(col("doc_id") < 60).select(col("doc_id")), "doc_id",
       pairs, "id_a", "id_b", requireConvergence = true)

@@ -16,9 +16,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * The whole klogs per-record dataflow (flatten → type dispatch → route →
   * force rewrites, /root/reference/main.go:237-354) as one native
   * expression. Semantics are [[Ingest.processRecord]] exactly (shared
-  * code); the win over the UDF form is skipping the Scala-object encoder
-  * round trip — the result materializes straight into Catalyst's internal
-  * row format. Config arguments must be foldable (literals).
+  * code); its result materializes straight into Catalyst's internal row
+  * format ([[JsonIngest.toInternalRow]]), with no Scala-object encoder
+  * round trip. Config arguments must be foldable (literals).
   */
 case class JsonIngest(
     child: Expression,

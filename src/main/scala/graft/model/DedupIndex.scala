@@ -2,6 +2,7 @@ package graft.model
 
 import graft.expressions.SketchExprs
 import graft.functions.{TextFunctions => TF}
+import graft.operators.Dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -49,7 +50,9 @@ import org.apache.spark.sql.types._
   * from-scratch indexing — `incrementalPairs(new, idx(corpus))` equals
   * `allPairs(idx(corpus ∪ new))` restricted to pairs touching a new id,
   * exactly (same hash families, same verification arithmetic). The
-  * `dedup_incremental` oracle certifies this set equality per run.
+  * `dedup_incremental` oracle certifies this set equality per run. Both
+  * paths, and the live operator, band and verify through the same code
+  * ([[Dedup.minhashBands]], [[Dedup.verifyPairs]]).
   *
   * Verification uses xxhash64'd shingles rather than shingle strings:
   * Jaccard over distinct 64-bit hashes equals Jaccard over distinct
@@ -101,22 +104,11 @@ object DedupIndex {
       persistShingles: Boolean = false)
     : (DataFrame, DataFrame, () => Unit) = {
     SketchExprs.register(docs.sparkSession)
-    val numHashes = p.bands * p.rowsPerBand
     val withSh0 = docs.select(
       col(idCol).cast(LongType).as("id"),
       array_distinct(TF.shingles(col(textCol), p.shingleN)).as("sh"))
     val withSh = if (persistShingles) withSh0.persist() else withSh0
-    // identical band arithmetic to Dedup.minhashPairs: slice the signature
-    // into `bands` runs of `rowsPerBand`, hash each run seeded by its index
-    val bandRows = withSh
-      .withColumn("sig", SketchExprs.minhash(col("sh"), numHashes))
-      .select(
-        col("id"),
-        posexplode(transform(sequence(lit(0), lit(p.bands - 1)),
-          b => xxhash64(array_join(transform(
-            slice(col("sig"), b * p.rowsPerBand + 1, lit(p.rowsPerBand)),
-            v => v.cast(StringType)), ","), b)))
-          .as(Seq("band", "bandhash")))
+    val bandRows = Dedup.minhashBands(withSh, p.bands, p.rowsPerBand)
     val sketchRows = withSh.select(
       col("id"),
       array_distinct(transform(col("sh"), s => xxhash64(s))).as("shash"))
@@ -226,47 +218,16 @@ object DedupIndex {
     } finally done()
   }
 
-  /** Exact-Jaccard verification of candidate pairs against the sketch
-    * table, which must hold one row per id. With `broadcastCandidates` the
-    * candidate-derived side is broadcast into BOTH lookups, so the
-    * (corpus-sized) sketch table is never shuffled — the broadcast payload
-    * is bounded by the candidate count times one shingle-hash set, i.e. by
-    * the increment, not the corpus.
-    */
-  private def verifyPairs(
-      candidates: DataFrame, sketches: DataFrame, threshold: Double,
-      broadcastCandidates: Boolean = false): DataFrame = {
-    val bc: DataFrame => DataFrame =
-      if (broadcastCandidates) broadcast else identity
-    bc(bc(candidates)
-      .join(sketches.select(col("id").as("id_a"), col("shash").as("sh_a")),
-        "id_a"))
-      .join(sketches.select(col("id").as("id_b"), col("shash").as("sh_b")),
-        "id_b")
-      .select(col("id_a"), col("id_b"),
-        (size(array_intersect(col("sh_a"), col("sh_b"))).cast(DoubleType) /
-          size(array_union(col("sh_a"), col("sh_b"))).cast(DoubleType))
-          .as("jaccard"))
-      .where(col("jaccard") >= threshold)
-  }
-
   /** All near-dup pairs among the indexed docs — `minhashPairs` semantics
     * replayed off the persisted tables (the from-scratch side of the
-    * incremental equivalence, and the backfill path after a bulk `build`).
-    * Same shuffle discipline as the live operator: the band self-join is
-    * forced shuffle-merge (the build side is the whole corpus — a
-    * stats-based broadcast pick could not survive scale).
+    * incremental equivalence, and the backfill path after a bulk `build`),
+    * through the live operator's own band self-join and verification
+    * ([[Dedup.minhashBandPairs]]).
     */
   def allPairs(
-      spark: SparkSession, dir: String, jaccardThreshold: Double): DataFrame = {
-    val banded = bandsOf(spark, dir)
-    val candidates = banded.as("l").hint("shuffle_merge")
-      .join(banded.as("r").hint("shuffle_merge"), Seq("band", "bandhash"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
-      .where(col("id_a") < col("id_b"))
-      .distinct()
-    verifyPairs(candidates, sketchesOf(spark, dir), jaccardThreshold)
-  }
+      spark: SparkSession, dir: String, jaccardThreshold: Double): DataFrame =
+    Dedup.minhashBandPairs(bandsOf(spark, dir), sketchesOf(spark, dir), "shash",
+      jaccardThreshold)
 
   /** Drop index rows for ids no longer in the corpus and compact the
     * append-accumulated small files — the post-retention hygiene step.
@@ -310,14 +271,12 @@ object DedupIndex {
     * within `newDocs` itself — the per-increment dedup step. Does NOT
     * modify the index; call [[append]] with the surviving docs afterwards.
     *
-    * Scale shape when `broadcastNew` (the normal case — a day's increment
-    * against years of corpus): the new side's band rows are broadcast, so
-    * the corpus band table is scanned narrowly (no corpus-side shuffle at
-    * all); verification joins the broadcast candidate set against the
-    * sketch table the same way. Every shuffled row is the increment's own
-    * (its one-row-per-id pass) or a candidate pair. For
-    * an increment too large to broadcast, pass `broadcastNew = false` and
-    * the probe degrades gracefully to the hash-partitioned equi-join.
+    * Scale shape (a day's increment against years of corpus): the new
+    * side's band rows are broadcast, so the corpus band table is scanned
+    * narrowly (no corpus-side shuffle at all); verification joins the
+    * broadcast candidate set against the sketch table the same way. Every
+    * shuffled row is the increment's own (its one-row-per-id pass) or a
+    * candidate pair.
     *
     * Each pair is reported once: an id repeated in `newDocs` is verified
     * against one copy ([[onePerId]]), and an id that is both indexed and
@@ -328,8 +287,7 @@ object DedupIndex {
       idCol: String,
       textCol: String,
       dir: String,
-      jaccardThreshold: Double,
-      broadcastNew: Boolean = true): DataFrame = {
+      jaccardThreshold: Double): DataFrame = {
     val spark = newDocs.sparkSession
     val p = readParams(spark, dir)
     // candidates come from every row's bands (the candidate distinct
@@ -337,11 +295,10 @@ object DedupIndex {
     // one-row-per-id shuffle runs beside the band probe, not before it
     val (newBands, _, _) = sketch(newDocs, idCol, textCol, p)
     val (_, newSketches, _) = sketch(onePerId(newDocs, idCol, textCol), "id", "text", p)
-    val probe = if (broadcastNew) broadcast(newBands) else newBands
     // new × (corpus ∪ new) in one join: the corpus side stays in place, the
     // new side ships to it
     val candidates = bandsOf(spark, dir).unionByName(newBands)
-      .join(probe.withColumnRenamed("id", "new_id"), Seq("band", "bandhash"))
+      .join(broadcast(newBands).withColumnRenamed("id", "new_id"), Seq("band", "bandhash"))
       .where(col("id") =!= col("new_id"))
       .select(least(col("id"), col("new_id")).as("id_a"),
         greatest(col("id"), col("new_id")).as("id_b"))
@@ -349,9 +306,9 @@ object DedupIndex {
     // one sketch row per id: the increment's copy replaces an indexed one
     val newIds = newDocs.select(col(idCol).cast(LongType).as("id"))
     val sketches = sketchesOf(spark, dir)
-      .join(if (broadcastNew) broadcast(newIds) else newIds, Seq("id"), "left_anti")
+      .join(broadcast(newIds), Seq("id"), "left_anti")
       .unionByName(newSketches)
-    verifyPairs(candidates, sketches, jaccardThreshold,
-      broadcastCandidates = broadcastNew)
+    Dedup.verifyPairs(candidates, sketches, "shash", jaccardThreshold,
+      broadcastCandidates = true)
   }
 }

@@ -15,6 +15,12 @@ import org.apache.spark.sql.types._
   * product. At 100 TB the only shuffles are (1) the band-key exchange whose
   * fan-in is bounded by bucket size and (2) the final pair verification,
   * which touches candidate pairs only.
+  *
+  * The banding core is shared: [[selfJoin]] is every family's candidate
+  * join, [[minhashBands]] + [[verifyPairs]] are the MinHash arithmetic of
+  * both [[minhashPairs]] and [[graft.model.DedupIndex]], and
+  * [[hyperplaneBands]] keys both [[embeddingCosinePairs]] and
+  * [[Similarity.lshTopK]].
   */
 object Dedup {
 
@@ -34,6 +40,72 @@ object Dedup {
   def minhashSignature(shingleCol: Column, numHashes: Int): Column =
     SketchExprs.minhash(shingleCol, numHashes)
 
+  /** The candidate self-join of a banded frame: rows sharing `keys`, each
+    * unordered pair once (`l.<id> < r.<id>`); callers read the `l.` and
+    * `r.` columns. Aliased self-join (not two renamed projections) with a
+    * shuffle hint on both sides: the build side is the whole banded corpus,
+    * so Spark's stats-based broadcast pick at small SF cannot survive
+    * scale, and with both sides shuffled the branches canonicalize
+    * identically, so AQE reuses one exchange for both (the band rows are
+    * computed and shuffled once).
+    */
+  private[graft] def selfJoin(banded: DataFrame, keys: Seq[String], id: String = "id")
+    : DataFrame =
+    banded.as("l").hint("shuffle_merge")
+      .join(banded.as("r").hint("shuffle_merge"), keys)
+      .where(col(s"l.$id") < col(s"r.$id"))
+
+  /** MinHash LSH band rows `(id, band, bandhash)` of `(id, sh)` shingle
+    * sets: the `bands * rowsPerBand` signature sliced into `bands` runs of
+    * `rowsPerBand`, each run hashed seeded by its index. The persisted
+    * [[graft.model.DedupIndex]] `bands` table holds these values, so the
+    * arithmetic is a data format.
+    */
+  private[graft] def minhashBands(shingles: DataFrame, bands: Int, rowsPerBand: Int)
+    : DataFrame =
+    shingles.withColumn("sig", minhashSignature(col("sh"), bands * rowsPerBand))
+      .select(col("id"),
+        posexplode(transform(sequence(lit(0), lit(bands - 1)),
+          b => xxhash64(array_join(transform(
+            slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)),
+            v => v.cast(StringType)), ","), b)))
+          .as(Seq("band", "bandhash")))
+
+  /** Exact-Jaccard verification of `(id_a, id_b)` candidate pairs against
+    * `sets`, one `(id, setCol)` row per id; the set elements may be of any
+    * type. With `broadcastCandidates` the candidate-derived side is
+    * broadcast into BOTH lookups, so a corpus-sized `sets` is never
+    * shuffled — the broadcast payload is bounded by the candidate count
+    * times one set.
+    */
+  private[graft] def verifyPairs(
+      candidates: DataFrame, sets: DataFrame, setCol: String, threshold: Double,
+      broadcastCandidates: Boolean = false): DataFrame = {
+    val bc: DataFrame => DataFrame =
+      if (broadcastCandidates) broadcast else identity
+    bc(bc(candidates)
+      .join(sets.select(col("id").as("id_a"), col(setCol).as("sh_a")), "id_a"))
+      .join(sets.select(col("id").as("id_b"), col(setCol).as("sh_b")), "id_b")
+      .select(col("id_a"), col("id_b"),
+        (size(array_intersect(col("sh_a"), col("sh_b"))).cast(DoubleType) /
+          size(array_union(col("sh_a"), col("sh_b"))).cast(DoubleType))
+          .as("jaccard"))
+      .where(col("jaccard") >= threshold)
+  }
+
+  /** MinHash near-dup pairs of [[minhashBands]] rows: the distinct pairs
+    * sharing a band key, verified against `sets` ([[verifyPairs]], once per
+    * pair). The band self-join carries ids only — (id, 8 bytes) rows cross
+    * the shuffle, not sets.
+    */
+  private[graft] def minhashBandPairs(
+      banded: DataFrame, sets: DataFrame, setCol: String, threshold: Double): DataFrame =
+    verifyPairs(
+      selfJoin(banded, Seq("band", "bandhash"))
+        .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
+        .distinct(),
+      sets, setCol, threshold)
+
   /** MinHash+LSH candidate pairs over `documents(idCol, textCol)`:
     * shingle → minhash signature → band hashes → equi-self-join per band →
     * exact-Jaccard verification on the shingle sets.
@@ -50,38 +122,10 @@ object Dedup {
       rowsPerBand: Int = 4,
       jaccardThreshold: Double = 0.5): DataFrame = {
     SketchExprs.register(docs.sparkSession)
-    val numHashes = bands * rowsPerBand
     val withSh = docs
       .select(col(idCol).as("id"),
         array_distinct(TF.shingles(col(textCol), shingleN)).as("sh"))
-    val withSig = withSh
-      .withColumn("sig", minhashSignature(col("sh"), numHashes))
-    // candidate generation: equi-join on (band, bandhash) with ids only —
-    // the shuffle carries (id, 8 bytes) rows, not shingle sets
-    val banded = withSig.select(
-      col("id"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        b => xxhash64(array_join(transform(
-          slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)),
-          v => v.cast(StringType)), ","), b)))
-        .as(Seq("band", "bandhash")))
-    // shuffle hint: the build side is the whole banded corpus — Spark's
-    // stats-based broadcast pick at small SF cannot survive scale, and
-    // with both sides shuffled AQE reuses the (identical) sketch stage
-    val candidates = banded.as("l").hint("shuffle_merge")
-      .join(banded.as("r").hint("shuffle_merge"), Seq("band", "bandhash"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
-      .where(col("id_a") < col("id_b"))
-      .distinct()
-    // verification: exact Jaccard computed ONCE per distinct candidate pair
-    candidates
-      .join(withSh.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(withSh.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        (size(array_intersect(col("sh_a"), col("sh_b"))).cast(DoubleType) /
-          size(array_union(col("sh_a"), col("sh_b"))).cast(DoubleType))
-          .as("jaccard"))
-      .where(col("jaccard") >= jaccardThreshold)
+    minhashBandPairs(minhashBands(withSh, bands, rowsPerBand), withSh, "sh", jaccardThreshold)
   }
 
   /** 64-bit SimHash of a token multiset: per bit, sum +1/-1 weighted by
@@ -110,34 +154,12 @@ object Dedup {
 
   /** Banded candidate generation + verification over precomputed (id, fp)
     * fingerprints — split out so recall can be property-tested on planted
-    * fingerprints at exact Hamming distances.
+    * fingerprints at exact Hamming distances. The one-word case of
+    * [[simhashPairsFromWideFingerprints]].
     */
-  def simhashPairsFromFingerprints(withFp: DataFrame, maxHamming: Int): DataFrame = {
-    // chunk placement = the words=1 case of the exhaustively-tested
-    // wideChunkLayout (one arithmetic, one set of invariants)
-    val chunks = wideChunkLayout(maxHamming, words = 1).map {
-      case (_, offset, width) =>
-        // Java shifts are mod 64: (1L << 64) - 1 would be 0, collapsing
-        // every chunk to one bucket (an all-pairs cross join) at maxHamming = 0
-        val mask = if (width >= 64) -1L else (1L << width) - 1
-        call_function("shiftright", col("fp"), lit(offset))
-          .bitwiseAND(lit(mask))
-    }
-    val banded = withFp.select(col("id"), col("fp"),
-      posexplode(array(chunks: _*)).as(Seq("band", "chunk")))
-    // aliased SELF-join (not two renamed projections) + an explicit
-    // shuffle hint: the build side is the ENTIRE banded corpus, so
-    // broadcasting it (Spark's stats-based pick at small SF) cannot
-    // survive scale; with both sides shuffled the branches canonicalize
-    // identically and ReuseExchange computes the fingerprint scan once
-    banded.as("l").hint("shuffle_merge")
-      .join(banded.as("r").hint("shuffle_merge"), Seq("band", "chunk"))
-      .where(col("l.id") < col("r.id"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"),
-        VF.hamming(col("l.fp"), col("r.fp")).as("hamming"))
-      .where(col("hamming") <= maxHamming) // map-side, before the dedup shuffle
-      .groupBy("id_a", "id_b").agg(min("hamming").as("hamming"))
-  }
+  def simhashPairsFromFingerprints(withFp: DataFrame, maxHamming: Int): DataFrame =
+    simhashPairsFromWideFingerprints(
+      withFp.select(col("id"), array(col("fp")).as("fp")), maxHamming, words = 1)
 
   /** SimHash near-dup pairs over a WIDE (words×64-bit) fingerprint — the
     * scale path for radii beyond a few bits. Banding needs maxHamming+1
@@ -201,6 +223,8 @@ object Dedup {
     val chunks: Seq[Column] = wideChunkLayout(maxHamming, words).map {
       case (w, offset, width) =>
         val word = element_at(col("fp"), w + 1)
+        // Java shifts are mod 64: (1L << 64) - 1 would be 0, collapsing
+        // every chunk to one bucket (an all-pairs cross join) at maxHamming = 0
         val mask = if (width >= 64) -1L else (1L << width) - 1
         call_function("shiftright", word, lit(offset)).bitwiseAND(lit(mask))
     }
@@ -209,21 +233,12 @@ object Dedup {
     val ham = (0 until words).map(w =>
         VF.hamming(element_at(col("l.fp"), w + 1), element_at(col("r.fp"), w + 1)))
       .reduce(_ + _)
-    // Aliased SELF-join + explicit shuffle hint: broadcasting the build
-    // side would ship the ENTIRE banded corpus to every executor (Spark's
-    // stats-based pick at small SF — impossible at 100 TB), and with both
-    // sides shuffled the branches canonicalize identically so
-    // ReuseExchange computes the fingerprint scan + shuffle once (two
-    // renamed projections would canonicalize differently and sketch the
-    // corpus twice). Verify BEFORE the dedup shuffle: the Hamming check
-    // is a map-side xor/bit_count over the joined pair, so only
-    // QUALIFYING collisions (≤ bands copies of each true pair) reach the
-    // exchange — correlated fingerprints make buckets skewed, and
-    // shuffling every spurious collision through the groupBy would
-    // dominate the query
-    banded.as("l").hint("shuffle_merge")
-      .join(banded.as("r").hint("shuffle_merge"), Seq("band", "chunk"))
-      .where(col("l.id") < col("r.id"))
+    // Verify BEFORE the dedup shuffle: the Hamming check is a map-side
+    // xor/bit_count over the joined pair, so only QUALIFYING collisions
+    // (≤ bands copies of each true pair) reach the exchange — correlated
+    // fingerprints make buckets skewed, and shuffling every spurious
+    // collision through the groupBy would dominate the query
+    selfJoin(banded, Seq("band", "chunk"))
       .select(col("l.id").as("id_a"), col("r.id").as("id_b"), ham.as("hamming"))
       .where(col("hamming") <= maxHamming)
       .groupBy("id_a", "id_b").agg(min("hamming").as("hamming"))
@@ -256,6 +271,21 @@ object Dedup {
       .where(col("jaccard") >= threshold)
   }
 
+  /** Random-hyperplane LSH band rows of a `sketchBits`-bit sketch: a
+    * generator of (band, chunk) over `bands` disjoint runs of
+    * `sketchBits / bands` bits.
+    */
+  private[graft] def hyperplaneBands(sketch: Column, sketchBits: Int, bands: Int): Column = {
+    require(bands >= 1 && sketchBits >= bands && sketchBits % bands == 0,
+      s"sketchBits must be a positive multiple of bands, got $sketchBits/$bands" +
+        " (a remainder would silently ignore the top sketch bits)")
+    val bitsPerBand = sketchBits / bands
+    val mask = (1L << bitsPerBand) - 1
+    posexplode(transform(sequence(lit(0), lit(bands - 1)),
+      b => call_function("shiftright", sketch, b * bitsPerBand).bitwiseAND(mask)))
+      .as(Seq("band", "chunk"))
+  }
+
   /** Embedding near-dup pairs above a cosine threshold. The scale path
     * buckets by a random-hyperplane sketch first (candidates = pairs that
     * collide on at least one band), then verifies exact cosine — the
@@ -268,11 +298,7 @@ object Dedup {
       threshold: Double,
       sketchBits: Int = 16,
       bands: Int = 4): DataFrame = {
-    require(bands >= 1 && sketchBits >= bands && sketchBits % bands == 0,
-      s"sketchBits must be a positive multiple of bands, got $sketchBits/$bands" +
-        " (a remainder would silently ignore the top sketch bits)")
-    val bitsPerBand = sketchBits / bands
-    val mask = (1L << bitsPerBand) - 1
+    val bandKeys = hyperplaneBands(col("sk"), sketchBits, bands)
     VectorExprs.register(emb.sparkSession)
     // norm once per vector, before the band explode (exploded copies share
     // the scalar): collision scoring pays one dot per pair via the
@@ -280,17 +306,10 @@ object Dedup {
     val withSketch = emb.select(col(idCol).as("id"), col(vecCol).as("v"),
       VectorExprs.norm(col(vecCol)).as("n"),
       VF.hyperplaneSketch(col(vecCol), sketchBits).as("sk"))
-    val banded = withSketch.select(col("id"), col("v"), col("n"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        b => call_function("shiftright", col("sk"), b * bitsPerBand).bitwiseAND(mask)))
-        .as(Seq("band", "chunk")))
-    // aliased self-join + shuffle hint (corpus-sized build side must not
-    // broadcast; identical branches let AQE reuse the sketch stage); the
-    // cosine is computed map-side so only the scalar rides the dedup
+    val banded = withSketch.select(col("id"), col("v"), col("n"), bandKeys)
+    // the cosine is computed map-side so only the scalar rides the dedup
     // shuffle, not the vectors
-    banded.as("l").hint("shuffle_merge")
-      .join(banded.as("r").hint("shuffle_merge"), Seq("band", "chunk"))
-      .where(col("l.id") < col("r.id"))
+    selfJoin(banded, Seq("band", "chunk"))
       .select(col("l.id").as("id_a"), col("r.id").as("id_b"),
         Rounding.r4(VectorExprs.cosineFromNorms(
           col("l.v"), col("r.v"), col("l.n"), col("r.n"))).as("cosine"))
@@ -448,13 +467,9 @@ object Dedup {
     val cells = bucketed
       .select(col("nid"), col("cell"), col("nv").cast("array<double>").as("v"))
       .withColumn("n", VectorExprs.norm(col("v")))
-    // aliased self-join on the cell key + shuffle hint (corpus-sized build
-    // side must not broadcast; identical branches → one exchange); the
-    // cosine is evaluated map-side on the joined pair so only qualifying
-    // ids reach the distinct
-    val dups = cells.as("l").hint("shuffle_merge")
-      .join(cells.as("r").hint("shuffle_merge"), Seq("cell"))
-      .where(col("l.nid") < col("r.nid"))
+    // the cosine is evaluated map-side on the joined pair so only
+    // qualifying ids reach the distinct
+    val dups = selfJoin(cells, Seq("cell"), id = "nid")
       .where(VectorExprs.cosineFromNorms(col("l.v"), col("r.v"),
         col("l.n"), col("r.n")) >= threshold)
       .select(col("r.nid").as("nid")).distinct()

@@ -2,7 +2,6 @@ package graft.operators
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -173,12 +172,6 @@ object Ingest {
       fs.toMap, fn.toMap)
   }
 
-  /** UDF wrapping [[processRecord]]; returns a struct of the nine routed /
-    * map fields.
-    */
-  def ingestUdf(cfg: IngestConfig): UserDefinedFunction =
-    udf((json: String) => processRecord(json, cfg))
-
   /** Timestamp coercion (/root/reference/main.go:85-103): native timestamp,
     * else epoch seconds (ANY uint64, main.go:90-91 — not just 9-10 digit
     * values), else recurse on element 0 of the Fluent Bit ≥ v2.1 nested
@@ -206,8 +199,8 @@ object Ingest {
     * timestamp column: one narrow projection — decode, flatten, type, route
     * — exactly the reference's per-record loop (main.go:237-354) as a single
     * Catalyst-planned map stage. Uses the native
-    * [[graft.expressions.JsonIngest]] expression (no UDF encoder round
-    * trip); [[ingestJsonUdf]] keeps the UDF form for equivalence testing.
+    * [[graft.expressions.JsonIngest]] expression, which materializes
+    * [[processRecord]]'s result straight into Catalyst's row format.
     */
   def ingestJson(
       df: DataFrame,
@@ -219,9 +212,7 @@ object Ingest {
       typedLit(cfg.forceNumberFields), lit(cfg.forceUnderscores))
     // inline() is a generator: the ingest expression evaluates exactly ONCE
     // per row (struct-subfield projection would inline the expression into
-    // every extracted column — nine JSON parses per record); records the
-    // parser rejects yield a null struct, which inline drops — same row set
-    // as the UDF path's isNotNull filter.
+    // every extracted column — nine JSON parses per record)
     df.select(tsCol.cast(TimestampType).as("timestamp"), inline(array(ing)))
       // a rejected record surfaces as an all-null struct row: valid records
       // always carry a non-null (possibly empty) map
@@ -230,35 +221,6 @@ object Ingest {
         col("timestamp"), col("cluster"), col("namespace"), col("app"),
         col("pod_name"), col("container_name"), col("host"),
         col("fields_string"), col("fields_number"), col("log"))
-  }
-
-  /** UDF-based variant of [[ingestJson]] (same semantics, kept for tests
-    * and as the no-registration fallback).
-    */
-  def ingestJsonUdf(
-      df: DataFrame,
-      jsonCol: Column,
-      tsCol: Column,
-      cfg: IngestConfig = IngestConfig()): DataFrame = {
-    val ing = ingestUdf(cfg)(jsonCol)
-    selectIngested(df, ing, tsCol)
-  }
-
-  private def selectIngested(df: DataFrame, ing: Column, tsCol: Column): DataFrame = {
-    df.withColumn("_ing", ing)
-      .where(col("_ing").isNotNull)
-      .select(
-        tsCol.cast(TimestampType).as("timestamp"),
-        col("_ing.cluster").as("cluster"),
-        col("_ing.namespace").as("namespace"),
-        col("_ing.app").as("app"),
-        col("_ing.pod_name").as("pod_name"),
-        col("_ing.container_name").as("container_name"),
-        col("_ing.host").as("host"),
-        col("_ing.fields_string").as("fields_string"),
-        col("_ing.fields_number").as("fields_number"),
-        col("_ing.log").as("log"),
-      )
   }
 
   // ---------------------------------------------------------------------

@@ -103,11 +103,7 @@ object Similarity {
       k: Int,
       sketchBits: Int = 16,
       bands: Int = 4): DataFrame = {
-    require(bands >= 1 && sketchBits >= bands && sketchBits % bands == 0,
-      s"sketchBits must be a positive multiple of bands, got $sketchBits/$bands" +
-        " (a remainder would silently ignore the top sketch bits)")
-    val bitsPerBand = sketchBits / bands
-    val mask = (1L << bitsPerBand) - 1
+    val bandKeys = Dedup.hyperplaneBands(col("sk"), sketchBits, bands)
     // norm computed once per vector BEFORE the band explode (the exploded
     // copies share the scalar), so collision scoring pays one dot, not the
     // three norm/dot passes of full cosine per colliding pair
@@ -115,10 +111,7 @@ object Similarity {
       df.select(col(idCol).as(id), col(vecCol).as(v),
           VectorExprs.norm(col(vecCol)).as(n),
           VF.hyperplaneSketch(col(vecCol), sketchBits).as("sk"))
-        .select(col(id), col(v), col(n),
-          posexplode(transform(sequence(lit(0), lit(bands - 1)),
-            b => call_function("shiftright", col("sk"), b * bitsPerBand).bitwiseAND(mask)))
-            .as(Seq("band", "chunk")))
+        .select(col(id), col(v), col(n), bandKeys)
     VectorExprs.register(corpus.sparkSession)
     val q = broadcast(banded(queries, "qid", "qv", "qn"))
     val c = banded(corpus, "nid", "nv", "nn")

@@ -734,9 +734,11 @@ object TrainPipeline {
     * types always take the distributed rounds. `maxIter` and
     * `requireConvergence` apply to the alternating rounds; the small path
     * is exact and always converges. This is the production entry point for
-    * dedup clustering; the two distributed variants stay public for
-    * callers that pin a formulation (oracle rows dedup_cluster and
-    * dedup_cluster_altcc).
+    * dedup clustering, and oracle row dedup_cluster calls it: at fixture
+    * size that row finishes in the one union-find task. The two
+    * distributed variants stay public for callers that pin a formulation:
+    * oracle row dedup_cluster_altcc pins the alternating rounds, and
+    * TrainPipelineSpec pins label propagation.
     */
   def connectedComponentsAuto(nodes: DataFrame, nodeCol: String,
       edges: DataFrame, srcCol: String, dstCol: String,

@@ -303,4 +303,32 @@ class DedupIndexSpec extends SparkTestBase {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((5L, 101L)) && pairs.contains((7L, 102L)), pairs.toString)
   }
+  test("golden band rows: build writes the recorded (band, bandhash, id) and shash values") {
+    // the bands and sketches tables are a data format: an index on disk is
+    // probed by the band arithmetic of whatever build reads it later, so a
+    // slip in the hashing would orphan every stored index without failing
+    // any equivalence test (both sides would move together)
+    val dir = tmp("graft-dedupidx-golden")
+    val docs = Seq((1L, "the quick brown fox jumps"), (2L, "the quick brown dog jumps"),
+      (3L, "lorem ipsum dolor")).toDF("doc_id", "text")
+    DedupIndex.build(docs, "doc_id", "text", dir,
+      DedupIndex.Params(shingleN = 2, bands = 4, rowsPerBand = 2))
+    val bands = spark.read.parquet(s"$dir/bands").collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).sorted.toSeq
+    assert(bands == Seq(
+      (0, 1535879456737582467L, 2L), (0, 1576282558054213689L, 1L),
+      (0, 3593967219867611178L, 3L), (1, -7540599216068658238L, 3L),
+      (1, 1994194648671609501L, 1L), (1, 9121478644918999351L, 2L),
+      (2, -2039979649307164365L, 1L), (2, 3260065919941029726L, 2L),
+      (2, 5789629382078664622L, 3L), (3, -2097499514395033747L, 3L),
+      (3, 6832830246457859779L, 1L), (3, 6832830246457859779L, 2L)))
+    val shash = spark.read.parquet(s"$dir/sketches").collect()
+      .map(r => r.getLong(0) -> r.getSeq[Long](1).toSet).toMap
+    assert(shash == Map(
+      1L -> Set(-4581668098265437708L, -363416911106444635L,
+        2730302524557721517L, 6756634568719420433L),
+      2L -> Set(-4581668098265437708L, 2513922000404381425L,
+        3180485654744963175L, 6756634568719420433L),
+      3L -> Set(-6491397129746283449L, -4265695145598633863L)))
+  }
 }

@@ -145,23 +145,29 @@ class IngestSpec extends SparkTestBase {
     assert(fsm("created_at").startsWith("2026-02-03 04:05:06"))
   }
 
-  test("native graft_ingest expression ≡ UDF path on a varied record sample") {
+  test("native graft_ingest expression ≡ processRecord on the driver") {
     import spark.implicits._
-    val recs = Seq(
+    val raw = Seq(
       """{"cluster":"c1","kubernetes":{"namespace_name":"ns","labels":{"app":"a","k8s-app":"b"}},"log":"x","m.v":"1.5","deep":{"a":[1,"s",null,{"z":true}]}}""",
       """{"log":2,"vals":[0.5,-3]}""",
       """not json at all""",
       """{"only":"strings","n":null}""",
-    ).toDF("value")
+    )
     val cfg = graft.operators.IngestConfig(
       forceNumberFields = Seq("m.v"), forceUnderscores = true)
     val ts = graft.operators.Ingest.coerceTimestamp(lit("2024-01-01 00:00:00"))
-    val native = graft.operators.Ingest.ingestJson(recs, col("value"), ts, cfg)
-      .collect().map(_.toString).sorted
-    val viaUdf = graft.operators.Ingest.ingestJsonUdf(recs, col("value"), ts, cfg)
-      .collect().map(_.toString).sorted
-    assert(native.toSeq == viaUdf.toSeq)
-    assert(native.length == 3) // the malformed record dropped by both
+    // the expression's rows, through JsonIngest.toInternalRow, against the
+    // record objects processRecord builds for the same JSON
+    val native = graft.operators.Ingest.ingestJson(raw.toDF("value"), col("value"), ts, cfg)
+      .collect().map { r =>
+        graft.operators.IngestedRecord(
+          r.getString(1), r.getString(2), r.getString(3), r.getString(4), r.getString(5),
+          r.getString(6), r.getString(9),
+          r.getMap[String, String](7).toMap, r.getMap[String, Double](8).toMap)
+      }.toSet
+    val onDriver = raw.map(graft.operators.Ingest.processRecord(_, cfg)).filter(_ != null)
+    assert(native == onDriver.toSet)
+    assert(native.size == 3) // the malformed record dropped by both
   }
 
   test("timestamp coercion: iso string, epoch seconds, fallback (main.go:85-103)") {

@@ -54,6 +54,15 @@ class PlanAuditSpec extends SparkTestBase {
     val minhash = executed(Queries.registry("dedup_minhash").build(spark, sf("sf0.01")))
     assert(minhash.contains("SortMergeJoin"),
       s"dedup_minhash banded self-join should be SMJ:\n$minhash")
+    // both sides of each band self-join read ONE shuffle: only the final
+    // adaptive plan (after this frame's own execution) shows the reuse
+    for (q <- Seq("dedup_minhash", "dedup_simhash")) {
+      val df = Queries.registry(q).build(spark, sf("sf0.01"))
+      df.collect()
+      val plan = executed(df)
+      assert(plan.contains("isFinalPlan=true") && plan.contains("ReusedExchange"),
+        s"$q: the self-join's second side must reuse the banded exchange:\n$plan")
+    }
   }
 
   test("sim_search_topk: a well-split corpus is never shuffled before scoring") {

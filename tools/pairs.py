@@ -3,6 +3,7 @@
 
     python3 tools/pairs.py PARENT_DIR CHANGE_DIR --workload logs \\
         --seeds 1111-1116 [--seconds 10] [--raw pairs.jsonl]
+    python3 tools/pairs.py --commits PARENT CHANGE --workload llm_corpus --seeds 1401-1406
     python3 tools/pairs.py --aa DIR --workload llm_corpus --seeds 1301-1306
     python3 tools/pairs.py --report pairs.jsonl
 
@@ -10,7 +11,13 @@ Runs `perfbench/run.py` untraced once per seed in each checkout, the order
 alternating from pair to pair (even pairs run the parent first), so slow
 phases of a shared host fall on both sides. Every result line is appended
 to the raw file as it arrives, one JSON object per run:
-`{"side", "dir", "workload", "seed", "order", "exit", "result"}`.
+`{"side", "dir", "commit", "workload", "seed", "order", "exit", "result"}`.
+
+`--commits PARENT CHANGE` takes two commits of this repository instead of
+two directories: each is checked out with `git worktree add --detach` under
+one temporary directory, and both worktrees are removed when the run ends.
+The commit ids are recorded (`commit`, null for a directory) and head the
+report.
 
 The report, per end-to-end metric of BENCHMARK.json: the median and
 quartiles on each side, the relative change, how many pairs the change
@@ -26,9 +33,12 @@ is the noise floor a parent/change gap has to clear.
 """
 import argparse
 import json
+import shutil
+import signal
 import statistics
 import subprocess
 import sys
+import tempfile
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -45,8 +55,16 @@ def seed_list(spec):
 def run_one(checkout, workload, seed, seconds):
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
            "--seconds", str(seconds), "--trace", "0"]
-    p = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True)
-    lines = [l for l in p.stdout.splitlines() if l.startswith("{")]
+    with subprocess.Popen(cmd, cwd=checkout, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL,
+                          text=True) as p:
+        try:
+            out, _ = p.communicate()
+        except BaseException:
+            # SIGTERM, not SIGKILL: perfbench/run.py then takes its JVM down with it
+            p.terminate()
+            p.wait()
+            raise
+    lines = [l for l in out.splitlines() if l.startswith("{")]
     try:
         result = json.loads(lines[-1]) if lines else None
     except json.JSONDecodeError:
@@ -61,9 +79,18 @@ def quartiles(xs):
     return q[0], q[2]
 
 
+def git(*args):
+    return subprocess.run(["git", "-C", str(ROOT), *args], check=True, stdout=subprocess.PIPE,
+                          text=True).stdout.strip()
+
+
 def report(records, bench):
     # an A/A raw file labels its sides A and B; the table is the same
     first, second = ("A", "B") if any(r["side"] == "A" for r in records) else ("parent", "change")
+    for side in (first, second):
+        commits = sorted({r["commit"] for r in records if r["side"] == side and r.get("commit")})
+        if commits:
+            print(f"{side}: {', '.join(commits)}")
     by_pair = {}
     for r in records:
         if r.get("result") is not None:
@@ -108,6 +135,8 @@ def main():
     ap.add_argument("parent", nargs="?", help="checkout of the parent commit")
     ap.add_argument("change", nargs="?", help="checkout of the change")
     ap.add_argument("--aa", metavar="DIR", help="run one checkout as both sides (an A/A spread)")
+    ap.add_argument("--commits", nargs=2, metavar=("PARENT", "CHANGE"),
+                    help="run two commits, each checked out as a temporary git worktree")
     ap.add_argument("--workload", choices=["logs", "llm_corpus"])
     ap.add_argument("--seeds", help="seed list, e.g. 1111-1116 or 5,7,9")
     ap.add_argument("--seconds", type=float, default=10)
@@ -119,16 +148,41 @@ def main():
     if a.report:
         report([json.loads(l) for l in Path(a.report).read_text().splitlines() if l.strip()], bench)
         return
+    if sum(map(bool, (a.aa, a.commits, a.parent or a.change))) > 1:
+        ap.error("give one of PARENT CHANGE, --commits or --aa")
+    if not (a.workload and a.seeds):
+        ap.error("--workload and --seeds are required unless --report is given")
+    commits = {}
     if a.aa:
-        if a.parent or a.change:
-            ap.error("--aa takes one checkout; give no PARENT or CHANGE")
         sides = {"A": Path(a.aa).resolve(), "B": Path(a.aa).resolve()}
+    elif a.commits:
+        commits = {side: git("rev-parse", "--verify", rev + "^{commit}")
+                   for side, rev in zip(("parent", "change"), a.commits)}
     elif a.parent and a.change:
         sides = {"parent": Path(a.parent).resolve(), "change": Path(a.change).resolve()}
     else:
-        ap.error("PARENT and CHANGE (or --aa DIR) are required unless --report is given")
-    if not (a.workload and a.seeds):
-        ap.error("--workload and --seeds are required unless --report is given")
+        ap.error("PARENT and CHANGE (or --commits or --aa) are required unless --report is given")
+    if not commits:
+        run_pairs(a, bench, sides, commits)
+        return
+    # a terminated run still removes its worktrees
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
+    tmp = Path(tempfile.mkdtemp(prefix="pairs-"))
+    sides = {}
+    try:
+        for side, sha in commits.items():
+            sides[side] = tmp / side
+            git("worktree", "add", "--detach", str(sides[side]), sha)
+        run_pairs(a, bench, sides, commits)
+    finally:
+        for path in sides.values():
+            subprocess.run(["git", "-C", str(ROOT), "worktree", "remove", "--force", str(path)],
+                           stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL)
+        shutil.rmtree(tmp, ignore_errors=True)
+        git("worktree", "prune")
+
+
+def run_pairs(a, bench, sides, commits):
     first, second = sides
     records = []
     with open(a.raw, "a") as raw:
@@ -136,8 +190,9 @@ def main():
             order = [first, second] if i % 2 == 0 else [second, first]
             for side in order:
                 code, result = run_one(sides[side], a.workload, seed, a.seconds)
-                rec = {"side": side, "dir": str(sides[side]), "workload": a.workload, "seed": seed,
-                       "order": order.index(side), "exit": code, "result": result}
+                rec = {"side": side, "dir": str(sides[side]), "commit": commits.get(side),
+                       "workload": a.workload, "seed": seed, "order": order.index(side),
+                       "exit": code, "result": result}
                 records.append(rec)
                 raw.write(json.dumps(rec) + "\n")
                 raw.flush()
