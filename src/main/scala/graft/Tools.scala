@@ -38,8 +38,12 @@ object Tools {
     } finally spark.stop()
   }
 
-  /** SHUFFLE exchanges in a physical plan string. Broadcast and reused
-    * exchanges are not data-movement regressions, so they do not count.
+  /** SHUFFLE exchanges in a physical plan string. Broadcast exchanges are
+    * not data-movement regressions, so they do not count. Exchange reuse is
+    * not discounted: under AQE, [[planShape]] reads the plan before it
+    * runs, where no exchange has been reused yet, so a shuffle that feeds
+    * two subtrees prints, and counts, once per subtree (`dedup_incremental`
+    * counts its one-row-per-id shuffle twice, though AQE runs it once).
     * An adaptive plan that has run (a materialized cached frame inside the
     * plan) prints its initial plan under its final one; that subtree is
     * skipped, so each exchange counts once whether or not the cache has

@@ -8,39 +8,60 @@ import org.apache.spark.sql.functions._
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
-  * Three paths:
-  *  - [[ivfTopK]]: inverted-file (IVF) bucketing — k-means centroids
-  *    partition the corpus; each query probes only its `nprobe` nearest
-  *    cells. The classic recall/cost dial for billion-vector corpora.
+  * Six paths:
   *  - [[bruteTopK]]: exact cosine top-k, query set broadcast against the
-  *    corpus scan — the correctness baseline. One scan, no corpus shuffle;
-  *    at 100 TB the corpus side stays partition-local and the per-partition
-  *    top-k is reduced via the ranking window on (query, cosine).
+  *    corpus scan — the correctness baseline. One scan, no corpus shuffle.
   *  - [[lshTopK]]: random-hyperplane LSH bucketing — queries only score
   *    corpus vectors whose sketch collides on at least one band, cutting the
   *    scored set by orders of magnitude at the cost of recall.
+  *  - [[ivfQuery]] / [[ivfTopK]]: inverted-file (IVF) bucketing — k-means
+  *    centroids partition the corpus; each query probes only its `nprobe`
+  *    nearest cells. The classic recall/cost dial for billion-vector corpora.
+  *  - [[knnJoin]]: the both-sides-large k-NN join through the same cells.
+  *  - [[pqQuery]] (+ [[pqQueryRefined]]): product-quantized codes scanned
+  *    by asymmetric distance, optionally re-ranked exactly.
+  *  - [[ivfPqQuery]] (+ [[ivfPqQueryRefined]]): PQ codes inside IVF cells.
+  *
+  * They share one copy of each rule: [[topK]] ranks every path's scored
+  * pairs (a partition-local partial top-k, then one per-query merge),
+  * [[probeCells]] picks every IVF path's cells, [[Spread.maybe]] spreads an
+  * under-split scan, and [[fitQuantizers]] fits every quantizer.
   */
 object Similarity {
 
-  /** Should this corpus projection be hash-spread to the session's
-    * parallelism before scoring? The tiered gate, its verdict cache, and
-    * the 100 TB exit live in [[Spread.needsSpread]] (shared with the
-    * ingest/text operators); the decision logic is documented at the call
-    * site in [[bruteTopK]].
-    */
-  private def needsSpread(
-      spark: SparkSession, sel: DataFrame, parallelism: Int): Boolean =
-    Spread.needsSpread(spark, sel, parallelism)
-
-  /** Exact top-k cosine neighbors for each query vector. `queries` is
-    * expected to be small (it is broadcast); ties break on neighbor id for
-    * determinism.
+  /** Each query's `k` best rows of `scored(qid, nid, <score>, …)` as
+    * `(qid, rank, nid, <score>)`: ordered by `score` (descending unless
+    * `ascending`), ties to the lower `nid`, so the order is total and the
+    * answer deterministic.
     *
     * Scale note: the `row_number() ≤ k` pattern triggers Catalyst's
     * rank-limit pushdown — the physical plan carries a PARTIAL
-    * `WindowGroupLimit` before the exchange, so each scan partition emits at
-    * most k rows per query and the per-qid reducer receives ≤ k × partitions
-    * rows, never the full scored corpus (asserted in ExpressionsSpec).
+    * `WindowGroupLimit` before the qid exchange, so each scored partition
+    * emits at most k rows per query and the per-qid reducer receives
+    * ≤ k × partitions rows, never the full scored set (asserted in
+    * ExpressionsSpec and PlanAuditSpec).
+    */
+  private def topK(scored: DataFrame, score: String, k: Int, ascending: Boolean): DataFrame = {
+    val order = if (ascending) col(score) else col(score).desc
+    val w = Window.partitionBy("qid").orderBy(order, col("nid"))
+    scored.withColumn("rank", row_number().over(w))
+      .where(col("rank") <= k)
+      .select("qid", "rank", "nid", score)
+  }
+
+  /** The rounded `cosine` of query vector `qv` and corpus vector `nv` from
+    * their [[VectorExprs.norm]]s `qn` and `nn`: one dot per pair,
+    * bit-identical to the fused cosine per the cosineFromNorms contract.
+    */
+  private def cosine: Column =
+    Rounding.r4(VectorExprs.cosineFromNorms(
+      col("qv"), col("nv"), col("qn"), col("nn"))).as("cosine")
+
+  /** Exact top-k cosine neighbors for each query vector. `queries` is
+    * expected to be small (it is broadcast); ties break on neighbor id for
+    * determinism. The corpus is never shuffled at scale: scoring runs where
+    * the vectors sit, and only an under-split scan is spread first
+    * ([[Spread.maybe]], hash on `nid`).
     */
   def bruteTopK(
       corpus: DataFrame,
@@ -52,43 +73,12 @@ object Similarity {
     val q = broadcast(queries.select(col(idCol).as("qid"), col(vecCol).as("qv"))
       .withColumn("qn", VectorExprs.norm(col("qv"))))
     val sel = corpus.select(col(idCol).as("nid"), col(vecCol).as("nv"))
-    // The corpus is NEVER shuffled at scale: a 100 TB scan already has
-    // thousands of splits, so scoring runs where the vectors sit. Only a
-    // genuinely under-split source (a single local file — the test/bench
-    // case) gets spread to the session's parallelism. The gate is tiered
-    // by cost:
-    //  1. a corpus whose plan already contains a shuffle-inducing operator
-    //     is NEVER probed or spread — its partitioning is the shuffle's
-    //     (≥ spark.sql.shuffle.partitions), and probing `.rdd` under AQE
-    //     would MATERIALIZE those shuffle stages just to read a count,
-    //     running the corpus pipeline twice;
-    //  2. `inputFiles` (logical-plan file listing only) proves a many-file
-    //     scan parallel without planning anything;
-    //  3. only a FEW-file narrow scan pays the `.rdd` planning pass (no
-    //     jobs run for a shuffle-free plan), which also sees block-level
-    //     splitting of large files.
-    // The verdict is cached per (session, canonicalized plan) — see
-    // [[needsSpread]] — so repeated calls over the same corpus skip the
-    // probe entirely.
-    // Spread is hash-on-id, NOT round-robin: RoundRobinPartitioning
-    // locally sorts every row before the exchange (retry determinism),
-    // which on embedding vectors costs more than the scoring it enables.
-    val parallelism = corpus.sparkSession.sparkContext.defaultParallelism
-    val c =
-      if (needsSpread(corpus.sparkSession, sel, parallelism))
-        sel.repartition(parallelism, col("nid"))
-      else sel
-    // norms once per vector (map-side, below the join), one dot per pair —
-    // bit-identical to cosine per the cosineFromNorms contract
-    val scored = c.withColumn("nn", VectorExprs.norm(col("nv")))
+    // norms once per vector (map-side, below the join), one dot per pair
+    val scored = Spread.maybe(sel, col("nid"))
+      .withColumn("nn", VectorExprs.norm(col("nv")))
       .join(q, col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"),
-        Rounding.r4(VectorExprs.cosineFromNorms(
-          col("qv"), col("nv"), col("qn"), col("nn"))).as("cosine"))
-    val w = Window.partitionBy("qid").orderBy(col("cosine").desc, col("nid"))
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("qid", "rank", "nid", "cosine")
+      .select(col("qid"), col("nid"), cosine)
+    topK(scored, "cosine", k, ascending = false)
   }
 
   /** LSH-bucketed approximate top-k: sketch both sides, join on band
@@ -123,14 +113,9 @@ object Similarity {
     // at 100 TB recomputing a dot product beats shuffling two embeddings.
     val collided = q.join(c, Seq("band", "chunk"))
       .where(col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"),
-        Rounding.r4(VectorExprs.cosineFromNorms(
-          col("qv"), col("nv"), col("qn"), col("nn"))).as("cosine"))
+      .select(col("qid"), col("nid"), cosine)
     val scored = collided.groupBy("qid", "nid").agg(max("cosine").as("cosine"))
-    val w = Window.partitionBy("qid").orderBy(col("cosine").desc, col("nid"))
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("qid", "rank", "nid", "cosine")
+    topK(scored, "cosine", k, ascending = false)
   }
 
   /** A prebuilt IVF index: the (tiny) centroid set plus the corpus bucketed
@@ -199,8 +184,7 @@ object Similarity {
     val cents = fitQuantizers(sample, "nv", Seq(Fit(numCells, seed))).head
     val centroids = centroidFrame(corpus.sparkSession, cents)
     // a local relation: probeCells fetches it without running a job
-    IvfIndex(centroids, probeCells(sel, centroids, nprobe = 1, ProbeLiteralMaxCells, "nv"),
-      cents.length)
+    IvfIndex(centroids, probeCells(sel, centroids, nprobe = 1, vecCol = "nv"), cents.length)
   }
 
   /** One k-means quantizer to fit: `k` centres over the `sub`-th of `subs`
@@ -407,8 +391,9 @@ object Similarity {
   }
 
   /** Answer a query batch against a prebuilt index: pick each query's
-    * `nprobe` nearest cells via the broadcast centroid set, score only
-    * those cells' vectors, rank top-k.
+    * `nprobe` nearest cells ([[probeCells]], a narrow projection over the
+    * query batch), broadcast the probes into an equi-join on `cell` that
+    * scores only those cells' vectors, rank top-k.
     */
   def ivfQuery(
       index: IvfIndex,
@@ -420,27 +405,14 @@ object Similarity {
     VectorExprs.register(queries.sparkSession)
     val q = queries.select(col(idCol).as("qid"), col(vecCol).as("qv"))
       .withColumn("qn", VectorExprs.norm(col("qv")))
-    val w = Window.partitionBy("qid").orderBy(col("dist"), col("cell"))
-    val probes = q.crossJoin(broadcast(index.centroids))
-      .withColumn("dist",
-        -VectorExprs.dot(col("qv"), col("centroid")) * lit(2.0) +
-          VectorExprs.dot(col("centroid"), col("centroid")))
-      .withColumn("prank", row_number().over(w))
-      .where(col("prank") <= nprobe)
-      .select("qid", "qv", "qn", "cell")
-
+    val probes = probeCells(q, index.centroids, nprobe)
     // corpus-side norms once per bucketed vector, below the probe join —
     // each probed cell's vectors pay one dot per query, not a full cosine
-    val scored = probes
-      .join(index.bucketed.withColumn("nn", VectorExprs.norm(col("nv"))), "cell")
+    val scored = index.bucketed.withColumn("nn", VectorExprs.norm(col("nv")))
+      .join(broadcast(probes), "cell")
       .where(col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"),
-        Rounding.r4(VectorExprs.cosineFromNorms(
-          col("qv"), col("nv"), col("qn"), col("nn"))).as("cosine"))
-    val rw = Window.partitionBy("qid").orderBy(col("cosine").desc, col("nid"))
-    scored.withColumn("rank", row_number().over(rw))
-      .where(col("rank") <= k)
-      .select("qid", "rank", "nid", "cosine")
+      .select(col("qid"), col("nid"), cosine)
+    topK(scored, "cosine", k, ascending = false)
   }
 
   /** IVF (inverted-file) approximate top-k: [[buildIvfIndex]] +
@@ -469,13 +441,11 @@ object Similarity {
     *
     *  - the `right` side is bucketed once by [[buildIvfIndex]] (one-task
     *    k-means fit on a bounded sample, narrow full-corpus assignment);
-    *  - the `left` side picks its `nprobe` nearest cells as a NARROW
-    *    per-row projection: the centroid table is tiny (`numCells` rows),
-    *    so it rides along as a LITERAL array and cell selection is
-    *    `array_sort` + `slice` + `explode` — no crossJoin, and crucially no
-    *    per-qid ranking window, which for a large left side would be a
-    *    full extra shuffle ([[ivfQuery]] affords that window only because
-    *    its query batch is small);
+    *  - the `left` side picks its `nprobe` nearest cells with
+    *    [[probeCells]], the probe [[ivfQuery]] uses too: a NARROW per-row
+    *    projection (`array_sort` + `slice` + `explode` over the tiny
+    *    centroid table), so no crossJoin and no per-qid ranking window,
+    *    which for a large left side would be a full extra shuffle;
     *  - the only wide operations are the equi-join on `cell` and the final
     *    top-k window on `qid` (which Catalyst executes with a partial
     *    WindowGroupLimit, so each map task emits ≤ k rows per qid).
@@ -521,23 +491,17 @@ object Similarity {
     VectorExprs.register(left.sparkSession)
     // pre-cast both vector columns to array<double> ONCE PER ROW: the
     // pair-level dot below otherwise re-casts (allocating) per candidate
-    // PAIR — measured 3× on the exact self-join shape (same rule as
-    // bruteTopK's pre-cast)
+    // PAIR — measured 3× on the exact self-join shape
     val spark = left.sparkSession
     val sel = left.select(col(idCol).as("qid"),
         col(vecCol).cast("array<double>").as("qv"))
       .withColumn("qn", VectorExprs.norm(col("qv")))
     // the cell join's output (and the partial top-k sort above it) inherit
     // the LEFT side's partitioning — an under-split local scan would build
-    // every candidate pair in one task. Same tiered gate as bruteTopK:
-    // spread only when the scan is genuinely under-split (never fires on a
-    // well-split table at scale, where the spread would be a full extra
-    // shuffle of left × nprobe vector rows).
-    val parallelism = spark.sparkContext.defaultParallelism
-    val spread =
-      if (needsSpread(spark, sel, parallelism)) sel.repartition(parallelism)
-      else sel
-    val probed = probeCellsNarrow(spread, index.centroids, nprobe)
+    // every candidate pair in one task. Spread only when the scan is
+    // genuinely under-split (never on a well-split table at scale, where
+    // the spread would be a full extra shuffle of left × nprobe vector rows)
+    val probed = probeCells(Spread.maybe(sel, col("qid")), index.centroids, nprobe)
     val bucketed = index.bucketed
       .withColumn("nv", col("nv").cast("array<double>"))
       .withColumn("nn", VectorExprs.norm(col("nv")))
@@ -557,7 +521,7 @@ object Similarity {
     // recount was one driver-synced job on EVERY knn invocation).
     val numCells = math.max(1, index.numCells)
     val saltN = math.max(1,
-      math.ceil(4.0 * parallelism / numCells.toDouble).toInt)
+      math.ceil(4.0 * spark.sparkContext.defaultParallelism / numCells.toDouble).toInt)
     val (probeSide, corpusSide) =
       if (saltN == 1) (probed, bucketed)
       else (
@@ -570,19 +534,10 @@ object Similarity {
       .drop("_salt")
     val filtered =
       if (excludeSelf) scored.where(col("qid") =!= col("nid")) else scored
-    // the rank-filter below triggers Catalyst's InferWindowGroupLimit:
-    // a PARTIAL WindowGroupLimit cuts every salt lane's task output to
-    // ≤ k rows per qid BEFORE the qid exchange (plan-pinned in
-    // PlanAuditSpec), so the shuffle carries O(queries·k·lanes) rows —
-    // the per-lane partial top-k, without hand-rolling one
-    val rw = Window.partitionBy("qid").orderBy(col("cosine").desc, col("nid"))
-    filtered
-      .select(col("qid"), col("nid"),
-        Rounding.r4(VectorExprs.cosineFromNorms(
-          col("qv"), col("nv"), col("qn"), col("nn"))).as("cosine"))
-      .withColumn("rank", row_number().over(rw))
-      .where(col("rank") <= k)
-      .select("qid", "rank", "nid", "cosine")
+    // topK's partial WindowGroupLimit cuts every salt lane's task output
+    // to ≤ k rows per qid BEFORE the qid exchange (plan-pinned in
+    // PlanAuditSpec), so the shuffle carries O(queries·k·lanes) rows
+    topK(filtered.select(col("qid"), col("nid"), cosine), "cosine", k, ascending = false)
   }
 
   /** Above this many cells the literal-centroid probe stops riding the
@@ -594,13 +549,14 @@ object Similarity {
   private[graft] val ProbeLiteralMaxCells = 4096
 
   /** Each row's `nprobe` nearest IVF cells, as a NARROW projection over a
-    * frame carrying a `qv` vector column: no crossJoin row blow-up and no
-    * per-row ranking window — cell selection is `array_sort` + `slice` +
-    * `explode` over per-cell (dist, cell) structs. Distance uses
-    * ivfQuery's formula (−2·q·c + c·c, squared-L2 with the constant |q|²
-    * dropped). Ties break on cell id, matching ivfQuery's Window
-    * orderBy(dist, cell). Output = input columns plus `cell`, one row per
-    * (input row, probed cell).
+    * frame carrying a `vecCol` vector column: no crossJoin row blow-up and
+    * no per-row ranking window — cell selection is `array_sort` + `slice` +
+    * `explode` over per-cell (dist, cell) structs. Distance is −2·v·c + c·c
+    * (squared L2 with the constant |v|² dropped); ties break on cell id.
+    * The one cell probe of the family: [[ivfQuery]], [[knnJoinWithIndex]]
+    * and [[ivfPqQuery]] probe with it, and the index builds assign each
+    * corpus vector its cell with `nprobe = 1`. Output = input columns plus
+    * `cell`, one row per (input row, probed cell).
     *
     * Two result-identical physical forms behind a size gate
     * (`maxLiteralCells`, default [[ProbeLiteralMaxCells]]):
@@ -615,13 +571,9 @@ object Similarity {
     *    left-to-right over the same doubles, so distances (and therefore
     *    probe sets) are bitwise identical across the gate.
     */
-  private def probeCellsNarrow(
-      withQv: DataFrame, centroids: DataFrame, nprobe: Int): DataFrame =
-    probeCells(withQv, centroids, nprobe, ProbeLiteralMaxCells)
-
   private[graft] def probeCells(
       withQv: DataFrame, centroids: DataFrame, nprobe: Int,
-      maxLiteralCells: Int, vecCol: String = "qv"): DataFrame = {
+      maxLiteralCells: Int = ProbeLiteralMaxCells, vecCol: String = "qv"): DataFrame = {
     val keep = withQv.columns.map(col)
     val centsTyped = centroids
       .select(col("cell").cast("int"), col("centroid").cast("array<double>"))
@@ -717,21 +669,27 @@ object Similarity {
       index.codes.write.mode("overwrite").parquet(s"$path/codes")
     }
 
-    /** Load a persisted index. Geometry is recovered from the codebook
-      * table itself — build-time padding guarantees a dense `sub × code`
-      * grid, so max(sub)+1 and max(code)+1 ARE m and codesPerSub.
+    /** Load a persisted index; its geometry is read back from the codebook
+      * table ([[codebookGeometry]]).
       */
     def load(spark: SparkSession, path: String): PqIndex = {
       val codebooks = spark.read.parquet(s"$path/codebooks")
-      val codes = spark.read.parquet(s"$path/codes")
-      val geo = codebooks
-        .agg(max(col("sub")).as("ms"), max(col("code")).as("mc"))
-        .head()
-      val m = geo.getInt(0) + 1
-      val cps = geo.getInt(1) + 1
-      val dsub = codebooks.select(size(col("centroid"))).head().getInt(0)
-      PqIndex(codebooks, codes, m, cps, dsub * m)
+      val (m, codesPerSub, dim) = codebookGeometry(codebooks)
+      PqIndex(codebooks, spark.read.parquet(s"$path/codes"), m, codesPerSub, dim)
     }
+  }
+
+  /** `(m, codesPerSub, dim)` of a codebook table, in one aggregate:
+    * build-time padding ([[codebookFrame]]) makes the `sub × code` grid
+    * dense, so max(sub)+1 and max(code)+1 ARE m and codesPerSub, and every
+    * centroid is one dim/m-long subspace slice.
+    */
+  private def codebookGeometry(codebooks: DataFrame): (Int, Int, Int) = {
+    val g = codebooks
+      .agg(max(col("sub")), max(col("code")), max(size(col("centroid"))))
+      .head()
+    val m = g.getInt(0) + 1
+    (m, g.getInt(1) + 1, g.getInt(2) * m)
   }
 
   /** Build a PQ index: split each (normalized) vector into `m` contiguous
@@ -826,8 +784,8 @@ object Similarity {
     * rows; the scan is `codes ⨯ broadcast(tables)` — a narrow pass over
     * the compressed corpus with a fully-codegen per-row score (the m-term
     * sum is unrolled into `GetArrayItem`/`ElementAt` adds, no interpreted
-    * higher-order function in the hot loop), followed by the same
-    * rank-limited per-query top-k window as [[bruteTopK]].
+    * higher-order function in the hot loop), followed by the shared
+    * rank-limited per-query [[topK]].
     */
   def pqQuery(
       index: PqIndex,
@@ -843,10 +801,7 @@ object Similarity {
       .where(col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"),
         adcScore(index.m, index.codesPerSub).as("adist"))
-    val w = Window.partitionBy("qid").orderBy(col("adist"), col("nid"))
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("qid", "rank", "nid", "adist")
+    topK(scored, "adist", k, ascending = true)
   }
 
   /** Per-query ADC lookup tables against broadcast codebooks: one flat
@@ -926,28 +881,8 @@ object Similarity {
       .join(broadcast(q), "qid")
       .select(col("qid"), col("nid"),
         Rounding.r4(VectorExprs.dot(col("qv"), col("nv"))).as("cosine"))
-    val w = Window.partitionBy("qid").orderBy(col("cosine").desc, col("nid"))
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("qid", "rank", "nid", "cosine")
+    topK(scored, "cosine", k, ascending = false)
   }
-
-  /** PQ approximate top-k: [[buildPqIndex]] + [[pqQuery]] in one call;
-    * amortize the build via the two-step API when serving repeated
-    * batches.
-    */
-  def pqTopK(
-      corpus: DataFrame,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      m: Int = 8,
-      codesPerSub: Int = 16,
-      seed: Long = 42L,
-      trainRows: Long = 100000L): DataFrame =
-    pqQuery(buildPqIndex(corpus, idCol, vecCol, m, codesPerSub, seed, trainRows),
-      queries, idCol, vecCol, k)
 
   /** The full IVF-PQ composition (FAISS `IndexIVFPQ` shape): the corpus is
     * partitioned into IVF cells AND compressed to PQ codes, so a query
@@ -981,12 +916,8 @@ object Similarity {
     def load(spark: SparkSession, path: String): IvfPqIndex = {
       val centroids = spark.read.parquet(s"$path/centroids")
       val codebooks = spark.read.parquet(s"$path/codebooks")
-      val codes = spark.read.parquet(s"$path/codes")
-      val m = codebooks.agg(max("sub")).head().getInt(0) + 1
-      val codesPerSub = codebooks.agg(max("code")).head().getInt(0) + 1
-      val dim = codebooks.select(size(col("centroid")).as("d")).head()
-        .getInt(0) * m
-      IvfPqIndex(centroids, codebooks, codes,
+      val (m, codesPerSub, dim) = codebookGeometry(codebooks)
+      IvfPqIndex(centroids, codebooks, spark.read.parquet(s"$path/codes"),
         centroids.count().toInt, m, codesPerSub, dim)
     }
   }
@@ -1013,17 +944,16 @@ object Similarity {
       "nv", Fit(numCells, seed) +: pqFits(m, codesPerSub, seed))
     val (cents, books) = (fitted.head, fitted.tail)
     val centroids = centroidFrame(spark, cents)
-    val bucketed = probeCells(unit, centroids, nprobe = 1, ProbeLiteralMaxCells, "nv")
+    val bucketed = probeCells(unit, centroids, nprobe = 1, vecCol = "nv")
     IvfPqIndex(centroids, codebookFrame(spark, books, codesPerSub),
       pqEncode(bucketed, books, carry = Seq("cell")), cents.length, m,
       codesPerSub, cents.head.length)
   }
 
   /** Query the IVF-PQ index: per-query ADC tables against the broadcast
-    * codebooks, nprobe cell selection as a narrow literal-centroid
-    * projection, then an equi-join on `cell` scans ONLY probed cells'
-    * codes with the unrolled codegen ADC sum; rank-limited top-k as
-    * everywhere else. Ranking is by approximate distance — compose with
+    * codebooks, nprobe cell selection by [[probeCells]], then an equi-join
+    * on `cell` scans ONLY probed cells' codes with the unrolled codegen ADC
+    * sum; the shared [[topK]] ranks. Ranking is by approximate distance — compose with
     * [[ivfPqQueryRefined]] for the exact re-rank.
     */
   def ivfPqQuery(
@@ -1037,17 +967,14 @@ object Similarity {
     val q = normalized(queries, idCol, vecCol, "qid", "qv")
     val dtabs = adcTables(q, index.codebooks, index.m, index.codesPerSub,
       index.dim)
-    val probes = probeCellsNarrow(q, index.centroids, nprobe)
+    val probes = probeCells(q, index.centroids, nprobe)
       .select("qid", "cell")
       .join(dtabs, "qid")
     val scored = index.codes.join(broadcast(probes), "cell")
       .where(col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"),
         adcScore(index.m, index.codesPerSub).as("adist"))
-    val w = Window.partitionBy("qid").orderBy(col("adist"), col("nid"))
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("qid", "rank", "nid", "adist")
+    topK(scored, "adist", k, ascending = true)
   }
 
   /** IVF-PQ with exact re-rank (`IndexIVFPQ` + `IndexRefineFlat`): the ADC

@@ -478,6 +478,51 @@ class ExpressionsSpec extends SparkTestBase {
       s"partitioned index scan should carry a dynamic partition filter:\n$plan")
   }
 
+  test("ivfQuery probes with probeCells: every cell probed answers as bruteTopK, one Window in the plan") {
+    val emb = spark.read.parquet(sf() + "/embeddings.parquet")
+    val queries = emb.where(col("vec_id") < 20)
+    val idx = Similarity.buildIvfIndex(emb, "vec_id", "embedding", numCells = 8)
+    val ivf = Similarity.ivfQuery(idx, queries, "vec_id", "embedding", k = 10,
+      nprobe = idx.numCells)
+    val brute = Similarity.bruteTopK(emb, queries, "vec_id", "embedding", 10)
+    assert(ivf.collect().map(_.toSeq).toSet == brute.collect().map(_.toSeq).toSet,
+      "an all-cells IVF probe must return exactly the brute-force rows")
+    // the probe is a narrow projection, so the only window left is topK's
+    // result ranking (a crossJoin probe ranks cells with a second one)
+    object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val plan = Similarity.ivfQuery(idx, queries, "vec_id", "embedding", k = 10,
+      nprobe = 3).queryExecution.executedPlan
+    val windows = Plans.collect(plan) {
+      case w: org.apache.spark.sql.execution.window.WindowExec => w
+    }
+    assert(windows.size == 1, s"expected one Window operator:\n$plan")
+  }
+
+  test("PQ and IVF-PQ index load: one codebook-geometry read each, equal to the built geometry") {
+    val emb = spark.read.parquet(sf() + "/embeddings.parquet")
+      .where(col("vec_id") < 200)
+    val pq = Similarity.buildPqIndex(emb, "vec_id", "embedding",
+      m = 4, codesPerSub = 8)
+    val ivfPq = Similarity.buildIvfPqIndex(emb, "vec_id", "embedding",
+      numCells = 4, m = 4, codesPerSub = 8)
+    val pqDir = tmp("graft-pq-geo")
+    val ivfPqDir = tmp("graft-ivfpq-geo")
+    Similarity.PqIndex.save(pq, pqDir)
+    Similarity.IvfPqIndex.save(ivfPq, ivfPqDir)
+    val (p, pqJobs) = withJobs(Similarity.PqIndex.load(spark, pqDir))
+    val (ip, ivfPqJobs) = withJobs(Similarity.IvfPqIndex.load(spark, ivfPqDir))
+    assert((p.m, p.codesPerSub, p.dim) == (pq.m, pq.codesPerSub, pq.dim))
+    assert((ip.numCells, ip.m, ip.codesPerSub, ip.dim) ==
+      (ivfPq.numCells, ivfPq.m, ivfPq.codesPerSub, ivfPq.dim))
+    // both loads read the geometry the same way; the IVF-PQ load adds only
+    // the centroid table's read and count
+    val (_, centroidJobs) = withJobs(
+      spark.read.parquet(s"$ivfPqDir/centroids").count())
+    assert(ivfPqJobs.size == pqJobs.size + centroidJobs.size,
+      s"PQ load ran ${pqJobs.size} jobs, IVF-PQ load ${ivfPqJobs.size}, " +
+        s"the centroid read and count ${centroidJobs.size}")
+  }
+
   test("ANN plans: partial top-k precedes the shuffle; no single-partition exchange of scored rows") {
     val emb = spark.read.parquet(sf() + "/embeddings.parquet")
     val queries = emb.where(col("vec_id") < 5)
